@@ -34,40 +34,33 @@ parses Long).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
+from .. import single_task
 from ..graph import normalize_edges, undirected
+from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..splitting import split_graph
 from ..superstep import (
     CHANGED,
-    COLLISION_MARKER,
     DEFAULT_BROADCAST_STATE_BUDGET,
-    SuperstepMetrics,
     SuperstepRunner,
     checkpoint_static,
     checkpoint_static_sized,
     data_fingerprint,
-    fits_broadcast_budget,
-    plan_size_hint_bytes,
     static_scan_partitions,
+    use_broadcast_state,
 )
 
 ACTIVE = "_active"
 
-# Single-task scatter budget (the third strategy, r6 — see pagerank.py):
-# when the whole undirected routing table fits one task's memory, the
-# entire min-propagation loop runs executor-side inside one mapInPandas
-# task. Pure integer/rank arithmetic — the result is EXACTLY the min
-# original id per component, no float involved. ~56 bytes/row (two int64
-# key columns + the string id column + index vectors).
-DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
+# Single-task working set per undirected row: two int64 key columns, the
+# string id column and the index vectors. Pure integer/rank arithmetic —
+# the result is EXACTLY the min original id per component.
 _SINGLE_TASK_ROW_BYTES = 56
 
 
-def _single_task_cc(und_keys: DataFrame, max_iterations: int, numeric_ids: bool):
-    """(id, component, _iters, _conv) — the whole fixpoint in one task.
+def _cc_kernel(max_iterations: int, numeric_ids: bool):
+    """The whole fixpoint in one task (``single_task.run_loop``).
 
     Ranks the vertex set by the SAME comparison order the distributed
     path minimizes over (string order, or numeric order under
@@ -77,27 +70,10 @@ def _single_task_cc(und_keys: DataFrame, max_iterations: int, numeric_ids: bool)
     output is bit-identical to the distributed result.
     """
 
-    def run(pdfs):
+    def kernel(si, di, strs):
         import numpy as np
-        import pandas as pd
 
-        chunks = [c for c in pdfs]
-        if not chunks:
-            return
-        s = np.concatenate([c["s"].to_numpy() for c in chunks])
-        d = np.concatenate([c["d"].to_numpy() for c in chunks])
-        s_str = np.concatenate([c["s_str"].to_numpy() for c in chunks])
-        ids, first = np.unique(s, return_index=True)
-        si = np.searchsorted(ids, s)
-        di = np.searchsorted(ids, d)
-        n = len(ids)
-        strs = s_str[first]
-        # exact in-task injectivity check (see superstep.COLLISION_MARKER):
-        # a collision = some row's string disagrees with its hash's
-        # representative; the driver catches the marker and falls back to
-        # the probed distributed paths
-        if not (s_str == strs[si]).all():
-            raise ValueError(COLLISION_MARKER)
+        n = len(strs)
         if numeric_ids:
             keyorder = np.argsort(strs.astype(np.int64), kind="stable")
         else:
@@ -121,24 +97,14 @@ def _single_task_cc(und_keys: DataFrame, max_iterations: int, numeric_ids: bool)
                 conv = True  # the observed changed==0 superstep
                 break
             comp = new
-        sorted_strs = strs[keyorder]
-        out_comp = sorted_strs[comp]
+        out_comp = strs[keyorder][comp]
         if numeric_ids:
             # same normalization as the distributed cast chain
             # (string → long → string)
             out_comp = out_comp.astype(np.int64).astype(str).astype(object)
-        yield pd.DataFrame(
-            {
-                "id": strs,
-                "component": out_comp,
-                "_iters": np.full(n, done, dtype=np.int32),
-                "_conv": np.full(n, conv),
-            }
-        )
+        return {"id": strs, "component": out_comp}, done, conv
 
-    return und_keys.coalesce(1).mapInPandas(
-        run, "id string, component string, _iters int, _conv boolean"
-    )
+    return kernel
 
 
 def connected_components(
@@ -199,62 +165,23 @@ def connected_components(
         edges = normalize_edges(edges)
         spark = edges.sparkSession
 
-        if (
-            runner is None  # callers that pass a runner want per-superstep metrics
-            and broadcast_threshold_vertices is None
-            and single_task_budget_bytes
-        ):
-            # third scatter strategy (see _single_task_cc / pagerank.py).
-            # Gated on a bare count — the xxhash64 injectivity check runs
-            # vectorized INSIDE the task (the r6.0 driver-side
-            # countDistinct probe cost ~1 s at sf0.1; guide §1.2); a
-            # collision surfaces as the marker and falls through to the
-            # probed distributed paths below. The jobless Catalyst-stats
-            # hint skips the tier AND its count for obviously-oversized
-            # inputs (at scale that count is a full scan).
-            hint = plan_size_hint_bytes(edges)
-            e_rows = (
-                0
-                if hint is not None and hint > 8 * single_task_budget_bytes
-                else 2 * edges.count()
+        if runner is None and broadcast_threshold_vertices is None:
+            # the single-task rung (single_task.py); callers that pass a
+            # runner want per-superstep metrics, and a hash collision
+            # found in-task falls through to the probed paths below
+            copy = single_task.gate(
+                edges.select("src", "dst"),
+                single_task_budget_bytes,
+                2 * _SINGLE_TASK_ROW_BYTES,
             )
-            if 0 < e_rows * _SINGLE_TASK_ROW_BYTES <= single_task_budget_bytes:
-                t0 = time.time()
-                und_keys = edges.select(
-                    F.xxhash64("src").alias("s"),
-                    F.xxhash64("dst").alias("d"),
-                    F.col("src").alias("s_str"),
-                ).unionByName(
-                    edges.select(
-                        F.xxhash64("dst").alias("s"),
-                        F.xxhash64("src").alias("d"),
-                        F.col("dst").alias("s_str"),
-                    )
+            if copy is not None:
+                out = single_task.run_loop(
+                    copy,
+                    _cc_kernel(max_iterations, numeric_ids),
+                    "id string, component string",
                 )
-                try:
-                    out = _single_task_cc(
-                        und_keys, max_iterations, numeric_ids
-                    ).localCheckpoint(eager=True)
-                    meta = out.select(
-                        F.max("_iters").alias("i"),
-                        F.max(F.col("_conv").cast("int")).alias("c"),
-                        F.count("*").alias("n"),
-                    ).first()
-                except Exception as exc:  # noqa: BLE001 — marker-matched
-                    if COLLISION_MARKER not in str(exc):
-                        raise
-                else:
-                    runner = SuperstepRunner(spark)
-                    runner.metrics.append(
-                        SuperstepMetrics(
-                            superstep=int(meta["i"]),
-                            rows=int(meta["n"]),
-                            changed=0 if meta["c"] else None,
-                            wall_sec=time.time() - t0,
-                        )
-                    )
-                    runner.converged = bool(meta["c"])
-                    return out.select("id", "component")
+                if out is not None:
+                    return out
 
         # one probe job over the DIRECTED edges: routing-table row count
         # and vertex count (feeds the broadcast-vs-salted decision; CC's
@@ -285,14 +212,10 @@ def connected_components(
         )
 
         # broadcast-state scatter when the state fits a per-superstep
-        # broadcast BYTE budget (row counts are the wrong unit — see
-        # superstep.py)
-        if broadcast_threshold_vertices is not None:
-            use_broadcast = n <= broadcast_threshold_vertices
-        else:
-            use_broadcast = fits_broadcast_budget(
-                n, init.schema, broadcast_state_budget_bytes
-            )
+        # broadcast BYTE budget
+        use_broadcast = use_broadcast_state(
+            n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+        )
         if use_broadcast:
             # Fast path (guide §2.4): broadcast-mode CC scatters on the
             # ORIGINAL src tag and gathers by the original dst tag, so

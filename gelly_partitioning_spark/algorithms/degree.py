@@ -13,44 +13,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import single_task
 from ..graph import degrees, normalize_edges, undirected
+from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..splitting import merge_by_tag, split_graph
-from ..superstep import checkpoint_static, plan_size_hint_bytes
+from ..superstep import checkpoint_static
 
-# Single-task budget (the same fourth rung pagerank/cc/triangle got in
-# r6): when the exploded endpoint column fits one task's memory, the
-# whole count runs as ONE vectorized value_counts inside a mapInPandas
-# task — no shuffle, no broadcast build, no per-stage scheduling. ~64
-# bytes per exploded row (the id string + hash-table working set), two
-# rows per edge. 0 disables the tier.
-DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
+# Single-task working set per exploded endpoint row (the id string plus
+# the hash-table working set); two rows per edge.
 _SINGLE_TASK_ROW_BYTES = 64
-
-
-def _single_task_degree(edges: DataFrame) -> DataFrame:
-    """(id, degree) in one task — exact hash-based counts, no sort.
-
-    Identical results by construction: degree = multiplicity of the id in
-    the exploded (src ∪ dst) multiset, which IS the undirected degree
-    (``undirected`` is a plain union, no dedup), and the id strings pass
-    through Arrow untouched.
-    """
-    ids = edges.select(F.explode(F.array("src", "dst")).alias("id"))
-
-    def run(pdfs):
-        import pandas as pd
-
-        chunks = [c for c in pdfs]
-        if not chunks:
-            return
-        vc = pd.concat([c["id"] for c in chunks], ignore_index=True).value_counts(
-            sort=False
-        )
-        yield pd.DataFrame(
-            {"id": vc.index.to_numpy(), "degree": vc.to_numpy().astype("int64")}
-        )
-
-    return ids.coalesce(1).mapInPandas(run, "id string, degree long")
 
 
 def degree_count(
@@ -74,27 +45,34 @@ def degree_count(
     (und on the first fan-out build, deg alongside it; the second fan-out
     broadcast and the rewrite join read the caches). Below
     ``single_task_budget_bytes`` the whole count instead runs as one
-    vectorized value_counts task (``_single_task_degree``) — the same
-    budget-gated smallest-regime rung pagerank/cc grew this round.
+    vectorized value_counts task — the same budget-gated single-task
+    rung as pagerank/cc/triangle.
     (Eagerly pre-materializing degree+und the way the ITERATIVE consumers
     do measured 4.4 s vs 2.3 s here — that direction stays rejected.)
     """
     edges = normalize_edges(edges)
-    if single_task_budget_bytes:
-        # one cheap probe job (count on the — usually cached — edge set);
-        # the split/distributed pipeline below is the >budget path, same
-        # tiering as pagerank/cc (physical strategy only, identical
-        # rows). The jobless Catalyst-stats hint skips the tier AND its
-        # count for obviously-oversized inputs (at scale that count is a
-        # full scan).
-        hint = plan_size_hint_bytes(edges)
-        e_rows = (
-            0
-            if hint is not None and hint > 8 * single_task_budget_bytes
-            else edges.count()
+
+    # the single-task rung (single_task.py): physical strategy only,
+    # identical rows; the split pipeline below is the >budget path
+    def kernel(c):
+        # exact hash-based counts, no sort: degree = multiplicity of the
+        # id in the exploded (src ∪ dst) multiset, which IS the undirected
+        # degree (``undirected`` is a plain union, no dedup), and the id
+        # strings pass through Arrow untouched
+        import pandas as pd
+
+        vc = pd.Series(c["id"]).value_counts(sort=False)
+        return {"id": vc.index.to_numpy(), "degree": vc.to_numpy().astype("int64")}
+
+    copy = single_task.gate(
+        edges.select("src", "dst"), single_task_budget_bytes, 2 * _SINGLE_TASK_ROW_BYTES
+    )
+    if copy is not None:
+        return single_task.run(
+            copy.select(F.explode(F.array("src", "dst")).alias("id")),
+            kernel,
+            "id string, degree long",
         )
-        if 0 < 2 * e_rows * _SINGLE_TASK_ROW_BYTES <= single_task_budget_bytes:
-            return _single_task_degree(edges)
     if not split:
         return degrees(edges)
     und = checkpoint_static(undirected(edges), eager=False)

@@ -28,48 +28,33 @@ both paths; ``use_long_ids=False`` forces the string path.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
+from .. import single_task
 from ..encoding import IdCollisionError, decode, encode_split_graph
 from ..graph import normalize_edges, undirected
+from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..splitting import split_graph
 from ..superstep import (
     CHANGED,
-    COLLISION_MARKER,
     DEFAULT_BROADCAST_STATE_BUDGET,
-    SuperstepMetrics,
     SuperstepRunner,
     checkpoint_static,
     checkpoint_static_sized,
     data_fingerprint,
-    fits_broadcast_budget,
-    plan_size_hint_bytes,
     static_scan_partitions,
+    use_broadcast_state,
 )
 
-
-# Single-task scatter budget (the third strategy, r6): when the whole
-# undirected routing table fits comfortably in ONE task's memory, the
-# entire superstep loop runs executor-side inside one mapInPandas task —
-# Arrow-batched in, vectorized numpy power iteration, one result batch
-# out. No driver collect, no per-superstep jobs. ~48 bytes/row of numpy
-# working set (two int64 key columns + index/rank vectors), so the
-# default admits ~5M undirected rows. 0 disables the tier.
-DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
+# Single-task working set per undirected row: two int64 key columns plus
+# the index/rank vectors.
 _SINGLE_TASK_ROW_BYTES = 48
-_COLLISION_MARKER = COLLISION_MARKER  # see superstep.py
 
 
-def _single_task_pagerank(
-    und_keys: DataFrame,
-    damping: float,
-    tol: float,
-    max_iterations: int,
-    fixed_iterations: int | None,
-) -> DataFrame:
-    """(tag, rank, _iters, _conv) — the whole power iteration in one task.
+def _pagerank_kernel(
+    damping: float, tol: float, max_iterations: int, fixed_iterations: int | None
+):
+    """The whole power iteration in one task (``single_task.run_loop``).
 
     Semantics are token-identical to the distributed superstep (same
     r_{k+1} = (1-d)/n + d·Σ r_k/deg over the undirected multiset, same
@@ -81,31 +66,10 @@ def _single_task_pagerank(
     at sf0.1: ~1e-18).
     """
 
-    def run(pdfs):
+    def kernel(si, di, strs):
         import numpy as np
-        import pandas as pd
 
-        chunks = [c for c in pdfs]
-        if not chunks:
-            return
-        s = np.concatenate([c["s"].to_numpy() for c in chunks])
-        d = np.concatenate([c["d"].to_numpy() for c in chunks])
-        s_str = np.concatenate([c["s_str"].to_numpy() for c in chunks])
-        # every vertex appears on the s side of the undirected expansion,
-        # so unique(s) IS the vertex set and first-occurrence indices
-        # recover each vertex's original string id — no decode join
-        ids, first = np.unique(s, return_index=True)
-        si = np.searchsorted(ids, s)
-        di = np.searchsorted(ids, d)
-        n = len(ids)
-        strs = s_str[first]
-        # exact injectivity check, in-task (replaces the r6.0 driver-side
-        # countDistinct probe job — guide §1.2): a collision means two
-        # DIFFERENT original ids share a hash, i.e. some row's string
-        # disagrees with its hash's representative. The driver catches
-        # the marker and falls back to the probed distributed paths.
-        if not (s_str == strs[si]).all():
-            raise ValueError(_COLLISION_MARKER)
+        n = len(strs)
         deg = np.bincount(si, minlength=n).astype(np.float64)
         r = np.full(n, 1.0 / n)
         base = (1.0 - damping) / n
@@ -118,18 +82,9 @@ def _single_task_pagerank(
                 r, conv = r2, True
                 break
             r = r2
-        yield pd.DataFrame(
-            {
-                "id": strs,
-                "rank": r,
-                "_iters": np.full(n, done, dtype=np.int32),
-                "_conv": np.full(n, conv),
-            }
-        )
+        return {"id": strs, "rank": r}, done, conv
 
-    return und_keys.coalesce(1).mapInPandas(
-        run, "id string, rank double, _iters int, _conv boolean"
-    )
+    return kernel
 
 
 def _self_rows(deg: DataFrame) -> DataFrame:
@@ -192,14 +147,12 @@ def pagerank(
         # same scatter-strategy decision as the fresh path (unchanged from
         # r5: a prepared graph may still run broadcast-state scatter when
         # the state fits the per-superstep broadcast budget)
-        if broadcast_threshold_vertices is not None:
-            use_broadcast = n <= broadcast_threshold_vertices
-        else:
-            use_broadcast = fits_broadcast_budget(
-                n,
-                deg.select("tag", F.lit(1.0).alias("rank")).schema,
-                broadcast_state_budget_bytes,
-            )
+        use_broadcast = use_broadcast_state(
+            n,
+            deg.select("tag", F.lit(1.0).alias("rank")).schema,
+            broadcast_threshold_vertices,
+            broadcast_state_budget_bytes,
+        )
         if use_broadcast:
             e2 = checkpoint_static(
                 e.join(sub_deg.hint("shuffle_hash"), "src")
@@ -214,63 +167,26 @@ def pagerank(
             use_long_ids
             and broadcast_threshold_vertices is None
             and (runner is None or runner.checkpoint_dir is None)
-            and single_task_budget_bytes
         ):
-            # third scatter strategy: the whole loop inside ONE task (see
-            # _single_task_pagerank). Skipped when the caller pinned a
-            # strategy (broadcast_threshold_vertices), wants resumable
-            # checkpoints, forced the string path, or the table is too
-            # big for one task's memory. Gated on a bare count — the
-            # injectivity check runs vectorized INSIDE the task (the
-            # r6.0 driver-side countDistinct probe cost ~1 s at sf0.1,
-            # a third of the whole query; guide §1.2) — and a collision
-            # surfaces as the marker, falling through to the probed
-            # distributed paths below. The jobless Catalyst-stats hint
-            # skips the tier AND its count outright when the input is
-            # obviously oversized (at scale that count is a full scan).
-            hint = plan_size_hint_bytes(edges)
-            e_rows = (
-                0
-                if hint is not None and hint > 8 * single_task_budget_bytes
-                else 2 * edges.count()
+            # the single-task rung (single_task.py): skipped when the
+            # caller pinned a strategy (broadcast_threshold_vertices),
+            # wants resumable checkpoints, forced the string path, or the
+            # table is too big for one task's memory; a hash collision
+            # found in-task falls through to the probed paths below
+            copy = single_task.gate(
+                edges.select("src", "dst"),
+                single_task_budget_bytes,
+                2 * _SINGLE_TASK_ROW_BYTES,
             )
-            if 0 < e_rows * _SINGLE_TASK_ROW_BYTES <= single_task_budget_bytes:
-                t0 = time.time()
-                und_keys = edges.select(
-                    F.xxhash64("src").alias("s"),
-                    F.xxhash64("dst").alias("d"),
-                    F.col("src").alias("s_str"),
-                ).unionByName(
-                    edges.select(
-                        F.xxhash64("dst").alias("s"),
-                        F.xxhash64("src").alias("d"),
-                        F.col("dst").alias("s_str"),
-                    )
+            if copy is not None:
+                out = single_task.run_loop(
+                    copy,
+                    _pagerank_kernel(damping, tol, max_iterations, fixed_iterations),
+                    "id string, rank double",
+                    runner,
                 )
-                try:
-                    out = _single_task_pagerank(
-                        und_keys, damping, tol, max_iterations, fixed_iterations
-                    ).localCheckpoint(eager=True)
-                    meta = out.select(
-                        F.max("_iters").alias("i"),
-                        F.max(F.col("_conv").cast("int")).alias("c"),
-                        F.count("*").alias("n"),
-                    ).first()
-                except Exception as exc:  # noqa: BLE001 — marker-matched
-                    if _COLLISION_MARKER not in str(exc):
-                        raise
-                else:
-                    runner = runner or SuperstepRunner(spark)
-                    runner.metrics.append(
-                        SuperstepMetrics(
-                            superstep=int(meta["i"]),
-                            rows=int(meta["n"]),
-                            changed=0 if meta["c"] else None,
-                            wall_sec=time.time() - t0,
-                        )
-                    )
-                    runner.converged = bool(meta["c"])
-                    return out.select("id", "rank")
+                if out is not None:
+                    return out
 
         # one probe job over the DIRECTED edges: routing-table row count
         # (out+in ≡ the undirected expansion), vertex count, and the
@@ -326,17 +242,14 @@ def pagerank(
         #   shuffle_hash hints (build sides are vertex-sized; SMJ would
         #   re-sort the edge side each superstep — measured 2-3x slower in
         #   superstep_tune.py).
-        if broadcast_threshold_vertices is not None:
-            use_broadcast = n <= broadcast_threshold_vertices
-        else:
-            # byte budget, not row count: the state is re-broadcast EVERY
-            # superstep, so it must be a small fraction of driver/executor
-            # memory (VERDICT r1 #6)
-            use_broadcast = fits_broadcast_budget(
-                n,
-                deg.select("tag", F.lit(1.0).alias("rank")).schema,
-                broadcast_state_budget_bytes,
-            )
+        # byte budget, not row count: the state is re-broadcast EVERY
+        # superstep, so it must be a small fraction of JVM heap memory
+        use_broadcast = use_broadcast_state(
+            n,
+            deg.select("tag", F.lit(1.0).alias("rank")).schema,
+            broadcast_threshold_vertices,
+            broadcast_state_budget_bytes,
+        )
 
         if use_broadcast:
             # Fast path (guide §2.4/§1.2): in broadcast mode the scatter

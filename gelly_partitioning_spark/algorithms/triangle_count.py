@@ -19,22 +19,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import single_task
 from ..graph import canonical_edges, normalize_edges
-from ..superstep import (
-    estimate_row_bytes,
-    fits_broadcast_budget,
-    plan_size_hint_bytes,
-    session_broadcast_threshold,
-)
+from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
+from ..superstep import fits_broadcast_budget, session_broadcast_threshold
 
-# Single-task budget (the same fourth rung pagerank/cc/degree got in r6):
-# when the edge set fits one task's memory, the orientation + wedge
-# enumeration + close run as vectorized numpy inside one mapInPandas
-# task — the 41M-wedge sf0.1 count drops from ~5 s of JVM join codegen
-# to ~0.5 s (length-bucketed triu_indices pair gather + one bitmap probe
-# per wedge). ~48 bytes/edge of working set; 0 disables the tier.
-DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
-_SINGLE_TASK_EDGE_BYTES = 48
+# Single-task working set per (raw or canonical) pair. On the single-task
+# rung the orientation + wedge enumeration + close run as vectorized numpy
+# in one task — the 41M-wedge sf0.1 count drops from ~5 s of JVM join
+# codegen to ~0.5 s (length-bucketed triu_indices pair gather + one
+# bitmap probe per wedge).
+_SINGLE_TASK_ROW_BYTES = 48
 # In-task cap for the n²/8-byte adjacency bitmap used by the wedge-close
 # probe; above it the close falls back to a searchsorted membership test
 # on packed rank keys (~5x slower per wedge, no n² memory) — the choice
@@ -111,61 +106,26 @@ def _count_canonical_pairs(np, lo_ids, hi_ids) -> int:
     return total
 
 
-def _one_row(pd, np, k):
-    return pd.DataFrame({"triangles": np.array([k], dtype=np.int64)})
-
-
-def _single_task_triangle(canon_keys: DataFrame) -> DataFrame:
-    """One-row (triangles: long) — the whole count in one task.
-
-    Input: the id-canonical DISTINCT simple edge set, xxhash64-keyed
-    (s, d). See _count_canonical_pairs for the algorithm and the
-    equivalence argument.
-    """
-
-    def run(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        chunks = [c for c in pdfs]
-        if not chunks:
-            yield _one_row(pd, np, 0)
-            return
-        s = np.concatenate([c["s"].to_numpy() for c in chunks])
-        d = np.concatenate([c["d"].to_numpy() for c in chunks])
-        yield _one_row(pd, np, _count_canonical_pairs(np, s, d))
-
-    return canon_keys.coalesce(1).mapInPandas(run, "triangles long")
-
-
-def _single_task_triangle_raw(pairs: DataFrame) -> DataFrame:
-    """One-row (triangles: long) from a RAW (s, d) long-pair multiset —
+def _raw_pairs_kernel(c):
+    """One-row (triangles) from a RAW (s, d) long-pair multiset —
     duplicates, self-loops and either orientation allowed; canonicalize
     + dedup run in-task (a 1.2M-row sort beats a distinct Exchange plus
-    a cached checkpoint by a wide margin at this size)."""
+    a cached checkpoint by a wide margin at this size). Idempotent on
+    already-canonical distinct input, so ``triangle_count`` feeds its
+    hashed canonical pairs here too."""
+    import numpy as np
 
-    def run(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        chunks = [c for c in pdfs]
-        if not chunks:
-            yield _one_row(pd, np, 0)
-            return
-        s = np.concatenate([c["s"].to_numpy() for c in chunks])
-        d = np.concatenate([c["d"].to_numpy() for c in chunks])
-        lo = np.minimum(s, d)
-        hi = np.maximum(s, d)
-        keep = lo != hi  # drop self-loops (canonical_edges semantics)
-        lo, hi = lo[keep], hi[keep]
-        order = np.lexsort((hi, lo))
-        lo, hi = lo[order], hi[order]
-        if len(lo):
-            first = np.r_[True, (lo[1:] != lo[:-1]) | (hi[1:] != hi[:-1])]
-            lo, hi = lo[first], hi[first]
-        yield _one_row(pd, np, _count_canonical_pairs(np, lo, hi))
-
-    return pairs.coalesce(1).mapInPandas(run, "triangles long")
+    s, d = c["s"], c["d"]
+    lo = np.minimum(s, d)
+    hi = np.maximum(s, d)
+    keep = lo != hi  # drop self-loops (canonical_edges semantics)
+    lo, hi = lo[keep], hi[keep]
+    order = np.lexsort((hi, lo))
+    lo, hi = lo[order], hi[order]
+    if len(lo):
+        first = np.r_[True, (lo[1:] != lo[:-1]) | (hi[1:] != hi[:-1])]
+        lo, hi = lo[first], hi[first]
+    return {"triangles": np.array([_count_canonical_pairs(np, lo, hi)], dtype=np.int64)}
 
 
 def triangle_count_long_pairs(
@@ -174,31 +134,29 @@ def triangle_count_long_pairs(
 ) -> DataFrame:
     """Global triangle count of an undirected simple graph given as a RAW
     ``(s: long, d: long)`` pair multiset (duplicates, self-loops, either
-    orientation — exactly what ``canonical_edges`` would normalize away).
+    orientation — exactly what ``canonical_edges`` would normalize away;
+    pairs with a null endpoint are dropped, as ``normalize_edges`` does).
 
     Below the single-task budget the whole canonicalize/dedup/orient/
     wedge/close runs in one numpy task over the raw stream — no distinct
     Exchange, no string minting, no hash probe (long keys need no
     injectivity check). Above it, the raw pairs are stringified and
-    handed to the generic ``triangle_count`` pipeline (its
-    canonical_edges distinct performs the dedup; identical count — the
+    handed to the generic ``triangle_count`` pipeline with the same
+    budget: its canonical distinct set may still fit the single-task
+    rung when the raw multiset did not. The count is identical — the
     distinct UNORDERED pair set is the same under any canonical
-    orientation).
+    orientation. ``triangle_count`` never calls back into this function.
     """
-    if single_task_budget_bytes:
-        hint = plan_size_hint_bytes(pairs)
-        if hint is None or hint <= 8 * single_task_budget_bytes:
-            # one materialization serves the gate count AND whichever
-            # path runs (the raw plan — e.g. the co-occurrence pair
-            # generation — would otherwise compute twice)
-            pairs = pairs.localCheckpoint(eager=True)
-            rows = pairs.count()
-            if 0 < rows * _SINGLE_TASK_EDGE_BYTES <= single_task_budget_bytes:
-                return _single_task_triangle_raw(pairs)
     cols = pairs.columns
+    pairs = pairs.select(F.col(cols[0]).alias("s"), F.col(cols[1]).alias("d")).filter(
+        F.col("s").isNotNull() & F.col("d").isNotNull()
+    )
+    copy = single_task.gate(pairs, single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES)
+    if copy is not None:
+        return single_task.run(copy, _raw_pairs_kernel, "triangles long")
     return triangle_count(
-        pairs.select(F.col(cols[0]).alias("src"), F.col(cols[1]).alias("dst")),
-        single_task_budget_bytes=0,
+        pairs.select(F.col("s").alias("src"), F.col("d").alias("dst")),
+        single_task_budget_bytes=single_task_budget_bytes,
     )
 
 
@@ -284,16 +242,15 @@ def triangle_count(
         canon = canon.select(
             F.least(hs, hd).alias("src"), F.greatest(hs, hd).alias("dst")
         )
-        if (
-            single_task_budget_bytes
-            and 0 < n_e * _SINGLE_TASK_EDGE_BYTES <= single_task_budget_bytes
-        ):
-            # fourth rung (see _count_canonical_pairs): the whole
-            # orient/wedge/close inside one task; the close picks
-            # bitmap vs searchsorted in-task from the exact vertex
-            # count. >budget graphs continue below unchanged.
-            return _single_task_triangle(
-                canon.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+        if single_task.admits(n_e, single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES):
+            # the single-task rung: the whole orient/wedge/close inside
+            # one task; the close picks bitmap vs searchsorted in-task
+            # from the exact vertex count. >budget graphs continue below
+            # unchanged.
+            return single_task.run(
+                canon.select(F.col("src").alias("s"), F.col("dst").alias("d")),
+                _raw_pairs_kernel,
+                "triangles long",
             )
     o = oriented_edges(canon, already_canonical=True).localCheckpoint(eager=True)
     # The wedge table (Σ C(outdeg, 2) rows) is the LARGEST relation in

@@ -25,7 +25,9 @@ def normalize_edges(edges: DataFrame) -> DataFrame:
     """Coerce an edge DataFrame to the canonical (src, dst, w) schema.
 
     Ids become strings (reference keys are always String, SURVEY §1.2);
-    a missing weight column defaults to 1.0.
+    a missing weight column defaults to 1.0. An edge with a null endpoint
+    is dropped: it names no vertex, and dropping it here is what makes
+    every strategy rung agree on it.
     """
     cols = edges.columns
     src, dst = cols[0], cols[1]
@@ -34,7 +36,7 @@ def normalize_edges(edges: DataFrame) -> DataFrame:
         F.col(src).cast("string").alias("src"),
         F.col(dst).cast("string").alias("dst"),
         w.alias("w"),
-    )
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
 
 def undirected(edges: DataFrame) -> DataFrame:

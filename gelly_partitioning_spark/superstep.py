@@ -61,15 +61,6 @@ def plan_size_hint_bytes(df) -> int | None:
         return None
 
 
-# Marker string raised by the single-task tiers' IN-TASK xxhash64
-# injectivity check (r6: replaces the driver-side countDistinct probe on
-# the tier path — guide §1.2): the driver matches it in the surfaced job
-# failure and falls back to the probed distributed paths. Collision
-# probability is ~n²/2^65 — the check is for exactness, not likelihood;
-# local[] runs with task maxFailures=1, so a collision costs one task.
-COLLISION_MARKER = "xxhash64 collision on vertex ids"
-
-
 def estimate_row_bytes(schema) -> int:
     """Rough serialized row width: 8 B per fixed-width field, 24 B per
     string/binary (hash ids / tags), 16 B default, +16 B row overhead."""
@@ -90,6 +81,18 @@ def fits_broadcast_budget(
 ) -> bool:
     """True when a per-superstep broadcast of the state is within budget."""
     return n_rows * estimate_row_bytes(schema) <= budget_bytes
+
+
+def use_broadcast_state(
+    n_vertices: int, schema, threshold_vertices: int | None, budget_bytes: int
+) -> bool:
+    """Broadcast-state vs salted scatter: a caller's vertex-count pin
+    (``broadcast_threshold_vertices``) wins; otherwise the state must fit
+    the per-superstep broadcast BYTE budget (row counts are the wrong
+    unit, VERDICT r1 #6)."""
+    if threshold_vertices is not None:
+        return n_vertices <= threshold_vertices
+    return fits_broadcast_budget(n_vertices, schema, budget_bytes)
 
 
 # batch_size sentinel: measure the first superstep (run with k=1), then
@@ -154,11 +157,12 @@ def checkpoint_static(df: DataFrame, eager: bool = True) -> DataFrame:
 def checkpoint_static_sized(df: DataFrame, n_rows: int, spark: SparkSession) -> DataFrame:
     """checkpoint_static with the storage level decided ONCE, up front.
 
-    Same policy as ``checkpoint_static`` + ``maybe_promote_static`` (ser
-    default at scale, deserialized in the mid regime where it fits), but
-    callers that already know the row count before the first
-    materialization use this to avoid the promote path's second full
-    materialization of the table (guide §1.2: one pass instead of two).
+    Serialized by default at scale (see ``checkpoint_static``),
+    deserialized in the mid regime where the known row count says it
+    fits storage memory — there the serialized layout would pay one bulk
+    deserialization per scan, per superstep (measured 1.4-1.6x per
+    superstep at 37M edges / 32g heap). Deciding before the first
+    materialization costs no second pass over the table (guide §1.2).
     ``GPS_STATIC_STORAGE`` still pins the mode either way.
     """
     if os.environ.get("GPS_STATIC_STORAGE") is None and deserialized_cache_fits(
@@ -214,8 +218,10 @@ def release_checkpoint(df: DataFrame) -> None:
 
     Only frames whose analyzed plan is a LogicalRDD (i.e. produced by
     localCheckpoint) hold a persisted RDD; anything else is a no-op (the
-    reflection call fails and is swallowed). See maybe_promote_static for
-    why the LogicalRDD's own RDD is the one that must be released.
+    reflection call fails and is swallowed). A localCheckpointed Dataset
+    is not in the CacheManager (``unpersist()`` is a no-op) and ``toRdd()``
+    builds a DERIVED, non-persisted RDD; the persisted RDD is the one the
+    LogicalRDD plan node holds, so that is the one released.
     """
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
@@ -251,43 +257,6 @@ def deserialized_cache_fits(
     ~``object_factor``x the serialized width)."""
     heap = heap_bytes if heap_bytes is not None else _executor_heap_bytes(spark)
     return n_rows * estimate_row_bytes(schema) * object_factor <= fraction * heap
-
-
-def maybe_promote_static(df: DataFrame, n_rows: int, spark: SparkSession) -> DataFrame:
-    """Convert a SERIALIZED static checkpoint to the deserialized layout
-    once its row count proves it comfortably fits storage memory.
-
-    ``checkpoint_static`` defaults to serialized blocks because at the
-    target scale (10^11-edge routing tables) deserialized caches overflow
-    the storage fraction and degrade catastrophically (r3 jstack: 20+
-    CPU-min/task re-reading partially-unrolled blocks row-at-a-time).
-    But in the MID regime — table fits in heap — the serialized layout
-    pays one bulk deserialization per scan, per superstep: measured
-    1.4-1.6x per superstep at 37M edges / 32g heap (BENCH r4 A/B,
-    8-core min 28.3 s serialized vs 17.3-23.1 deserialized). The
-    algorithms learn the routing-table row count cheaply right after
-    materialization anyway, so this promotes exactly when the count says
-    it is safe: one extra pass now (re-checkpoint from the cached
-    serialized blocks), ~40% less every superstep after.
-
-    No-op when GPS_STATIC_STORAGE pins a mode, or when the table does
-    not comfortably fit (``deserialized_cache_fits``).
-    """
-    if os.environ.get("GPS_STATIC_STORAGE"):
-        return df  # operator pinned the mode — respect it
-    if not deserialized_cache_fits(n_rows, df.schema, spark):
-        return df
-    out = df.localCheckpoint(eager=True)  # deserialized default level
-    try:
-        # free the serialized blocks: a localCheckpointed Dataset is not
-        # in the CacheManager (unpersist() is a no-op) and toRdd() builds a
-        # DERIVED (non-persisted) RDD — unpersisting it releases nothing
-        # (ADVICE r4, verified live). The persisted RDD is the one held by
-        # the LogicalRDD plan node itself; release that.
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort; worst case both copies age out via LRU
-    return out
 
 
 def data_fingerprint(df: DataFrame, *cols: str) -> str:

@@ -220,7 +220,7 @@ def test_pagerank_auto_batch_matches_unbatched(spark, hub_graph):
     assert r._auto_k is not None and r._auto_k >= 1
 
 
-# -- mid-regime storage promotion of static checkpoints ------------------------
+# -- mid-regime deserialized storage of static checkpoints ---------------------
 
 
 def test_deserialized_cache_fits_boundary():
@@ -236,39 +236,6 @@ def test_deserialized_cache_fits_boundary():
     budget_rows = int(0.25 * (1 << 30) / (width * 3))
     assert deserialized_cache_fits(budget_rows, sch, None, heap_bytes=1 << 30)
     assert not deserialized_cache_fits(budget_rows + 1, sch, None, heap_bytes=1 << 30)
-
-
-def test_maybe_promote_static(spark):
-    import os
-
-    from gelly_partitioning_spark.superstep import (
-        checkpoint_static,
-        maybe_promote_static,
-    )
-
-    df = spark.range(1000).selectExpr("id as src", "id as dst_tag")
-
-    def persisted_ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    pre = persisted_ids()
-    ck = checkpoint_static(df)
-    ck_ids = persisted_ids() - pre  # the serialized checkpoint RDD(s)
-    assert ck_ids
-    small = maybe_promote_static(ck, 1000, spark)
-    assert small is not ck  # promoted to the deserialized layout
-    assert small.count() == 1000
-    # the SERIALIZED checkpoint blocks must actually be released (ADVICE
-    # r4: unpersisting queryExecution().toRdd() was a no-op — it builds a
-    # derived RDD; the persisted one lives on the LogicalRDD plan node)
-    assert not (ck_ids & persisted_ids()), "old serialized checkpoint RDD leaked"
-    ck2 = checkpoint_static(df)
-    assert maybe_promote_static(ck2, 10**12, spark) is ck2  # too big: stays
-    os.environ["GPS_STATIC_STORAGE"] = "ser"
-    try:
-        assert maybe_promote_static(ck2, 10, spark) is ck2  # pinned: stays
-    finally:
-        del os.environ["GPS_STATIC_STORAGE"]
 
 
 # -- IVF centroid-routed ANN tier (VERDICT r3 #4) ------------------------------

@@ -74,7 +74,9 @@ def test_pagerank_broadcast_equals_salted(spark, hub_graph):
 
     fast = {
         r["id"]: r["rank"]
-        for r in pagerank(hub_graph, fixed_iterations=12, threshold=2).collect()
+        for r in pagerank(
+            hub_graph, fixed_iterations=12, threshold=2, single_task_budget_bytes=0
+        ).collect()
     }
     salted = {
         r["id"]: r["rank"]
@@ -92,7 +94,9 @@ def test_cc_broadcast_equals_salted(spark, cc_graph):
 
     fast = {
         r["id"]: r["component"]
-        for r in connected_components(cc_graph, threshold=2).collect()
+        for r in connected_components(
+            cc_graph, threshold=2, single_task_budget_bytes=0
+        ).collect()
     }
     salted = {
         r["id"]: r["component"]
@@ -103,217 +107,99 @@ def test_cc_broadcast_equals_salted(spark, cc_graph):
     assert fast == salted
 
 
-def test_pagerank_single_task_matches_distributed(spark, hub_graph):
-    # the r6 single-task tier (engaged by default on tiny graphs) vs the
-    # distributed loop (tier disabled): identical to float noise, same
-    # fixed-iteration trajectory
-    from gelly_partitioning_spark import pagerank
-
-    local = {
-        r["id"]: r["rank"]
-        for r in pagerank(hub_graph, fixed_iterations=12, threshold=2).collect()
-    }
-    dist = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            hub_graph, fixed_iterations=12, threshold=2, single_task_budget_bytes=0
-        ).collect()
-    }
-    assert set(local) == set(dist)
-    for v in local:
-        assert abs(local[v] - dist[v]) < 1e-12, v
-
-
-def test_cc_single_task_matches_distributed(spark, cc_graph):
-    from gelly_partitioning_spark import connected_components
-
-    local = {
-        r["id"]: r["component"]
-        for r in connected_components(cc_graph, threshold=2).collect()
-    }
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            cc_graph, threshold=2, single_task_budget_bytes=0
-        ).collect()
-    }
-    assert local == dist
-
-
-@pytest.mark.parametrize("numeric", [False, True])
-def test_cc_single_task_numeric_ids(spark, numeric):
-    # numeric order and lexicographic order disagree on these ids
-    # (min(7,10,3) = 3 numerically; min("10","3","7") = "10" as strings),
-    # so this pins the tier's order-rank construction for both flavors
-    from gelly_partitioning_spark import connected_components, from_pairs
-
-    g = from_pairs(spark, [(10, 7), (7, 3), (100, 20)])
-    local = {
-        r["id"]: r["component"]
-        for r in connected_components(g, split=False, numeric_ids=numeric).collect()
-    }
-    dist = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            g, split=False, numeric_ids=numeric, single_task_budget_bytes=0
-        ).collect()
-    }
-    assert local == dist
-    assert local["7"] == ("3" if numeric else "10")
-    assert local["100"] == ("20" if numeric else "100")
-
-
 def test_cc_auto_batching_matches_unbatched(spark, cc_graph):
+    # single-task rung off: batching lives in the distributed loop
     from gelly_partitioning_spark import connected_components
 
-    batched = {
-        r["id"]: r["component"]
-        for r in connected_components(cc_graph, threshold=2, superstep_batch=0).collect()
-    }
-    unbatched = {
-        r["id"]: r["component"]
-        for r in connected_components(cc_graph, threshold=2, superstep_batch=1).collect()
-    }
+    def run(batch):
+        return {
+            r["id"]: r["component"]
+            for r in connected_components(
+                cc_graph, threshold=2, superstep_batch=batch, single_task_budget_bytes=0
+            ).collect()
+        }
+
+    batched, unbatched = run(0), run(1)
     assert batched == unbatched
 
 
-def test_degree_single_task_matches_distributed(spark, hub_graph):
-    # the r6 single-task tier for degree_count (exact value_counts in one
-    # task) vs the split pipeline (tier disabled): identical rows — and
-    # the distributed path itself now builds its fan-out from ONE shared
-    # degree aggregation (both BroadcastExchanges read the lazily
-    # checkpointed table, itself derived from the shared lazily
-    # checkpointed undirected expansion)
-    from gelly_partitioning_spark import degree_count
-
-    local = {
-        (r["id"], r["degree"])
-        for r in degree_count(hub_graph, threshold=2).collect()
-    }
-    dist = {
-        (r["id"], r["degree"])
-        for r in degree_count(
-            hub_graph, threshold=2, single_task_budget_bytes=0
-        ).collect()
-    }
-    assert local == dist
-
-
-def test_triangle_single_task_matches_distributed(spark, tri_graph):
-    # the r6 single-task tier for triangle_count (numpy orient/wedge/
-    # bitmap-close in one task) vs the distributed wedge/close joins
-    # (tier disabled): identical exact count — including with duplicate /
-    # reversed / self-loop raw edges, which normalize away upstream
-    from gelly_partitioning_spark import from_pairs, triangle_count
-
-    for g in (
-        tri_graph,
-        from_pairs(spark, [(1, 2), (2, 1), (1, 1), (2, 3), (3, 1), (3, 3), (2, 3)]),
-    ):
-        tier = triangle_count(g).collect()[0]["triangles"]
-        dist = triangle_count(g, single_task_budget_bytes=0).collect()[0][
-            "triangles"
-        ]
-        assert tier == dist
-
-
 def test_single_task_collision_marker_falls_back(spark, hub_graph, monkeypatch):
-    # r6.1: the tier's injectivity check moved INSIDE the task (the
-    # driver-side countDistinct probe was a third of the sf0.1 query) —
-    # a surfaced collision marker must fall back to the distributed path
+    # the tier's injectivity check runs INSIDE the task: a collision
+    # marker raised there surfaces as a PythonException and must fall back
+    # to the distributed path, with the same answer; any other failure,
+    # and the marker text raised outside a task, must still surface
     import importlib
 
-    from gelly_partitioning_spark.superstep import COLLISION_MARKER
+    from pyspark.errors import PythonException
 
-    # the package re-exports the FUNCTION under the same name, so address
-    # the module through importlib
+    from gelly_partitioning_spark import pagerank
+
+    st = importlib.import_module("gelly_partitioning_spark.single_task")
+    # the package re-exports the FUNCTION under the module name
     prmod = importlib.import_module("gelly_partitioning_spark.algorithms.pagerank")
 
-    def boom(*a, **k):
-        raise ValueError(COLLISION_MARKER)
+    def ranks(**kw):
+        return {
+            r["id"]: r["rank"]
+            for r in pagerank(hub_graph, fixed_iterations=5, threshold=2, **kw).collect()
+        }
 
-    baseline = {
-        r["id"]: r["rank"]
-        for r in prmod.pagerank(
-            hub_graph, fixed_iterations=5, threshold=2, single_task_budget_bytes=0
-        ).collect()
-    }
-    monkeypatch.setattr(prmod, "_single_task_pagerank", boom)
-    got = {
-        r["id"]: r["rank"]
-        for r in prmod.pagerank(hub_graph, fixed_iterations=5, threshold=2).collect()
-    }
+    baseline = ranks(single_task_budget_bytes=0)
+    # two different strings on one hash key: the in-task check fires
+    colliding = spark.createDataFrame(
+        [(1, 2, "a"), (1, 2, "b"), (2, 1, "x")], "s long, d long, s_str string"
+    )
+    entered, run = [], st.run
+    monkeypatch.setattr(st, "run", lambda *a, **k: entered.append(1) or run(*a, **k))
+    monkeypatch.setattr(st, "undirected_keys", lambda edges: colliding)
+    got = ranks()
+    assert len(entered) == 1  # the tier ran, then fell back
     assert got.keys() == baseline.keys()
     for v in got:
         assert abs(got[v] - baseline[v]) < 1e-12
-    # a NON-marker error must still surface, not be swallowed
-    def other(*a, **k):
-        raise RuntimeError("unrelated failure")
 
-    monkeypatch.setattr(prmod, "_single_task_pagerank", other)
-    with pytest.raises(RuntimeError, match="unrelated"):
-        prmod.pagerank(hub_graph, fixed_iterations=5, threshold=2)
+    # a NON-marker error in the task surfaces, not swallowed
+    def factory(*a):
+        def kernel(si, di, strs):
+            raise RuntimeError("unrelated failure")
+
+        return kernel
+
+    monkeypatch.undo()
+    monkeypatch.setattr(prmod, "_pagerank_kernel", factory)
+    with pytest.raises(PythonException, match="unrelated failure"):
+        ranks()
+
+    # nor is the marker text raised outside a Spark task
+    def outside_task(*a, **k):
+        raise ValueError(st.COLLISION_MARKER)
+
+    monkeypatch.setattr(st, "run", outside_task)
+    with pytest.raises(ValueError, match="collision"):
+        ranks()
 
 
-def test_single_task_in_task_collision_check_raises(spark):
+def test_single_task_in_task_collision_check_raises(spark, monkeypatch):
     # craft an inconsistent (hash, string) pairing — two different
-    # strings on the same hash key — and pin that the in-task check
-    # raises the marker (through the surfaced Python exception)
-    from gelly_partitioning_spark.algorithms.pagerank import _single_task_pagerank
+    # strings on the same hash key — and pin that run_loop's in-task
+    # check raises the marker (through the surfaced Python exception)
+    # before the kernel is reached, and that run_loop then declines
+    import importlib
 
+    from pyspark.errors import PythonException
+
+    st = importlib.import_module("gelly_partitioning_spark.single_task")
     df = spark.createDataFrame(
         [(1, 2, "a"), (1, 2, "b"), (2, 1, "x"), (2, 1, "x")],
         "s long, d long, s_str string",
     )
-    with pytest.raises(Exception, match="xxhash64 collision"):
-        _single_task_pagerank(df, 0.85, 1e-6, 5, None).collect()
 
+    def kernel(si, di, strs):
+        raise AssertionError("kernel reached despite a collision")
 
-def test_triangle_long_pairs_matches_generic(spark):
-    # r6.1: the raw long-pair tier (in-task canonicalize/dedup, used by
-    # the declared triangle query) vs the generic stringified pipeline —
-    # duplicates, self-loops, reversed orientation and negative ids all
-    # normalize identically
-    from gelly_partitioning_spark import triangle_count_long_pairs
-
-    raw = spark.createDataFrame(
-        [(1, 2), (2, 1), (1, 3), (2, 3), (2, 3), (3, 4), (3, 3), (5, 3),
-         (4, 5), (5, 1), (1, 1)],
-        "s long, d long",
-    )
-    neg = spark.createDataFrame(
-        [(-5, -2), (-2, -7), (-7, -5), (-5, 8), (8, -2)], "s long, d long"
-    )
-    for df, want in ((raw, 3), (neg, 2)):
-        tier = triangle_count_long_pairs(df).collect()[0]["triangles"]
-        dist = triangle_count_long_pairs(df, single_task_budget_bytes=0).collect()[
-            0
-        ]["triangles"]
-        assert tier == dist == want
-
-
-def test_triangle_core_close_methods_agree(monkeypatch):
-    # the in-task close picks bitmap vs searchsorted from the exact
-    # vertex count; both must count identically (monkeypatching the cap
-    # works here because the core runs in-process, not on a worker)
-    import importlib
-
-    import numpy as np
-
-    tcm = importlib.import_module(
-        "gelly_partitioning_spark.algorithms.triangle_count"
-    )
-    rng = np.random.default_rng(7)
-    s = rng.integers(0, 500, 20000)
-    d = rng.integers(0, 500, 20000)
-    lo, hi = np.minimum(s, d), np.maximum(s, d)
-    keep = lo != hi
-    lo, hi = lo[keep], hi[keep]
-    o = np.lexsort((hi, lo))
-    lo, hi = lo[o], hi[o]
-    f = np.r_[True, (lo[1:] != lo[:-1]) | (hi[1:] != hi[:-1])]
-    lo, hi = lo[f].astype(np.int64), hi[f].astype(np.int64)
-    bitmap = tcm._count_canonical_pairs(np, lo, hi)
-    monkeypatch.setattr(tcm, "_BITMAP_CAP_BYTES", 0)
-    searchsorted = tcm._count_canonical_pairs(np, lo, hi)
-    assert bitmap == searchsorted > 0
+    frames, run = [], st.run
+    monkeypatch.setattr(st, "run", lambda *a: frames.append(run(*a)) or frames[-1])
+    monkeypatch.setattr(st, "undirected_keys", lambda edges: df)
+    assert st.run_loop(df, kernel, "id string") is None
+    with pytest.raises(PythonException, match="xxhash64 collision"):
+        frames[0].collect()

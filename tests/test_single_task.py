@@ -1,0 +1,186 @@
+"""The single-task rung (``gelly_partitioning_spark.single_task``): every
+algorithm that has it answers exactly as with the rung disabled, on every
+input shape; the gate is bounded. (The collision fallback's tests are in
+``test_round6``.)"""
+
+import importlib
+
+import pytest
+from pyspark.sql import functions as F
+
+from gelly_partitioning_spark import (
+    connected_components,
+    degree_count,
+    from_pairs,
+    pagerank,
+    triangle_count,
+    triangle_count_long_pairs,
+)
+
+st = importlib.import_module("gelly_partitioning_spark.single_task")
+# the package re-exports the functions under the module names
+tcm = importlib.import_module("gelly_partitioning_spark.algorithms.triangle_count")
+
+
+def _cached(df):
+    """Cached and materialized, like the engine's real inputs: a frame
+    built from a Python list carries no size statistics until then, and
+    the gate's stats pre-check skips it."""
+    df = df.cache()
+    df.count()
+    return df
+
+
+def _long_pairs(g):
+    return g.select(F.col(g.columns[0]).cast("long"), F.col(g.columns[1]).cast("long"))
+
+
+ALGOS = {
+    "pagerank": lambda g, **kw: {
+        r["id"]: r["rank"]
+        for r in pagerank(g, fixed_iterations=10, threshold=2, **kw).collect()
+    },
+    "cc": lambda g, **kw: {
+        r["id"]: r["component"] for r in connected_components(g, threshold=2, **kw).collect()
+    },
+    "degree": lambda g, **kw: {
+        r["id"]: r["degree"] for r in degree_count(g, threshold=2, **kw).collect()
+    },
+    "triangle_count": lambda g, **kw: triangle_count(g, **kw).first()["triangles"],
+    "triangle_count_long_pairs": lambda g, **kw: triangle_count_long_pairs(
+        _long_pairs(g), **kw
+    ).first()["triangles"],
+}
+
+GRAPHS = {
+    "hub_graph": lambda spark, request: request.getfixturevalue("hub_graph"),
+    "cc_graph": lambda spark, request: request.getfixturevalue("cc_graph"),
+    "tri_graph": lambda spark, request: request.getfixturevalue("tri_graph"),
+    "dups_self_loops": lambda spark, request: _cached(from_pairs(
+        spark, [(1, 2), (2, 1), (1, 1), (2, 3), (3, 1), (3, 3), (2, 3), (3, 4), (4, 4)]
+    )),
+    # long ids, negative ones included; two triangles
+    "numeric_ids": lambda spark, request: _cached(spark.createDataFrame(
+        [(-5, -2), (-2, -7), (-7, -5), (-5, 8), (8, -2), (100, 20)], "src long, dst long"
+    )),
+    "null_endpoint": lambda spark, request: _cached(spark.createDataFrame(
+        [("1", "2"), ("1", "3"), ("1", None), ("2", "3"), (None, "4"), ("3", "4")],
+        "src string, dst string",
+    )),
+}
+
+
+@pytest.fixture
+def tier_runs(monkeypatch):
+    """One entry per time the single-task runner was entered."""
+    calls, orig = [], st.run
+    monkeypatch.setattr(st, "run", lambda *a, **k: calls.append(1) or orig(*a, **k))
+    return calls
+
+
+@pytest.fixture
+def gate_rows(monkeypatch):
+    """Every row count a single-task gate compared with its budget."""
+    seen, orig = [], st.admits
+    monkeypatch.setattr(st, "admits", lambda rows, *a: seen.append(rows) or orig(rows, *a))
+    return seen
+
+
+def _assert_same(algo, got, want):
+    # exact for the integer algorithms, 1e-9 for PageRank
+    assert got == (pytest.approx(want, abs=1e-9) if algo == "pagerank" else want)
+
+
+@pytest.mark.parametrize("graph", list(GRAPHS))
+@pytest.mark.parametrize("algo", list(ALGOS))
+def test_tier_matches_disabled_tier(spark, request, tier_runs, algo, graph):
+    g = GRAPHS[graph](spark, request)
+    want = ALGOS[algo](g, single_task_budget_bytes=0)
+    assert not tier_runs
+    got = ALGOS[algo](g)
+    assert len(tier_runs) == 1  # the tier ran, and only once
+    _assert_same(algo, got, want)
+
+
+def test_null_endpoint_dropped_on_every_rung(spark, tier_runs):
+    # an edge with a null endpoint names no vertex: every rung answers as
+    # if it were absent, so the ranks still sum to 1
+    nul = _cached(spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("a", None), ("b", "c"), ("c", "d")],
+        "src string, dst string",
+    ))
+    want = ALGOS["pagerank"](nul.dropna(), single_task_budget_bytes=0)
+    assert abs(sum(want.values()) - 1.0) < 1e-12
+    for kw in ({}, {"single_task_budget_bytes": 0}, {"broadcast_threshold_vertices": 0}):
+        _assert_same("pagerank", ALGOS["pagerank"](nul, **kw), want)
+    assert len(tier_runs) == 1
+
+
+@pytest.mark.parametrize("numeric", [False, True])
+def test_cc_single_task_numeric_ids(spark, tier_runs, numeric):
+    # numeric order and lexicographic order disagree on these ids
+    # (min(7,10,3) = 3 numerically; min("10","3","7") = "10" as strings),
+    # so this pins the tier's order-rank construction for both flavors
+    g = _cached(from_pairs(spark, [(10, 7), (7, 3), (100, 20)]))
+
+    def run(**kw):
+        return {
+            r["id"]: r["component"]
+            for r in connected_components(g, split=False, numeric_ids=numeric, **kw).collect()
+        }
+
+    local = run()
+    assert local == run(single_task_budget_bytes=0)
+    assert len(tier_runs) == 1
+    assert local["7"] == ("3" if numeric else "10")
+    assert local["100"] == ("20" if numeric else "100")
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "cc", "degree"])
+def test_gate_is_bounded(spark, monkeypatch, tier_runs, gate_rows, algo):
+    # an underestimated stats hint (here: none at all) must not buy a full
+    # scan: the gate counts at most budget + 1 rows, then declines
+    module = {"cc": "connected_components"}.get(algo, algo)
+    row_bytes = 2 * importlib.import_module(  # per edge: two rows
+        f"gelly_partitioning_spark.algorithms.{module}"
+    )._SINGLE_TASK_ROW_BYTES
+    # 1,000 edges: a forest of 37 stars, so the distributed runs are short
+    g = spark.range(1000).select(
+        (F.col("id") % 37).cast("string").alias("src"),
+        (F.col("id") + 100).cast("string").alias("dst"),
+    )
+    monkeypatch.setattr(st, "plan_size_hint_bytes", lambda df: None)
+    got = ALGOS[algo](g, single_task_budget_bytes=10 * row_bytes)
+    assert gate_rows == [11] and not tier_runs
+    _assert_same(algo, got, ALGOS[algo](g, single_task_budget_bytes=0))
+
+
+def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
+    # every edge 4x: the raw multiset (36 rows) is over budget, the
+    # distinct canonical set (9 edges) is not — the generic pipeline's
+    # tier runs on the caller's budget, once, and no function recurses
+    from .conftest import TRI_EDGES, TRI_GOLDEN
+
+    raw = _cached(spark.createDataFrame(TRI_EDGES * 4, "s long, d long"))
+    budget = 2 * len(TRI_EDGES) * tcm._SINGLE_TASK_ROW_BYTES  # 18 pair rows
+    got = triangle_count_long_pairs(raw, single_task_budget_bytes=budget)
+    assert got.first()["triangles"] == TRI_GOLDEN
+    # the raw gate counted 18 + 1 rows and declined; the canonical set's
+    # 9 edges were admitted
+    assert gate_rows == [19, len(TRI_EDGES)] and len(tier_runs) == 1
+
+
+def test_triangle_core_close_methods_agree(monkeypatch):
+    # the in-task close picks bitmap vs searchsorted from the exact
+    # vertex count; both must count identically (monkeypatching the cap
+    # works here because the core runs in-process, not on a worker)
+    import numpy as np
+
+    s, d = np.random.default_rng(7).integers(0, 500, (2, 20000))
+    keys = np.unique(np.minimum(s, d) * 500 + np.maximum(s, d))  # canonical, deduped
+    lo, hi = keys // 500, keys % 500
+    lo, hi = lo[lo != hi], hi[lo != hi]
+    bitmap = tcm._count_canonical_pairs(np, lo, hi)
+    monkeypatch.setattr(tcm, "_BITMAP_CAP_BYTES", 0)
+    searchsorted = tcm._count_canonical_pairs(np, lo, hi)
+    assert bitmap == searchsorted > 0
