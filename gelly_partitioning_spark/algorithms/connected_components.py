@@ -36,20 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .. import single_task
+from .. import distributed, single_task
 from ..graph import normalize_edges, undirected
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
-from ..splitting import split_graph
-from ..superstep import (
-    CHANGED,
-    DEFAULT_BROADCAST_STATE_BUDGET,
-    SuperstepRunner,
-    checkpoint_static,
-    checkpoint_static_sized,
-    data_fingerprint,
-    static_scan_partitions,
-    use_broadcast_state,
-)
+from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
 ACTIVE = "_active"
 
@@ -148,7 +138,6 @@ def connected_components(
                 "component semantics are defined on original ids, not "
                 "xxhash64 encodings"
             )
-        spark = prepared.edges.sparkSession
         sub = prepared.sub_deg.select(F.col("src").alias("id"), "tag").cache()
         e = prepared.edges.select("src", "dst_tag").cache()
         init = (
@@ -163,7 +152,6 @@ def connected_components(
         use_broadcast = False  # the bucketed layout IS the salted-scatter path
     else:
         edges = normalize_edges(edges)
-        spark = edges.sparkSession
 
         if runner is None and broadcast_threshold_vertices is None:
             # the single-task rung (single_task.py); callers that pass a
@@ -183,46 +171,19 @@ def connected_components(
                 if out is not None:
                     return out
 
-        # one probe job over the DIRECTED edges: routing-table row count
-        # and vertex count (feeds the broadcast-vs-salted decision; CC's
-        # distributed paths never hash-key vertices — min-id semantics
-        # live on original ids — so no injectivity column is needed here
-        # since the in-task tier check above took that role)
-        probe = (
-            edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-            .agg(
-                F.count("*").alias("er"),
-                F.countDistinct("tag").alias("nt"),
-            )
-            .first()
-        )
-        n, e_rows = int(probe["nt"]), int(probe["er"])
-
-        # vertex table + degrees (for sizing and, on the salted path, the
-        # split fan-out) without materializing a serialized cache of the
-        # 2|E| expansion just to aggregate it (guide §5)
-        deg_str = (
-            edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-            .groupBy("tag")
-            .agg(F.count("*").cast("long").alias("degree"))
-            .localCheckpoint(eager=True)
-        )
-        init = deg_str.select(
+        # the vertex/degree table (CC's distributed paths never hash-key
+        # vertices: min-id semantics live on original ids)
+        vt = distributed.vertex_table(edges)
+        n, e_rows = vt.n, vt.e_rows
+        init = vt.degrees.select(
             "tag", F.col("tag").cast(comp_t).alias("component"), F.lit(True).alias(ACTIVE)
         )
-
-        # broadcast-state scatter when the state fits a per-superstep
-        # broadcast BYTE budget
-        use_broadcast = use_broadcast_state(
+        use_broadcast = distributed.use_broadcast_state(
             n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
         )
         if use_broadcast:
-            # Fast path (guide §2.4): broadcast-mode CC scatters on the
-            # ORIGINAL src tag and gathers by the original dst tag, so
-            # sub-vertex routing is physically irrelevant — the scatter
-            # table is the undirected edge set itself plus one SELF row
-            # per vertex. The self row carries the vertex's own old
-            # component through the same join+aggregation that gathers
+            # One SELF row per vertex carries the vertex's own old
+            # component through the same join + aggregation that gathers
             # its messages, so the state is referenced exactly ONCE per
             # superstep (no second vertex-sized join; see pagerank.py).
             #
@@ -238,16 +199,13 @@ def connected_components(
             from pyspark.sql import Window
 
             order_col = F.col("tag").cast("long") if numeric_ids else F.col("tag")
-            rank_dict = deg_str.select(
+            rank_dict = vt.degrees.select(
                 "tag",
                 F.row_number().over(Window.orderBy(order_col)).cast("long").alias("r"),
             ).localCheckpoint(eager=True)
-            # coalesce: byte-sized partitions for the per-superstep scan
-            # (guide §2.2; see static_scan_partitions).
-            # plain plan: the expansion is consumed exactly once here
-            und = undirected(edges)
-            e_raw = (
-                und.join(
+            e = distributed.broadcast_table(
+                undirected(edges)
+                .join(
                     F.broadcast(
                         rank_dict.select(F.col("tag").alias("src"), F.col("r").alias("rs"))
                     ),
@@ -270,12 +228,8 @@ def connected_components(
                         F.col("r").alias("dst_tag"),
                         F.lit(True).alias("self"),
                     )
-                )
-            )
-            e = checkpoint_static_sized(
-                e_raw.coalesce(static_scan_partitions(e_rows + n, e_raw.schema, spark)),
+                ),
                 e_rows + n,
-                spark,
             )
             init = rank_dict.select(
                 F.col("r").alias("tag"),
@@ -283,26 +237,9 @@ def connected_components(
                 F.lit(True).alias(ACTIVE),
             )
         else:
-            # salted path: the expansion feeds the split rewrite AND the
-            # sub-vertex derivation — share one lazy cache
-            und = checkpoint_static(undirected(edges), eager=False)
-            sg = split_graph(
-                edges,
-                threshold=threshold if split else 2**62,
-                alpha=alpha,
-                level=level,
-                mode=mode,
-                degree_df=deg_str.select(F.col("tag").alias("id"), "degree"),
-                und_df=und,
-            )
+            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
             sub = sg.vertices.localCheckpoint(eager=True)  # static (id, tag)
-            # repartition(src): reused by every superstep's scatter join;
-            # storage level decided once from the known row count
-            e = checkpoint_static_sized(
-                sg.edges.select("src", "dst_tag").repartition(F.col("src")),
-                e_rows,
-                spark,
-            )
+            e = distributed.salted_table(sg.edges.select("src", "dst_tag"), e_rows)
 
     def step(state: DataFrame, i: int):
         if use_broadcast:
@@ -340,22 +277,17 @@ def connected_components(
             improved.alias(CHANGED),
         )
 
-    if runner is None:
-        runner = SuperstepRunner(spark)
-        runner.batch_size = superstep_batch
-    if not use_broadcast:
-        # the salted step references its input state twice (scatter +
-        # old-value join): chained batches need per-intermediate lineage
-        # truncation or the composed plan doubles per superstep
-        runner.chain_checkpoint = True
-    if runner.fingerprint is None:
-        fp = (
-            f"connected_components:v2:split={split}:threshold={threshold}:"
-            f"alpha={alpha}:level={level}:mode={mode}:numeric={numeric_ids}"
-        )
-        if runner.checkpoint_dir:
-            fp += f":data[{data_fingerprint(e, *e.columns)}]"
-        runner.fingerprint = fp
+    # a caller-supplied runner keeps its own batch_size (per-superstep
+    # metrics intact); the salted step references its input state twice
+    # (scatter + old-value join)
+    runner = distributed.wire_runner(
+        runner,
+        f"connected_components:v2:split={split}:threshold={threshold}:"
+        f"alpha={alpha}:level={level}:mode={mode}:numeric={numeric_ids}",
+        e,
+        batch=superstep_batch if runner is None else 1,
+        chain=not use_broadcast,
+    )
     final = runner.run(init, step, max_iterations)
     if use_broadcast:
         # decode the rank encoding: two vertex-sized broadcast joins, then

@@ -14,10 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
-from ..graph import degrees, normalize_edges, undirected
+from ..graph import degrees, normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..splitting import merge_by_tag, split_graph
-from ..superstep import checkpoint_static
 
 # Single-task working set per exploded endpoint row (the id string plus
 # the hash-table working set); two rows per edge.
@@ -39,8 +38,8 @@ def degree_count(
     shape derived the split fan-out table from the shared undirected
     cache in a way that made BOTH broadcast fan-out builds re-run the
     full degree aggregation (the two BroadcastExchange subtrees each
-    carried their own groupBy in the plan). The distributed path now
-    derives ONE lazily-checkpointed degree table from the same lazily-
+    carried their own groupBy in the plan). ``split_graph``'s defaults
+    now derive ONE lazily-checkpointed degree table from the same lazily-
     checkpointed undirected expansion — each is computed exactly once
     (und on the first fan-out build, deg alongside it; the second fan-out
     broadcast and the rewrite join read the caches). Below
@@ -75,21 +74,7 @@ def degree_count(
         )
     if not split:
         return degrees(edges)
-    und = checkpoint_static(undirected(edges), eager=False)
-    deg = (
-        und.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").cast("long").alias("degree"))
-        .localCheckpoint(eager=False)
-    )
-    sg = split_graph(
-        edges,
-        threshold=threshold,
-        alpha=alpha,
-        level=level,
-        mode=mode,
-        degree_df=deg,
-        und_df=und,
-    )
+    sg = split_graph(edges, threshold=threshold, alpha=alpha, level=level, mode=mode)
     partial = sg.edges.groupBy("src", "src_tag").agg(F.count("*").alias("pdeg"))
     merged = merge_by_tag(
         partial.select(F.col("src_tag").alias("tag"), "pdeg"),

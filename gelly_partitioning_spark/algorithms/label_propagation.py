@@ -46,18 +46,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import distributed
 from ..graph import normalize_edges, undirected
-from ..splitting import split_graph
-from ..superstep import (
-    CHANGED,
-    DEFAULT_BROADCAST_STATE_BUDGET,
-    SuperstepRunner,
-    checkpoint_static,
-    checkpoint_static_sized,
-    data_fingerprint,
-    fits_broadcast_budget,
-    static_scan_partitions,
-)
+from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
 
 ACTIVE = "_active"
@@ -112,7 +103,6 @@ def label_propagation(
                 "(save_prepared_graph(..., use_long_ids=False)): initial "
                 "labels derive from original ids, not xxhash64 encodings"
             )
-        spark = prepared.edges.sparkSession
         sub = prepared.sub_deg.select(F.col("src").alias("id"), "tag").cache()
         init = sub.select("tag").distinct().select(*init_cols).localCheckpoint(eager=True)
         n = init.count()
@@ -122,65 +112,23 @@ def label_propagation(
         e_rows = e.count()
     else:
         edges = normalize_edges(edges)
-        spark = edges.sparkSession
-        # one pass over the DIRECTED edges (out+in ≡ the undirected
-        # groupBy): vertex/degree table shared by init, the broadcast
-        # decision, the split fan-out and the storage-level sizing
-        # (guide §1.2/§2.4) — no serialized cache of the 2|E| expansion
-        # just to aggregate it (guide §5)
-        deg_str = (
-            edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-            .groupBy("tag")
-            .agg(F.count("*").cast("long").alias("degree"))
-            .localCheckpoint(eager=True)
+        vt = distributed.vertex_table(edges)
+        n, e_rows = vt.n, vt.e_rows
+        init = vt.degrees.select(*init_cols)
+        use_broadcast = distributed.use_broadcast_state(
+            n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
         )
-        row = deg_str.agg(F.count("*").alias("n"), F.sum("degree").alias("er")).first()
-        n, e_rows = int(row["n"]), int(row["er"] or 0)
-        init = deg_str.select(*init_cols)
-
-        if broadcast_threshold_vertices is not None:
-            use_broadcast = n <= broadcast_threshold_vertices
-        else:
-            use_broadcast = fits_broadcast_budget(
-                n, init.schema, broadcast_state_budget_bytes
-            )
         if use_broadcast:
-            # Fast path (guide §2.4): broadcast-mode LP scatters on the
-            # ORIGINAL src tag and gathers by the original dst tag, so
-            # sub-vertex routing is physically irrelevant — the scatter
-            # table is the undirected edge set itself, built in one pass
-            # with zero shuffles at a byte-sized partition count.
-            # plain plan: the expansion is consumed exactly once here
-            und = undirected(edges)
-            e_raw = und.select(
-                F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"), "w"
-            )
-            e = checkpoint_static_sized(
-                e_raw.coalesce(static_scan_partitions(e_rows, e_raw.schema, spark)),
+            e = distributed.broadcast_table(
+                undirected(edges).select(
+                    F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"), "w"
+                ),
                 e_rows,
-                spark,
             )
         else:
-            # salted path: the expansion feeds the split rewrite AND the
-            # sub-vertex derivation — share one lazy cache
-            und = checkpoint_static(undirected(edges), eager=False)
-            sg = split_graph(
-                edges,
-                threshold=threshold if split else 2**62,
-                alpha=alpha,
-                level=level,
-                mode=mode,
-                degree_df=deg_str.select(F.col("tag").alias("id"), "degree"),
-                und_df=und,
-            )
+            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
             sub = sg.vertices.localCheckpoint(eager=True)
-            # repartition(src): reused by every superstep's scatter join;
-            # storage level decided once from the known row count
-            e = checkpoint_static_sized(
-                sg.edges.select("src", "dst_tag", "w").repartition(F.col("src")),
-                e_rows,
-                spark,
-            )
+            e = distributed.salted_table(sg.edges.select("src", "dst_tag", "w"), e_rows)
     avg_deg = max(1.0, e_rows / max(n, 1))
 
     def _messages(state: DataFrame, frontier: DataFrame | None) -> DataFrame:
@@ -291,15 +239,19 @@ def label_propagation(
             )
         )
 
-    runner = runner or SuperstepRunner(spark)
-    if superstep_batch != 1 and runner.batch_size == 1:
-        runner.batch_size = superstep_batch
     # the LP step references its input state twice in BOTH modes (scatter +
-    # keep-old-value join): chained batches need per-intermediate lineage
-    # truncation or the composed plan doubles per superstep (the r6 auto-K
-    # model legitimately picks K up to 16 on fixed-cost-dominated graphs,
-    # and 2^16 plan copies hang Catalyst's single-threaded planner)
-    runner.chain_checkpoint = True
+    # keep-old-value join), so chained batches truncate every intermediate
+    # (the r6 auto-K model legitimately picks K up to 16 on fixed-cost-
+    # dominated graphs, and 2^16 plan copies hang Catalyst's single-threaded
+    # planner)
+    runner = distributed.wire_runner(
+        runner,
+        f"label_propagation:v3:delta={delta}:split={split}:"
+        f"threshold={threshold}:alpha={alpha}:level={level}:mode={mode}",
+        e,
+        batch=superstep_batch,
+        chain=True,
+    )
     if workset:
         # micro-batching × delta iteration (VERDICT r3 #5): full-scatter
         # supersteps batch freely (the decision is frozen per batch —
@@ -312,13 +264,5 @@ def label_propagation(
         # broadcast could blow up). batch_size may be AUTO_BATCH; the
         # runner resolves it after measuring the first superstep.
         runner.batch_size_fn = lambda: 1 if _delta_now() else runner.batch_size
-    if runner.fingerprint is None:
-        fp = (
-            f"label_propagation:v3:delta={delta}:split={split}:"
-            f"threshold={threshold}:alpha={alpha}:level={level}:mode={mode}"
-        )
-        if runner.checkpoint_dir:
-            fp += f":data[{data_fingerprint(e, *e.columns)}]"
-        runner.fingerprint = fp
     final = runner.run(init, step, max_iterations)
     return final.select(F.col("tag").alias("id"), "label")

@@ -30,20 +30,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .. import single_task
+from .. import distributed, single_task
 from ..encoding import IdCollisionError, decode, encode_split_graph
 from ..graph import normalize_edges, undirected
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
-from ..splitting import split_graph
 from ..superstep import (
     CHANGED,
     DEFAULT_BROADCAST_STATE_BUDGET,
     SuperstepRunner,
     checkpoint_static,
-    checkpoint_static_sized,
-    data_fingerprint,
-    static_scan_partitions,
-    use_broadcast_state,
 )
 
 # Single-task working set per undirected row: two int64 key columns plus
@@ -135,7 +130,6 @@ def pagerank(
     use_long_ids`` are baked into the persisted layout and ignored here.
     """
     if prepared is not None:
-        spark = prepared.edges.sparkSession
         # bucketed tables: the scan's HashPartitioning(src) replaces the
         # repartition+localCheckpoint below; cache keeps re-scans in memory
         # (InMemoryRelation preserves the bucketed partitioning)
@@ -147,7 +141,7 @@ def pagerank(
         # same scatter-strategy decision as the fresh path (unchanged from
         # r5: a prepared graph may still run broadcast-state scatter when
         # the state fits the per-superstep broadcast budget)
-        use_broadcast = use_broadcast_state(
+        use_broadcast = distributed.use_broadcast_state(
             n,
             deg.select("tag", F.lit(1.0).alias("rank")).schema,
             broadcast_threshold_vertices,
@@ -161,7 +155,6 @@ def pagerank(
             )
     else:
         edges = normalize_edges(edges)
-        spark = edges.sparkSession
 
         if (
             use_long_ids
@@ -188,42 +181,18 @@ def pagerank(
                 if out is not None:
                     return out
 
-        # one probe job over the DIRECTED edges: routing-table row count
-        # (out+in ≡ the undirected expansion), vertex count, and the
-        # tag-level xxhash64 injectivity check — feeds the scatter-
-        # strategy decision AND replaces the r5 per-structure aggs
-        probe = (
-            edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-            .agg(
-                F.count("*").alias("er"),
-                F.countDistinct("tag").alias("nt"),
-                F.countDistinct(F.xxhash64("tag")).alias("ht"),
-            )
-            .first()
-        )
-        n, e_rows = int(probe["nt"]), int(probe["er"])
-        tags_injective = probe["nt"] == probe["ht"]
-
-        # Undirected degree per ORIGINAL vertex (= per tag), aggregated
-        # from the DIRECTED edges (out+in ≡ the undirected groupBy): one
-        # pass, shared by the broadcast fast path, the split fan-out and
-        # the scatter tables (guide §2.4) — and no serialized cache of
-        # the 2|E| undirected expansion just to aggregate it (measured
-        # ~1 s of pure cache-write at sf0.1; guide §5).
-        deg_str = (
-            edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-            .groupBy("tag")
-            .agg(F.count("*").cast("double").alias("deg"))
-            .localCheckpoint(eager=True)
-        )
+        # the vertex/degree table, shared by the rung decision, the
+        # broadcast scatter table and the split fan-out; its agg also
+        # checks that xxhash64 is injective on the tags
+        vt = distributed.vertex_table(edges, check_hashes=use_long_ids)
+        n, e_rows = vt.n, vt.e_rows
+        deg_str = vt.degrees.select("tag", F.col("degree").cast("double").alias("deg"))
 
         tag_dict = None
-        if use_long_ids and not tags_injective:
-            # hash ids collide on this vertex set: fall back to the exact
-            # string path (checked above in the probe job; the salted path
-            # below additionally re-checks sub-vertex ids via
-            # encode_split_graph)
-            use_long_ids = False
+        # hash ids collide on this vertex set: fall back to the exact
+        # string path (the salted path below additionally re-checks
+        # sub-vertex ids via encode_split_graph)
+        use_long_ids = use_long_ids and vt.injective
         if use_long_ids:
             tag_dict = deg_str.select(
                 F.xxhash64("tag").alias("tag"), F.col("tag").alias("tag_str")
@@ -232,19 +201,12 @@ def pagerank(
         else:
             deg = deg_str
 
-        # Two scatter strategies:
-        # - broadcast-state: the rank table (~16 B/vertex) is broadcast and
-        #   map-joined against a static (dst_tag, tag, deg) edge table —
-        #   the 2|E| side never shuffles; the only shuffle per superstep is
-        #   the V-sized gather partials. Local/medium clusters.
-        # - salted shuffle (V too big to re-broadcast every superstep):
-        #   sub-vertex routing (the reference's Split-Merge) with
-        #   shuffle_hash hints (build sides are vertex-sized; SMJ would
-        #   re-sort the edge side each superstep — measured 2-3x slower in
-        #   superstep_tune.py).
-        # byte budget, not row count: the state is re-broadcast EVERY
-        # superstep, so it must be a small fraction of JVM heap memory
-        use_broadcast = use_broadcast_state(
+        # broadcast-state: the rank table (~16 B/vertex) is broadcast and
+        # map-joined against a static (dst_tag, tag, deg) edge table, so
+        # the 2|E| side never shuffles. Salted: sub-vertex routing (the
+        # reference's Split-Merge) with shuffle_hash hints (build sides are
+        # vertex-sized; SMJ would re-sort the edge side each superstep).
+        use_broadcast = distributed.use_broadcast_state(
             n,
             deg.select("tag", F.lit(1.0).alias("rank")).schema,
             broadcast_threshold_vertices,
@@ -252,57 +214,17 @@ def pagerank(
         )
 
         if use_broadcast:
-            # Fast path (guide §2.4/§1.2): in broadcast mode the scatter
-            # joins on the ORIGINAL tag and the gather groups by the
-            # original dst tag, so sub-vertex routing is physically
-            # irrelevant — the static (dst_tag, tag, deg) table is the
-            # undirected edge set itself with the (vertex-sized,
-            # broadcastable) degree table attached. Identical multiset to
-            # the split+join construction, built in ONE pass with ZERO
-            # shuffles, at the final storage level (no promote re-pass).
-            key = (lambda col: F.xxhash64(col)) if use_long_ids else F.col
-            # plain plan, not a cached checkpoint: the expansion is
-            # consumed exactly ONCE (this build) — a lazy serialized
-            # cache would be written and read back for a single consumer
-            und = undirected(edges)
-            # coalesce to a byte-sized partition count: the union of the
-            # undirected expansion (2x the input's partitions) + self rows
-            # otherwise leaves ~3x more, tiny, partitions than the data
-            # needs, and the per-task overhead of re-scanning them EVERY
-            # superstep dominates (measured at sf0.1: 1.5 s/superstep at
-            # ~190 partitions, 0.53-0.87 at 64, 0.27 at 8). coalesce is
-            # narrow (no shuffle) and static_scan_partitions scales with
-            # input bytes + session parallelism, not a constant
-            # (guide §2.2: fewer, larger partitions on the per-superstep
-            # side).
-            e2_raw = (
-                und.select(key("dst").alias("dst_tag"), key("src").alias("tag"))
+            key = F.xxhash64 if use_long_ids else F.col
+            e2 = distributed.broadcast_table(
+                undirected(edges)
+                .select(key("dst").alias("dst_tag"), key("src").alias("tag"))
                 .join(F.broadcast(deg), "tag")
                 .select("dst_tag", "tag", "deg")
-                .unionByName(_self_rows(deg))
-            )
-            e2 = checkpoint_static_sized(
-                e2_raw.coalesce(
-                    static_scan_partitions(e_rows + n, e2_raw.schema, spark)
-                ),
+                .unionByName(_self_rows(deg)),
                 e_rows + n,
-                spark,
             )
         else:
-            # salted path: the expansion feeds the split rewrite AND the
-            # sub-vertex derivation — share one lazy cache
-            und = checkpoint_static(undirected(edges), eager=False)
-            sg = split_graph(
-                edges,
-                threshold=threshold if split else 2**62,
-                alpha=alpha,
-                level=level,
-                mode=mode,
-                degree_df=deg_str.select(
-                    F.col("tag").alias("id"), F.col("deg").cast("long").alias("degree")
-                ),
-                und_df=und,
-            )
+            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
             if use_long_ids:
                 try:
                     eg = encode_split_graph(sg)
@@ -314,16 +236,8 @@ def pagerank(
                 tag_dict = None
                 deg = deg_str
 
-            # Static per-superstep inputs. Pre-hash-partition the routing
-            # edges by the scatter-join key and localCheckpoint: LogicalRDD
-            # preserves the partitioning, so every superstep's edge-side
-            # exchange is elided — only the (vertex-sized) rank table
-            # shuffles per iteration. Storage level decided once from the
-            # known row count (no promote re-pass).
             sub = sub_raw.localCheckpoint(eager=True)
-            e = checkpoint_static_sized(
-                e_raw.select("src", "dst_tag").repartition(F.col("src")), e_rows, spark
-            )
+            e = distributed.salted_table(e_raw.select("src", "dst_tag"), e_rows)
             # contribution weight rank/deg travels with each sub-vertex
             sub_deg = (
                 sub.join(deg.withColumnRenamed("tag", "t"), sub["tag"] == F.col("t"))
@@ -376,31 +290,19 @@ def pagerank(
             cols.append((F.abs(new_rank - F.col("rank")) > tol).alias(CHANGED))
         return state.join(msgs.hint("shuffle_hash"), "tag", "left").select(*cols)
 
-    runner = runner or SuperstepRunner(spark)
     # superstep_batch=AUTO_BATCH (0) → the runner measures superstep 1 and
-    # picks K itself (choose_batch_size)
-    if superstep_batch != 1 and runner.batch_size == 1:
-        runner.batch_size = superstep_batch
-    if not use_broadcast:
-        # the salted step references its input state twice (scatter +
-        # old-value join): chained batches need per-intermediate lineage
-        # truncation or the composed plan doubles per superstep
-        runner.chain_checkpoint = True
-    if runner.fingerprint is None:
-        fp = (
-            f"pagerank:v2:damping={damping}:tol={tol}:fixed={fixed_iterations}:"
-            f"split={split}:threshold={threshold}:alpha={alpha}:level={level}:mode={mode}"
-        )
-        if runner.checkpoint_dir:
-            # input identity: resuming this dir against a different edge
-            # table must start fresh, not load matching-schema stale state
-            # fingerprint the table the loop actually consumes (broadcast
-            # mode has no salted routing table)
-            if use_broadcast:
-                fp += f":data[{data_fingerprint(e2, 'dst_tag', 'tag')}]"
-            else:
-                fp += f":data[{data_fingerprint(e, 'src', 'dst_tag')}]"
-        runner.fingerprint = fp
+    # picks K itself; the salted step references its input state twice
+    # (scatter + old-value join); the fingerprint's data identity is the
+    # table the loop actually consumes
+    runner = distributed.wire_runner(
+        runner,
+        f"pagerank:v2:damping={damping}:tol={tol}:fixed={fixed_iterations}:"
+        f"split={split}:threshold={threshold}:alpha={alpha}:level={level}:mode={mode}",
+        e2 if use_broadcast else e,
+        ("dst_tag", "tag") if use_broadcast else None,
+        batch=superstep_batch,
+        chain=not use_broadcast,
+    )
     final = runner.run(init, step, iters)
     if tag_dict is not None:
         final = decode(final, tag_dict, col="tag")

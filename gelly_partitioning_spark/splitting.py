@@ -97,7 +97,6 @@ def split_graph(
     level: int = DEFAULT_LEVEL,
     mode: str = "flat",
     degree_df: DataFrame | None = None,
-    und_df: DataFrame | None = None,
 ) -> SplitGraph:
     """Build the split graph from a *directed* edge DataFrame.
 
@@ -122,10 +121,7 @@ def split_graph(
     # One shared, lazily-materialized undirected set: the degree pass and
     # the rewrite pass would otherwise each re-run the upstream scan +
     # distinct (the explain audit showed the subtree duplicated).
-    # ``und_df`` lets a caller that already built (and cached) the
-    # undirected expansion pass it in instead of materializing a second
-    # copy (guide §1.2: no duplicate passes).
-    und = und_df if und_df is not None else checkpoint_static(undirected(edges), eager=False)
+    und = checkpoint_static(undirected(edges), eager=False)
     if degree_df is None:
         # lazy vertex-sized cache: the derived degree table feeds BOTH
         # broadcast fan-out builds (and the auto-threshold agg) — without

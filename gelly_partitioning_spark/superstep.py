@@ -83,18 +83,6 @@ def fits_broadcast_budget(
     return n_rows * estimate_row_bytes(schema) <= budget_bytes
 
 
-def use_broadcast_state(
-    n_vertices: int, schema, threshold_vertices: int | None, budget_bytes: int
-) -> bool:
-    """Broadcast-state vs salted scatter: a caller's vertex-count pin
-    (``broadcast_threshold_vertices``) wins; otherwise the state must fit
-    the per-superstep broadcast BYTE budget (row counts are the wrong
-    unit, VERDICT r1 #6)."""
-    if threshold_vertices is not None:
-        return n_vertices <= threshold_vertices
-    return fits_broadcast_budget(n_vertices, schema, budget_bytes)
-
-
 # batch_size sentinel: measure the first superstep (run with k=1), then
 # pick K so one materializing action carries ~AUTO_BATCH_TARGET_SEC of
 # supersteps — amortizing the fixed per-action driver cost without pushing
@@ -145,10 +133,8 @@ def checkpoint_static(df: DataFrame, eager: bool = True) -> DataFrame:
     deserialized blocks would have fit in memory anyway. 'ser' stays the
     default because the target regime is the one where they don't (at
     10^11 edges nothing fits deserialized, and the overflow pathology is
-    20+ CPU-min/task vs a bounded 1.6x here); operators in the mid
-    regime set GPS_STATIC_STORAGE=deser."""
-    if os.environ.get("GPS_STATIC_STORAGE", "ser") == "deser":
-        return df.localCheckpoint(eager=eager)
+    20+ CPU-min/task vs a bounded 1.6x here); ``checkpoint_static_sized``
+    picks the deserialized layout where a known row count says it fits."""
     from pyspark import StorageLevel
 
     return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
@@ -163,11 +149,8 @@ def checkpoint_static_sized(df: DataFrame, n_rows: int, spark: SparkSession) -> 
     deserialization per scan, per superstep (measured 1.4-1.6x per
     superstep at 37M edges / 32g heap). Deciding before the first
     materialization costs no second pass over the table (guide §1.2).
-    ``GPS_STATIC_STORAGE`` still pins the mode either way.
     """
-    if os.environ.get("GPS_STATIC_STORAGE") is None and deserialized_cache_fits(
-        n_rows, df.schema, spark
-    ):
+    if deserialized_cache_fits(n_rows, df.schema, spark):
         return df.localCheckpoint(eager=True)  # deserialized default level
     return checkpoint_static(df)
 

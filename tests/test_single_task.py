@@ -1,7 +1,7 @@
 """The single-task rung (``gelly_partitioning_spark.single_task``): every
 algorithm that has it answers exactly as with the rung disabled, on every
-input shape; the gate is bounded. (The collision fallback's tests are in
-``test_round6``.)"""
+input shape; the gate is bounded and skips an oversized input without a
+job. (The collision fallback's tests are in ``test_round6``.)"""
 
 import importlib
 
@@ -153,6 +153,29 @@ def test_gate_is_bounded(spark, monkeypatch, tier_runs, gate_rows, algo):
     got = ALGOS[algo](g, single_task_budget_bytes=10 * row_bytes)
     assert gate_rows == [11] and not tier_runs
     _assert_same(algo, got, ALGOS[algo](g, single_task_budget_bytes=0))
+
+
+def test_oversized_hint_runs_no_job(spark, monkeypatch):
+    # a stats hint far above the budget declines the rung before any
+    # Spark job: no count, no materialization
+    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1)]))
+    budget, sc = 1 << 20, spark.sparkContext
+
+    def gate_jobs(hint, group):
+        monkeypatch.setattr(st, "plan_size_hint_bytes", lambda df: hint)
+        sc.setJobGroup(group, group)
+        try:
+            copy = st.gate(g, budget, 16)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return copy, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    copy, jobs = gate_jobs(8 * budget + 1, "gate-oversized-hint")
+    assert copy is None and jobs == []
+    # the control: without a hint the same gate counts, under its group
+    copy, jobs = gate_jobs(None, "gate-no-hint")
+    assert copy is not None and jobs
+    st.release_checkpoint(copy)
 
 
 def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
