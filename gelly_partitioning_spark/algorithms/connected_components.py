@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..graph import normalize_edges, undirected
+from ..graph import normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
@@ -126,8 +126,8 @@ def connected_components(
     repartition (the bucketed scan already carries HashPartitioning(src)).
     It must be a STRING layout (``use_long_ids=False``): the component id
     is the *minimum original id*, and min over xxhash64-encoded longs
-    would elect a different representative. Always uses the salted-shuffle
-    scatter — the path the bucketed layout exists for.
+    would elect a different representative. It takes the same rung
+    decision as an edge frame.
     """
     comp_t = "long" if numeric_ids else "string"
     if prepared is not None:
@@ -138,18 +138,6 @@ def connected_components(
                 "component semantics are defined on original ids, not "
                 "xxhash64 encodings"
             )
-        sub = prepared.sub_deg.select(F.col("src").alias("id"), "tag").cache()
-        e = prepared.edges.select("src", "dst_tag").cache()
-        init = (
-            sub.select("tag")
-            .distinct()
-            .select(
-                "tag", F.col("tag").cast(comp_t).alias("component"), F.lit(True).alias(ACTIVE)
-            )
-            .localCheckpoint(eager=True)
-        )
-        n = init.count()
-        use_broadcast = False  # the bucketed layout IS the salted-scatter path
     else:
         edges = normalize_edges(edges)
 
@@ -170,76 +158,77 @@ def connected_components(
                 )
                 if out is not None:
                     return out
+    source = edges if prepared is None else prepared
 
-        # the vertex/degree table (CC's distributed paths never hash-key
-        # vertices: min-id semantics live on original ids)
-        vt = distributed.vertex_table(edges)
-        n, e_rows = vt.n, vt.e_rows
-        init = vt.degrees.select(
-            "tag", F.col("tag").cast(comp_t).alias("component"), F.lit(True).alias(ACTIVE)
-        )
-        use_broadcast = distributed.use_broadcast_state(
-            n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
-        )
-        if use_broadcast:
-            # One SELF row per vertex carries the vertex's own old
-            # component through the same join + aggregation that gathers
-            # its messages, so the state is referenced exactly ONCE per
-            # superstep (no second vertex-sized join; see pagerank.py).
-            #
-            # Order-preserving dense-rank encoding (guide §2.3: narrower
-            # types): min over ranks ≡ min over the original component
-            # order, so the per-superstep min-agg, broadcast hash and
-            # probes all run on 8-byte longs instead of strings (measured
-            # ~0.6 → ~0.35 s/superstep at sf0.1). The rank dictionary is
-            # VERTEX-sized — broadcast mode by definition means the
-            # vertex set is small, so the single window sort is cheap —
-            # and results decode through it at the end, so the emitted
-            # components are the original ids, bit-identical.
-            from pyspark.sql import Window
+    # the vertex/degree table (CC's distributed paths never hash-key
+    # vertices: min-id semantics live on original ids)
+    vt = distributed.vertex_table(source)
+    n = vt.n
+    init = vt.degrees.select(
+        "tag", F.col("tag").cast(comp_t).alias("component"), F.lit(True).alias(ACTIVE)
+    )
+    use_broadcast = distributed.use_broadcast_state(
+        n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+    )
+    if use_broadcast:
+        # One SELF row per vertex carries the vertex's own old
+        # component through the same join + aggregation that gathers
+        # its messages, so the state is referenced exactly ONCE per
+        # superstep (no second vertex-sized join; see pagerank.py).
+        #
+        # Order-preserving dense-rank encoding (guide §2.3: narrower
+        # types): min over ranks ≡ min over the original component
+        # order, so the per-superstep min-agg, broadcast hash and
+        # probes all run on 8-byte longs instead of strings (measured
+        # ~0.6 → ~0.35 s/superstep at sf0.1). The rank dictionary is
+        # VERTEX-sized — broadcast mode by definition means the
+        # vertex set is small, so the single window sort is cheap —
+        # and results decode through it at the end, so the emitted
+        # components are the original ids, bit-identical.
+        from pyspark.sql import Window
 
-            order_col = F.col("tag").cast("long") if numeric_ids else F.col("tag")
-            rank_dict = vt.degrees.select(
-                "tag",
-                F.row_number().over(Window.orderBy(order_col)).cast("long").alias("r"),
-            ).localCheckpoint(eager=True)
-            e = distributed.broadcast_table(
-                undirected(edges)
-                .join(
-                    F.broadcast(
-                        rank_dict.select(F.col("tag").alias("src"), F.col("r").alias("rs"))
-                    ),
-                    "src",
-                )
-                .join(
-                    F.broadcast(
-                        rank_dict.select(F.col("tag").alias("dst"), F.col("r").alias("rd"))
-                    ),
-                    "dst",
-                )
-                .select(
-                    F.col("rs").alias("src_tag"),
-                    F.col("rd").alias("dst_tag"),
-                    F.lit(False).alias("self"),
-                )
-                .unionByName(
-                    rank_dict.select(
-                        F.col("r").alias("src_tag"),
-                        F.col("r").alias("dst_tag"),
-                        F.lit(True).alias("self"),
-                    )
+        order_col = F.col("tag").cast("long") if numeric_ids else F.col("tag")
+        rank_dict = vt.degrees.select(
+            "tag",
+            F.row_number().over(Window.orderBy(order_col)).cast("long").alias("r"),
+        ).localCheckpoint(eager=True)
+        e = distributed.broadcast_table(
+            distributed.undirected_tags(source)
+            .join(
+                F.broadcast(
+                    rank_dict.select(F.col("tag").alias("src"), F.col("r").alias("rs"))
                 ),
-                e_rows + n,
+                "src",
             )
-            init = rank_dict.select(
-                F.col("r").alias("tag"),
-                F.col("r").alias("component"),
-                F.lit(True).alias(ACTIVE),
+            .join(
+                F.broadcast(
+                    rank_dict.select(F.col("tag").alias("dst"), F.col("r").alias("rd"))
+                ),
+                "dst",
             )
-        else:
-            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
-            sub = sg.vertices.localCheckpoint(eager=True)  # static (id, tag)
-            e = distributed.salted_table(sg.edges.select("src", "dst_tag"), e_rows)
+            .select(
+                F.col("rs").alias("src_tag"),
+                F.col("rd").alias("dst_tag"),
+                F.lit(False).alias("self"),
+            )
+            .unionByName(
+                rank_dict.select(
+                    F.col("r").alias("src_tag"),
+                    F.col("r").alias("dst_tag"),
+                    F.lit(True).alias("self"),
+                )
+            ),
+            vt.e_rows + n,
+        )
+        init = rank_dict.select(
+            F.col("r").alias("tag"),
+            F.col("r").alias("component"),
+            F.lit(True).alias(ACTIVE),
+        )
+    else:
+        e, sub, _ = distributed.salted_tables(
+            source, vt, ("src", "dst_tag"), split, threshold, alpha, level, mode
+        )
 
     def step(state: DataFrame, i: int):
         if use_broadcast:
@@ -261,9 +250,7 @@ def connected_components(
                 improved.alias(CHANGED),
             )
         act = state.filter(F.col(ACTIVE)).select("tag", "component")
-        sub_state = sub.join(act.hint("shuffle_hash"), "tag").select(
-            F.col("id").alias("src"), "component"
-        )
+        sub_state = sub.join(act.hint("shuffle_hash"), "tag").select("src", "component")
         msgs = (
             e.join(sub_state.hint("shuffle_hash"), "src")
             .groupBy(F.col("dst_tag").alias("tag"))

@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed
-from ..graph import normalize_edges, undirected
+from ..graph import normalize_edges
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
 
@@ -80,7 +80,8 @@ def label_propagation(
     repartition. It must be a STRING layout (``use_long_ids=False``):
     initial labels derive from the *original* ids (numeric value or their
     hash) — an xxhash64-encoded layout would mint different labels and
-    different tie-breaks. Always uses the salted-shuffle scatter.
+    different tie-breaks. It takes the same rung decision as an edge
+    frame.
 
     ``superstep_batch`` chains K supersteps per materializing action
     (identical results) — compatible with the workset since r4: the
@@ -96,39 +97,30 @@ def label_propagation(
         F.lit(1.0).alias("score"),
         F.lit(True).alias(ACTIVE),
     ]
-    if prepared is not None:
-        if prepared.tag_dict is not None:
-            raise ValueError(
-                "label_propagation needs a string prepared layout "
-                "(save_prepared_graph(..., use_long_ids=False)): initial "
-                "labels derive from original ids, not xxhash64 encodings"
-            )
-        sub = prepared.sub_deg.select(F.col("src").alias("id"), "tag").cache()
-        init = sub.select("tag").distinct().select(*init_cols).localCheckpoint(eager=True)
-        n = init.count()
-        use_broadcast = False
-        e = prepared.edges.cache()  # (src, dst_tag, w), bucketed by src
-        # 2|E_sub| rows — drives the delta-path affected-set budget guard
-        e_rows = e.count()
-    else:
-        edges = normalize_edges(edges)
-        vt = distributed.vertex_table(edges)
-        n, e_rows = vt.n, vt.e_rows
-        init = vt.degrees.select(*init_cols)
-        use_broadcast = distributed.use_broadcast_state(
-            n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+    if prepared is not None and prepared.tag_dict is not None:
+        raise ValueError(
+            "label_propagation needs a string prepared layout "
+            "(save_prepared_graph(..., use_long_ids=False)): initial "
+            "labels derive from original ids, not xxhash64 encodings"
         )
-        if use_broadcast:
-            e = distributed.broadcast_table(
-                undirected(edges).select(
-                    F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"), "w"
-                ),
-                e_rows,
-            )
-        else:
-            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
-            sub = sg.vertices.localCheckpoint(eager=True)
-            e = distributed.salted_table(sg.edges.select("src", "dst_tag", "w"), e_rows)
+    source = normalize_edges(edges) if prepared is None else prepared
+    vt = distributed.vertex_table(source)
+    n, e_rows = vt.n, vt.e_rows
+    init = vt.degrees.select(*init_cols)
+    use_broadcast = distributed.use_broadcast_state(
+        n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+    )
+    if use_broadcast:
+        e = distributed.broadcast_table(
+            distributed.undirected_tags(source).select(
+                F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"), "w"
+            ),
+            e_rows,
+        )
+    else:
+        e, sub, _ = distributed.salted_tables(
+            source, vt, ("src", "dst_tag", "w"), split, threshold, alpha, level, mode
+        )
     avg_deg = max(1.0, e_rows / max(n, 1))
 
     def _messages(state: DataFrame, frontier: DataFrame | None) -> DataFrame:
@@ -156,9 +148,7 @@ def label_propagation(
                 (F.col("score") * F.col("w")).alias("ms"),
             )
         if frontier is not None:
-            f_subs = sub.join(frontier.hint("shuffle_hash"), "tag").select(
-                F.col("id").alias("src")
-            )
+            f_subs = sub.join(frontier.hint("shuffle_hash"), "tag").select("src")
             nbrs = e.join(f_subs.hint("shuffle_hash"), "src").select(
                 F.col("dst_tag").alias("tag")
             )
@@ -166,9 +156,7 @@ def label_propagation(
             ee = e.join(
                 F.broadcast(affected), e["dst_tag"] == affected["tag"], "left_semi"
             )
-        sub_state = sub.join(state.hint("shuffle_hash"), "tag").select(
-            F.col("id").alias("src"), "label", "score"
-        )
+        sub_state = sub.join(state.hint("shuffle_hash"), "tag").select("src", "label", "score")
         return ee.join(sub_state.hint("shuffle_hash"), "src").select(
             F.col("dst_tag").alias("tag"), "label", (F.col("score") * F.col("w")).alias("ms")
         )

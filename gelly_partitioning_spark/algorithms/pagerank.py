@@ -31,15 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..encoding import IdCollisionError, decode, encode_split_graph
-from ..graph import normalize_edges, undirected
+from ..encoding import decode
+from ..graph import normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
-from ..superstep import (
-    CHANGED,
-    DEFAULT_BROADCAST_STATE_BUDGET,
-    SuperstepRunner,
-    checkpoint_static,
-)
+from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
 # Single-task working set per undirected row: two int64 key columns plus
 # the index/rank vectors.
@@ -80,6 +75,13 @@ def _pagerank_kernel(
         return {"id": strs, "rank": r}, done, conv
 
     return kernel
+
+
+def _deg(vt: distributed.VertexTable, key) -> DataFrame:
+    """(tag, deg double) per vertex, the tags keyed by ``key``."""
+    return vt.degrees.select(
+        key("tag").alias("tag"), F.col("degree").cast("double").alias("deg")
+    )
 
 
 def _self_rows(deg: DataFrame) -> DataFrame:
@@ -123,37 +125,14 @@ def pagerank(
     observed every K steps (≤ K−1 overshoot supersteps after the fixpoint).
 
     ``prepared`` (a ``sources.graph_store.PreparedGraph``) is the restart
-    path: the split/encode/bucketed layout was persisted by an earlier run,
-    so this call skips the split AND the initial repartition — the bucketed
+    path: the split/encode/bucketed layout was persisted by an earlier run.
+    It takes the same rung decision as an edge frame; on the salted rung
+    this call skips the split AND the initial repartition — the bucketed
     scan already carries HashPartitioning(src), so the edge side never
     exchanges, cold start included. ``split/threshold/alpha/level/mode/
     use_long_ids`` are baked into the persisted layout and ignored here.
     """
-    if prepared is not None:
-        # bucketed tables: the scan's HashPartitioning(src) replaces the
-        # repartition+localCheckpoint below; cache keeps re-scans in memory
-        # (InMemoryRelation preserves the bucketed partitioning)
-        e = prepared.edges.select("src", "dst_tag").cache()
-        sub_deg = prepared.sub_deg.cache()
-        tag_dict = prepared.tag_dict
-        deg = prepared.degrees().localCheckpoint(eager=True)
-        n = deg.count()
-        # same scatter-strategy decision as the fresh path (unchanged from
-        # r5: a prepared graph may still run broadcast-state scatter when
-        # the state fits the per-superstep broadcast budget)
-        use_broadcast = distributed.use_broadcast_state(
-            n,
-            deg.select("tag", F.lit(1.0).alias("rank")).schema,
-            broadcast_threshold_vertices,
-            broadcast_state_budget_bytes,
-        )
-        if use_broadcast:
-            e2 = checkpoint_static(
-                e.join(sub_deg.hint("shuffle_hash"), "src")
-                .select("dst_tag", "tag", "deg")
-                .unionByName(_self_rows(deg))
-            )
-    else:
+    if prepared is None:
         edges = normalize_edges(edges)
 
         if (
@@ -180,70 +159,50 @@ def pagerank(
                 )
                 if out is not None:
                     return out
+    source = edges if prepared is None else prepared
 
-        # the vertex/degree table, shared by the rung decision, the
-        # broadcast scatter table and the split fan-out; its agg also
-        # checks that xxhash64 is injective on the tags
-        vt = distributed.vertex_table(edges, check_hashes=use_long_ids)
-        n, e_rows = vt.n, vt.e_rows
-        deg_str = vt.degrees.select("tag", F.col("degree").cast("double").alias("deg"))
+    # the vertex/degree table, shared by the rung decision, both static
+    # tables and the split fan-out; on an edge frame its agg also checks
+    # that xxhash64 is injective on the tags (hash ids collide on this
+    # vertex set: the exact string path; the salted layout additionally
+    # re-checks sub-vertex ids)
+    vt = distributed.vertex_table(source, check_hashes=use_long_ids)
+    n = vt.n
+    if n == 0:
+        return vt.degrees.sparkSession.createDataFrame([], "id string, rank double")
+    key = F.xxhash64 if vt.injective else F.col
 
-        tag_dict = None
-        # hash ids collide on this vertex set: fall back to the exact
-        # string path (the salted path below additionally re-checks
-        # sub-vertex ids via encode_split_graph)
-        use_long_ids = use_long_ids and vt.injective
-        if use_long_ids:
-            tag_dict = deg_str.select(
-                F.xxhash64("tag").alias("tag"), F.col("tag").alias("tag_str")
+    # broadcast-state: the rank table (~16 B/vertex) is broadcast and
+    # map-joined against a static (dst_tag, tag, deg) edge table, so
+    # the 2|E| side never shuffles. Salted: sub-vertex routing (the
+    # reference's Split-Merge) with shuffle_hash hints (build sides are
+    # vertex-sized; SMJ would re-sort the edge side each superstep).
+    # (The degree table has the state's row shape: a tag and a double.)
+    use_broadcast = distributed.use_broadcast_state(
+        n, _deg(vt, key).schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+    )
+    if use_broadcast:
+        tag_dict = vt.tag_dict
+        if vt.injective:
+            tag_dict = vt.degrees.select(
+                key("tag").alias("tag"), F.col("tag").alias("tag_str")
             ).localCheckpoint(eager=False)
-            deg = deg_str.select(F.xxhash64("tag").alias("tag"), "deg")
-        else:
-            deg = deg_str
-
-        # broadcast-state: the rank table (~16 B/vertex) is broadcast and
-        # map-joined against a static (dst_tag, tag, deg) edge table, so
-        # the 2|E| side never shuffles. Salted: sub-vertex routing (the
-        # reference's Split-Merge) with shuffle_hash hints (build sides are
-        # vertex-sized; SMJ would re-sort the edge side each superstep).
-        use_broadcast = distributed.use_broadcast_state(
-            n,
-            deg.select("tag", F.lit(1.0).alias("rank")).schema,
-            broadcast_threshold_vertices,
-            broadcast_state_budget_bytes,
+        deg = _deg(vt, key)
+        e = distributed.broadcast_table(
+            distributed.undirected_tags(source)
+            .select(key("dst").alias("dst_tag"), key("src").alias("tag"))
+            .join(F.broadcast(deg), "tag")
+            .select("dst_tag", "tag", "deg")
+            .unionByName(_self_rows(deg)),
+            vt.e_rows + n,
         )
-
-        if use_broadcast:
-            key = F.xxhash64 if use_long_ids else F.col
-            e2 = distributed.broadcast_table(
-                undirected(edges)
-                .select(key("dst").alias("dst_tag"), key("src").alias("tag"))
-                .join(F.broadcast(deg), "tag")
-                .select("dst_tag", "tag", "deg")
-                .unionByName(_self_rows(deg)),
-                e_rows + n,
-            )
-        else:
-            sg = distributed.salted_split(edges, vt, split, threshold, alpha, level, mode)
-            if use_long_ids:
-                try:
-                    eg = encode_split_graph(sg)
-                    sub_raw, e_raw, tag_dict = eg.vertices, eg.edges, eg.tag_dict
-                except IdCollisionError:
-                    use_long_ids = False
-            if not use_long_ids:
-                sub_raw, e_raw = sg.vertices, sg.edges.select("src", "dst_tag", "w")
-                tag_dict = None
-                deg = deg_str
-
-            sub = sub_raw.localCheckpoint(eager=True)
-            e = distributed.salted_table(e_raw.select("src", "dst_tag"), e_rows)
-            # contribution weight rank/deg travels with each sub-vertex
-            sub_deg = (
-                sub.join(deg.withColumnRenamed("tag", "t"), sub["tag"] == F.col("t"))
-                .select(F.col("id").alias("src"), "tag", "deg")
-                .localCheckpoint(eager=True)
-            )
+    else:
+        # contribution weight rank/deg travels with each sub-vertex
+        e, sub_deg, tag_dict = distributed.salted_tables(
+            source, vt, ("src", "dst_tag"), split, threshold, alpha, level, mode,
+            encode=bool(vt.injective), with_deg=True,
+        )
+        deg = _deg(vt, key if tag_dict is not None else F.col)
 
     base = (1.0 - damping) / n
     init = deg.select("tag", F.lit(1.0 / n).alias("rank"))
@@ -253,7 +212,7 @@ def pagerank(
 
     def step(state: DataFrame, i: int):
         if use_broadcast:
-            # Single-reference superstep: each vertex's SELF row in e2
+            # Single-reference superstep: each vertex's SELF row in e
             # (deg NULL — contributes nothing to the mass sum) carries its
             # own old rank through the same broadcast join + aggregation
             # that gathers its incoming messages. The state is therefore
@@ -262,7 +221,7 @@ def pagerank(
             # superstep, and a chained batch plan grows linearly instead
             # of doubling per superstep (guide §2.4).
             g = (
-                e2.join(F.broadcast(state), "tag")
+                e.join(F.broadcast(state), "tag")
                 .groupBy(F.col("dst_tag").alias("tag"))
                 .agg(
                     F.sum(F.col("rank") / F.col("deg")).alias("mass"),
@@ -298,7 +257,7 @@ def pagerank(
         runner,
         f"pagerank:v2:damping={damping}:tol={tol}:fixed={fixed_iterations}:"
         f"split={split}:threshold={threshold}:alpha={alpha}:level={level}:mode={mode}",
-        e2 if use_broadcast else e,
+        e,
         ("dst_tag", "tag") if use_broadcast else None,
         batch=superstep_batch,
         chain=not use_broadcast,

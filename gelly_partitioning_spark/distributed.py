@@ -4,17 +4,21 @@ The counterpart of ``single_task.py``. PageRank, connected components and
 label propagation own only their raw scatter tables, their ``step`` and
 their output decode; this module owns how the two distributed rungs
 measure the graph, pick a rung, build and store their static tables and
-wire the ``SuperstepRunner``:
+wire the ``SuperstepRunner``. A graph reaches them as a normalized edge
+frame (a fresh run) or a ``sources.graph_store.PreparedGraph`` (a
+restart from the persisted salted layout); both sources feed the same
+code, so where the split came from changes neither rung nor answer:
 
-- ``vertex_table``: ONE materialized (tag, degree) table aggregated from
-  the DIRECTED edges (out+in ≡ the undirected groupBy), and one agg over
-  it for the vertex count, the routing-row count 2|E| and, on request,
-  the xxhash64 injectivity check. No serialized cache of the 2|E|
-  undirected expansion is written just to aggregate it (guide §5);
+- ``vertex_table``: ONE materialized (tag, degree) table, aggregated
+  from the DIRECTED edges (out+in ≡ the undirected groupBy) or read from
+  a layout's stored degrees, and one agg over it for the vertex count,
+  the routing-row count 2|E| and, on request, the xxhash64 injectivity
+  check. No source scans the 2|E| side just to count it (guide §5);
 - ``use_broadcast_state``: the one broadcast-vs-salted decision;
-- ``broadcast_table`` / ``salted_split`` + ``salted_table``: the static
-  side of each rung, stored at a level chosen once from the known row
-  count;
+- ``undirected_tags`` + ``broadcast_table`` / ``salted_tables``: the
+  static side of each rung, stored at a level chosen once from the
+  known row count; ``salted_layout`` is also what
+  ``save_prepared_graph`` writes;
 - ``wire_runner``: batch size, chained-checkpoint truncation and the
   resume fingerprint.
 
@@ -38,7 +42,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from .splitting import SplitGraph, split_graph
+from .encoding import IdCollisionError, encode_split_graph
+from .graph import undirected
+from .splitting import split_graph
 from .superstep import (
     SuperstepRunner,
     checkpoint_static_sized,
@@ -53,26 +59,41 @@ _NO_SPLIT = 2**62
 
 @dataclass
 class VertexTable:
-    """degrees: (tag string, degree long), materialized; n: vertex count;
+    """degrees: (tag, degree long), materialized; n: vertex count;
     e_rows: 2|E|, the undirected routing-row count; injective: whether
-    xxhash64 is collision-free on the tags (None when not checked)."""
+    xxhash64 is collision-free on the tags (None when not checked);
+    tag_dict: (tag long, tag_str) when the tags are already
+    xxhash64-encoded (a long prepared layout), else None."""
 
     degrees: DataFrame
     n: int
     e_rows: int
     injective: bool | None
+    tag_dict: DataFrame | None = None
 
 
-def vertex_table(edges: DataFrame, check_hashes: bool = False) -> VertexTable:
-    """The vertex/degree table of a normalized edge frame: one groupBy
-    checkpoint, then one vertex-sized agg for the counts (and, with
-    ``check_hashes``, the distinct xxhash64 count of the tags)."""
-    degrees = (
-        edges.select(F.explode(F.array("src", "dst")).alias("tag"))
-        .groupBy("tag")
-        .agg(F.count("*").cast("long").alias("degree"))
-        .localCheckpoint(eager=True)
-    )
+def vertex_table(source, check_hashes: bool = False) -> VertexTable:
+    """The vertex/degree table of a source: one checkpoint, then one
+    vertex-sized agg for the counts (and, with ``check_hashes``, the
+    distinct xxhash64 count of the tags).
+
+    An edge frame is grouped by endpoint. A prepared layout already
+    stores each sub-vertex's original-vertex degree, so its table is the
+    distinct (tag, deg) rows and 2|E| is their degree sum; its tags are
+    final (string, or encoded with ``tag_dict``), so ``check_hashes``
+    does not apply to it.
+    """
+    tag_dict = None
+    if isinstance(source, DataFrame):
+        degrees = (
+            source.select(F.explode(F.array("src", "dst")).alias("tag"))
+            .groupBy("tag")
+            .agg(F.count("*").cast("long").alias("degree"))
+        )
+    else:
+        check_hashes, tag_dict = False, source.tag_dict
+        degrees = source.degrees().select("tag", F.col("deg").cast("long").alias("degree"))
+    degrees = degrees.localCheckpoint(eager=True)
     aggs = [F.count("*").alias("n"), F.sum("degree").alias("e_rows")]
     if check_hashes:
         aggs.append(F.countDistinct(F.xxhash64("tag")).alias("hashes"))
@@ -82,6 +103,7 @@ def vertex_table(edges: DataFrame, check_hashes: bool = False) -> VertexTable:
         int(row["n"]),
         int(row["e_rows"] or 0),
         row["hashes"] == row["n"] if check_hashes else None,
+        tag_dict,
     )
 
 
@@ -97,6 +119,17 @@ def use_broadcast_state(
     return fits_broadcast_budget(n_vertices, schema, budget_bytes)
 
 
+def undirected_tags(source) -> DataFrame:
+    """(src, dst, w): the undirected edge multiset on the source's tags —
+    both orientations of an edge frame, or a layout's routing rows with
+    each sub-vertex mapped back to its tag (the same multiset)."""
+    if isinstance(source, DataFrame):
+        return undirected(source)
+    return source.edges.join(source.sub_deg.select("src", "tag"), "src").select(
+        F.col("tag").alias("src"), F.col("dst_tag").alias("dst"), "w"
+    )
+
+
 def broadcast_table(raw: DataFrame, rows: int) -> DataFrame:
     """The broadcast rung's static scatter table, ``rows`` rows.
 
@@ -108,8 +141,8 @@ def broadcast_table(raw: DataFrame, rows: int) -> DataFrame:
     coalesce is narrow (no shuffle), and ``static_scan_partitions``
     scales with the input bytes and session parallelism (guide §2.2:
     fewer, larger partitions on the per-superstep side). Callers pass a
-    plain plan over ``undirected(edges)``, not a cached one: this build
-    is its only consumer, so a cache would be written and read back once.
+    plain plan over ``undirected_tags``, not a cached one: this build is
+    its only consumer, so a cache would be written and read back once.
     """
     spark = raw.sparkSession
     return checkpoint_static_sized(
@@ -117,18 +150,20 @@ def broadcast_table(raw: DataFrame, rows: int) -> DataFrame:
     )
 
 
-def salted_split(
-    edges: DataFrame,
-    vt: VertexTable,
-    split: bool,
-    threshold: int | None,
-    alpha: int,
-    level: int,
-    mode: str,
-) -> SplitGraph:
-    """The salted rung's split graph, fanned out from ``vt``'s degrees
-    (``split=False`` keeps every vertex whole)."""
-    return split_graph(
+def salted_layout(
+    edges: DataFrame, vt: VertexTable, split: bool, threshold: int | None, alpha: int,
+    level: int, mode: str = "flat", encode: bool = False, with_deg: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """The salted layout of a normalized edge frame, not materialized:
+    (routing rows (src, dst_tag, w), sub-vertices (src, tag[, deg]),
+    tag_dict or None).
+
+    The split fans out from ``vt``'s degrees (``split=False`` keeps every
+    vertex whole); ``encode`` xxhash64-encodes the ids, keeping strings
+    when the encoding's check finds a collision; ``with_deg`` attaches
+    each sub-vertex's degree.
+    """
+    sg = split_graph(
         edges,
         threshold=threshold if split else _NO_SPLIT,
         alpha=alpha,
@@ -136,6 +171,20 @@ def salted_split(
         mode=mode,
         degree_df=vt.degrees.select(F.col("tag").alias("id"), "degree"),
     )
+    key, subs, e, tag_dict = F.col, sg.vertices, sg.edges.select("src", "dst_tag", "w"), None
+    if encode:
+        try:
+            eg = encode_split_graph(sg)
+            key, subs, e, tag_dict = F.xxhash64, eg.vertices, eg.edges, eg.tag_dict
+        except IdCollisionError:
+            pass
+    subs = subs.select(F.col("id").alias("src"), "tag")
+    if with_deg:
+        deg = vt.degrees.select(
+            key("tag").alias("tag"), F.col("degree").cast("double").alias("deg")
+        )
+        subs = subs.join(deg, "tag").select("src", "tag", "deg")
+    return e, subs, tag_dict
 
 
 def salted_table(edges: DataFrame, rows: int) -> DataFrame:
@@ -148,6 +197,29 @@ def salted_table(edges: DataFrame, rows: int) -> DataFrame:
     return checkpoint_static_sized(
         edges.repartition(F.col("src")), rows, edges.sparkSession
     )
+
+
+def salted_tables(
+    source, vt: VertexTable, cols: tuple[str, ...], split: bool, threshold: int | None,
+    alpha: int, level: int, mode: str, encode: bool = False, with_deg: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """``salted_layout``'s three tables as one run reads them, the routing
+    rows projected to ``cols``.
+
+    An edge frame's layout is built and checkpointed (routing rows by
+    ``salted_table``). A prepared layout's stored tables are cached
+    instead: the cache keeps the bucketed scan's HashPartitioning(src), so
+    the edge side never exchanges, cold start included; the split
+    arguments and ``encode`` are baked into it.
+    """
+    if isinstance(source, DataFrame):
+        e, subs, tag_dict = salted_layout(
+            source, vt, split, threshold, alpha, level, mode, encode, with_deg
+        )
+        subs = subs.localCheckpoint(eager=True)
+        return salted_table(e.select(*cols), vt.e_rows), subs, tag_dict
+    subs = source.sub_deg if with_deg else source.sub_deg.select("src", "tag")
+    return source.edges.select(*cols).cache(), subs.cache(), source.tag_dict
 
 
 def wire_runner(

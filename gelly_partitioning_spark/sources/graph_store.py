@@ -2,12 +2,14 @@
 
 At 10^11 edges every cold start of an iterative job pays one full
 exchange to hash-partition the routing edges by the scatter-join key
-(``repartition(src)`` in pagerank.py) before the superstep loop can keep
-the edge side partition-stationary. The reference re-reads its CSV and
-re-splits on every run (AlphaNodeSplitting.java:256-273 — no counterpart);
-this module removes the cost for *our* restarts:
+(``repartition(src)`` in ``distributed.salted_table``) before the
+superstep loop can keep the edge side partition-stationary. The
+reference re-reads its CSV and re-splits on every run
+(AlphaNodeSplitting.java:256-273 — no counterpart); this module removes
+the cost for *our* restarts:
 
-- ``save_prepared_graph`` runs split + (optional) long-id encoding ONCE and
+- ``save_prepared_graph`` runs split + (optional) long-id encoding ONCE,
+  the same ``distributed.salted_layout`` a fresh salted run builds, and
   writes the routing table as a Spark **bucketed table**
   (``bucketBy(n, 'src')`` + ``sortBy('src')``): the on-disk layout IS the
   hash partitioning the scatter join needs. The per-sub-vertex
@@ -17,6 +19,10 @@ this module removes the cost for *our* restarts:
   Exchange at all** — Spark shuffles only the (vertex-sized) rank side to
   the bucket count. Asserted in tests/test_graph_store.py against the
   physical plan.
+
+A prepared graph takes the same vertex table and rung decision as a
+fresh one (``distributed``): the salted rung reads these tables, the
+broadcast rung builds its table from them.
 
 Bucket count guidance at scale: ~2-4x the executor count, and stable
 across restarts (the layout is the contract). The tables are plain
@@ -28,11 +34,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..encoding import IdCollisionError, encode_split_graph
+from .. import distributed
 from ..graph import normalize_edges
-from ..splitting import split_graph
+from ..superstep import release_checkpoint
 
 
 @dataclass
@@ -41,9 +47,10 @@ class PreparedGraph:
 
     edges:    (src, dst_tag, w) routing table, bucketed by src — the
               scatter side (consumers project the columns they need; a
-              projection preserves the bucketed partitioning). Cached on
-              first use; the bucketed partitioning survives the cache
-              (InMemoryRelation keeps child partitioning).
+              projection preserves the bucketed partitioning). A salted
+              run caches its projection; the bucketed partitioning
+              survives the cache (InMemoryRelation keeps child
+              partitioning).
     sub_deg:  (src, tag, deg) one row per sub-vertex, bucketed by src.
     tag_dict: (tag, id) decode dictionary when long-encoded, else None.
     """
@@ -80,23 +87,9 @@ def save_prepared_graph(
     """
     spark = edges.sparkSession
     edges = normalize_edges(edges)
-    sg = split_graph(edges, threshold=threshold, alpha=alpha, level=level)
-
-    tag_dict = None
-    if use_long_ids:
-        try:
-            eg = encode_split_graph(sg)
-            sub, e, tag_dict = eg.vertices, eg.edges, eg.tag_dict
-        except IdCollisionError:
-            use_long_ids = False
-    if not use_long_ids:
-        sub, e = sg.vertices, sg.edges.select("src", "dst_tag", "w")
-
-    deg = e.groupBy(F.col("dst_tag").alias("tag")).agg(
-        F.count("*").cast("double").alias("deg")
-    )
-    sub_deg = sub.join(deg.withColumnRenamed("tag", "t"), sub["tag"] == F.col("t")).select(
-        F.col("id").alias("src"), "tag", "deg"
+    vt = distributed.vertex_table(edges)
+    e, sub_deg, tag_dict = distributed.salted_layout(
+        edges, vt, True, threshold, alpha, level, encode=use_long_ids, with_deg=True
     )
 
     def write_bucketed(df: DataFrame, suffix: str) -> None:
@@ -111,7 +104,7 @@ def save_prepared_graph(
             .saveAsTable(tbl)
         )
 
-    write_bucketed(e.select("src", "dst_tag", "w"), "edges")
+    write_bucketed(e, "edges")
     write_bucketed(sub_deg, "subdeg")
     tbl = _table(name, "tags")
     # ALWAYS drop the old tags table first: re-preparing the same name as a
@@ -128,6 +121,7 @@ def save_prepared_graph(
         import shutil
 
         shutil.rmtree(f"{base_path}/tags", ignore_errors=True)
+    release_checkpoint(vt.degrees)
     return load_prepared_graph(spark, name)
 
 

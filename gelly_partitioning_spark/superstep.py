@@ -90,12 +90,6 @@ def fits_broadcast_budget(
 AUTO_BATCH = 0
 AUTO_BATCH_TARGET_SEC = 3.0
 AUTO_BATCH_MAX = 16
-# K is re-estimated (a) whenever the observed per-superstep wall drifts
-# >2x either way from the wall that chose the current K, and (b)
-# unconditionally every this-many batches: the first batch carries
-# JVM/codegen/first-scan warm-up, so a once-only estimate systematically
-# under-sizes K for a 100-superstep run (VERDICT r4 nit #1)
-AUTO_BATCH_REESTIMATE_EVERY = 8
 
 
 def choose_batch_size(
@@ -315,9 +309,6 @@ class SuperstepRunner:
     chain_checkpoint: bool = False
     auto_batch_target_sec: float = AUTO_BATCH_TARGET_SEC
     _auto_k: Optional[int] = None
-    # wall/superstep that chose the current _auto_k + batches since then
-    _auto_est_wall: Optional[float] = None
-    _auto_batches_since: int = 0
     # fixed+marginal batch-cost model (observe_batch): cheapest wall seen
     # per batch size k, and the last fitted (fixed_sec, marginal_sec)
     _obs_min: dict = field(default_factory=dict)
@@ -419,22 +410,23 @@ class SuperstepRunner:
         A batch's wall is well modelled as ``a + b*k``: a FIXED per-action
         cost (driver planning, job scheduling, AQE stage setup, the
         convergence agg) plus a MARGINAL per-superstep compute cost.
-        The r5 estimator (``observe_batch_wall``) divided the whole wall
-        by k, so when the fixed cost dominates (small graphs — exactly
-        where batching matters) it saw ~``a/k + b`` per superstep and
-        chose K ≈ target/(a+b): the fixed cost it was built to amortize
-        kept K pinned near 2 (measured live in r6: a≈1.2s, b≈0.2s at
+        An estimator that divides the whole wall by k sees ~``a/k + b``
+        per superstep when the fixed cost dominates (small graphs —
+        exactly where batching matters) and chooses K ≈ target/(a+b):
+        the fixed cost it was built to amortize kept K pinned near 2 (measured live in r6: a≈1.2s, b≈0.2s at
         sf0.1 → old K stuck at 2, 1.1 s/superstep; fitted K≈9 →
         0.35 s/superstep). This estimator fits (a, b) from the cheapest
         observed wall at the two most distant batch sizes and picks
         K = (target − a)/b — i.e. it sizes the MARGINAL work per action
         to the target, treating the fixed cost as the overhead it is.
-        Falls back to the r5 formula until two distinct batch sizes have
-        been observed. Pure driver-side arithmetic; results are
-        unaffected (K only sets how many supersteps one action
-        amortizes, bounded by AUTO_BATCH_MAX).
+        Until two distinct batch sizes have been observed there is no fit:
+        K is then ``choose_batch_size`` of the latest batch's
+        per-superstep wall. Either way K is re-derived after every batch,
+        so neither first-batch warm-up nor a machine-window change pins a
+        stale K. Pure driver-side arithmetic; results are unaffected (K
+        only sets how many supersteps one action amortizes, bounded by
+        AUTO_BATCH_MAX).
         """
-        self._auto_batches_since += 1
         per = wall_sec / max(k, 1)
         if self._fit is not None:
             # environment shift (the sandbox shows 2-3x windows): predict
@@ -447,44 +439,16 @@ class SuperstepRunner:
         prev = self._obs_min.get(k)
         self._obs_min[k] = wall_sec if prev is None else min(prev, wall_sec)
         ks = sorted(self._obs_min)
-        if len(ks) >= 2:
-            k_lo, k_hi = ks[0], ks[-1]
-            b = (self._obs_min[k_hi] - self._obs_min[k_lo]) / (k_hi - k_lo)
-            b = max(b, 0.02 * per, 1e-3)  # floor: never extrapolate free work
-            a = max(self._obs_min[k_lo] - b * k_lo, 0.0)
-            self._fit = (a, b)
-            head = self.auto_batch_target_sec - a
-            self._auto_k = max(1, min(AUTO_BATCH_MAX, int(head / b) if head > b else 1))
-            self._auto_est_wall = per
-            self._auto_batches_since = 0
-        else:
-            self.observe_batch_wall(per)
-
-    def observe_batch_wall(self, per_superstep_sec: float) -> None:
-        """Feed one batch's measured per-superstep wall into the auto-K
-        estimator.
-
-        The first observation seeds K (the first batch always runs k=1 to
-        measure). After that K is recomputed when the observed wall drifts
-        >2x either way from the wall that chose the current K, and
-        unconditionally every ``AUTO_BATCH_REESTIMATE_EVERY`` batches —
-        so neither first-batch warm-up nor a mid-run machine-window change
-        pins a stale K for the rest of a long run (VERDICT r4 nit #1).
-        Pure driver-side arithmetic; results are unaffected (K only sets
-        how many supersteps one action amortizes).
-        """
-        self._auto_batches_since += 1
-        drifted = self._auto_est_wall is not None and not (
-            0.5 * self._auto_est_wall <= per_superstep_sec <= 2.0 * self._auto_est_wall
-        )
-        if (
-            self._auto_k is None
-            or drifted
-            or self._auto_batches_since >= AUTO_BATCH_REESTIMATE_EVERY
-        ):
-            self._auto_k = choose_batch_size(per_superstep_sec, self.auto_batch_target_sec)
-            self._auto_est_wall = per_superstep_sec
-            self._auto_batches_since = 0
+        if len(ks) < 2:
+            self._auto_k = choose_batch_size(per, self.auto_batch_target_sec)
+            return
+        k_lo, k_hi = ks[0], ks[-1]
+        b = (self._obs_min[k_hi] - self._obs_min[k_lo]) / (k_hi - k_lo)
+        b = max(b, 0.02 * per, 1e-3)  # floor: never extrapolate free work
+        a = max(self._obs_min[k_lo] - b * k_lo, 0.0)
+        self._fit = (a, b)
+        head = self.auto_batch_target_sec - a
+        self._auto_k = max(1, min(AUTO_BATCH_MAX, int(head / b) if head > b else 1))
 
     # -- checkpoint / resume ------------------------------------------------
 

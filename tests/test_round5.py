@@ -14,42 +14,44 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_auto_k_adapts_to_wall_drift():
-    """Synthetic wall sequence: a slow warm-up batch must not pin a tiny K
-    for the whole run, and a mid-run slowdown must shrink K back."""
+    """Realistic (k, wall) sequence, k following the chosen K: a slow
+    warm-up batch must not pin a tiny K for the whole run, and a mid-run
+    slowdown must shrink K on the next batch."""
     from gelly_partitioning_spark.superstep import SuperstepRunner
 
     r = SuperstepRunner(spark=None, auto_batch_target_sec=3.0)
     # warm-up batch: 3 s/superstep -> K = 1
-    r.observe_batch_wall(3.0)
+    r.observe_batch(1, 3.0)
     assert r._auto_k == 1
-    # steady state turns out 12x faster -> drift rule re-estimates upward
-    r.observe_batch_wall(0.25)
+    # the next k=1 batch is 12x faster -> K follows it at once
+    r.observe_batch(1, 0.25)
     assert r._auto_k == 12
-    # stable walls within 2x: K unchanged
-    r.observe_batch_wall(0.4)
-    r.observe_batch_wall(0.5)
+    # k=12 at the same 0.25 s/superstep: the fit (a=0, b=0.25) keeps K
+    r.observe_batch(12, 3.0)
     assert r._auto_k == 12
-    # machine window degrades >2x -> drift rule shrinks K immediately
-    r.observe_batch_wall(1.5)
+    # machine window degrades >2x (predicted 3 s, measured 18 s): the fit
+    # restarts from this batch and K shrinks for the next one
+    r.observe_batch(12, 18.0)
+    assert r._fit is None
     assert r._auto_k == 2
 
 
 def test_auto_k_periodic_reestimate():
-    """Even without >2x drift, K is re-derived every N batches so a slow
-    creep (each step < 2x) cannot hold a stale K forever."""
-    from gelly_partitioning_spark.superstep import (
-        AUTO_BATCH_REESTIMATE_EVERY,
-        SuperstepRunner,
-    )
+    """K is re-derived after every batch: a slow creep that stays within
+    2x of the wall that set K still moves K on the next batch, and each
+    new cheapest wall refits it."""
+    from gelly_partitioning_spark.superstep import SuperstepRunner
 
     r = SuperstepRunner(spark=None, auto_batch_target_sec=3.0)
-    r.observe_batch_wall(0.25)  # K = 12
-    assert r._auto_k == 12
-    # a steady 2x-slower wall never trips the drift rule (boundary is
-    # inclusive), but the periodic re-estimate catches it
-    for _ in range(AUTO_BATCH_REESTIMATE_EVERY):
-        r.observe_batch_wall(0.5)
-    assert r._auto_k == 6  # re-derived: 3.0 / 0.5
+    ks = []
+    for k, wall in [(1, 3.0), (1, 2.0), (1, 1.5), (2, 2.5), (2, 1.75), (7, 3.0)]:
+        r.observe_batch(k, wall)
+        ks.append(r._auto_k)
+    # k=1 batches: K = target / wall each time (1.5 s -> 2); two batch
+    # sizes: fit a=0.5, b=1.0 -> K=2; a cheaper k=2 batch refits a=1.25,
+    # b=0.25 -> K=7; a k=7 batch on the model keeps it
+    assert ks == [1, 1, 2, 2, 7, 7]
+    assert r._fit == (1.25, 0.25)
 
 
 # -- capped tie widening in _topk_indices (VERDICT r4 nit #3) ------------------
