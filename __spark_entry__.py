@@ -254,11 +254,9 @@ def _q_pagerank_prepared(spark, sf_dir):
 
 
 def _q_cc_prepared(spark, sf_dir):
-    # CC over the persisted bucketed restart layout (VERDICT r4 #5): a
-    # STRING layout (use_long_ids=False) because the component id is the
-    # minimum ORIGINAL id — min over xxhash64 longs would elect a
-    # different representative. Components are invariant under the
-    # layout, so the oracle is the same recursive CTE.
+    # CC over the persisted bucketed restart layout (VERDICT r4 #5).
+    # Components are invariant under the layout, so the oracle is the
+    # same recursive CTE.
     from gelly_partitioning_spark.sources.graph_store import save_prepared_graph
 
     prep = save_prepared_graph(
@@ -269,16 +267,14 @@ def _q_cc_prepared(spark, sf_dir):
         alpha=2,
         level=6,
         buckets=32,
-        use_long_ids=False,
     )
     return connected_components(None, prepared=prep, max_iterations=60)
 
 
 def _q_community_prepared(spark, sf_dir):
-    # LP over the persisted bucketed restart layout (VERDICT r4 #5):
-    # string layout for the same reason — initial labels derive from the
-    # original (numeric-string) ids. Labels are invariant under the
-    # layout, so the oracle is the same unrolled LP SQL.
+    # LP over the persisted bucketed restart layout (VERDICT r4 #5).
+    # Labels are invariant under the layout, so the oracle is the same
+    # unrolled LP SQL.
     from gelly_partitioning_spark import label_propagation
     from gelly_partitioning_spark.sources.graph_store import save_prepared_graph
 
@@ -290,7 +286,6 @@ def _q_community_prepared(spark, sf_dir):
         alpha=2,
         level=6,
         buckets=32,
-        use_long_ids=False,
     )
     lp = label_propagation(None, delta=0.5, max_iterations=5, prepared=prep)
     return lp.select("id", F.col("label").cast("long").alias("label"))

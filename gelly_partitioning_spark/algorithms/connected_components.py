@@ -29,7 +29,11 @@ the join (and before the per-superstep broadcast on the broadcast path).
 Component id = min *string* id by default (engine semantics, matches the
 DuckDB oracle); ``numeric_ids=True`` compares ids as longs for reference
 fixture parity (example/NodeSplittingGSAConnectedComponents.java:172-191
-parses Long).
+parses Long). The distributed rungs key vertices on the vertex table's
+long ``vid`` (``distributed``), minted in string-id order, so the min vid
+IS the min string id: the component is a vid, and the per-superstep min
+and shuffle carry 8-byte longs; under ``numeric_ids`` the component is
+the id cast to long, carried as a value.
 """
 
 from __future__ import annotations
@@ -124,21 +128,9 @@ def connected_components(
     ``prepared`` (a ``sources.graph_store.PreparedGraph``) is the restart
     path: the persisted bucketed layout replaces split + the initial edge
     repartition (the bucketed scan already carries HashPartitioning(src)).
-    It must be a STRING layout (``use_long_ids=False``): the component id
-    is the *minimum original id*, and min over xxhash64-encoded longs
-    would elect a different representative. It takes the same rung
-    decision as an edge frame.
+    It takes the same rung decision as an edge frame.
     """
-    comp_t = "long" if numeric_ids else "string"
-    if prepared is not None:
-        if prepared.tag_dict is not None:
-            raise ValueError(
-                "connected_components needs a string prepared layout "
-                "(save_prepared_graph(..., use_long_ids=False)): min-id "
-                "component semantics are defined on original ids, not "
-                "xxhash64 encodings"
-            )
-    else:
+    if prepared is None:
         edges = normalize_edges(edges)
 
         if runner is None and broadcast_threshold_vertices is None:
@@ -160,12 +152,11 @@ def connected_components(
                     return out
     source = edges if prepared is None else prepared
 
-    # the vertex/degree table (CC's distributed paths never hash-key
-    # vertices: min-id semantics live on original ids)
     vt = distributed.vertex_table(source)
     n = vt.n
+    comp = F.col("tag").cast("long") if numeric_ids else F.col("vid")
     init = vt.degrees.select(
-        "tag", F.col("tag").cast(comp_t).alias("component"), F.lit(True).alias(ACTIVE)
+        F.col("vid").alias("tag"), comp.alias("component"), F.lit(True).alias(ACTIVE)
     )
     use_broadcast = distributed.use_broadcast_state(
         n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
@@ -175,58 +166,24 @@ def connected_components(
         # component through the same join + aggregation that gathers
         # its messages, so the state is referenced exactly ONCE per
         # superstep (no second vertex-sized join; see pagerank.py).
-        #
-        # Order-preserving dense-rank encoding (guide §2.3: narrower
-        # types): min over ranks ≡ min over the original component
-        # order, so the per-superstep min-agg, broadcast hash and
-        # probes all run on 8-byte longs instead of strings (measured
-        # ~0.6 → ~0.35 s/superstep at sf0.1). The rank dictionary is
-        # VERTEX-sized — broadcast mode by definition means the
-        # vertex set is small, so the single window sort is cheap —
-        # and results decode through it at the end, so the emitted
-        # components are the original ids, bit-identical.
-        from pyspark.sql import Window
-
-        order_col = F.col("tag").cast("long") if numeric_ids else F.col("tag")
-        rank_dict = vt.degrees.select(
-            "tag",
-            F.row_number().over(Window.orderBy(order_col)).cast("long").alias("r"),
-        ).localCheckpoint(eager=True)
         e = distributed.broadcast_table(
-            distributed.undirected_tags(source)
-            .join(
-                F.broadcast(
-                    rank_dict.select(F.col("tag").alias("src"), F.col("r").alias("rs"))
-                ),
-                "src",
-            )
-            .join(
-                F.broadcast(
-                    rank_dict.select(F.col("tag").alias("dst"), F.col("r").alias("rd"))
-                ),
-                "dst",
-            )
+            distributed.undirected_vids(source, vt)
             .select(
-                F.col("rs").alias("src_tag"),
-                F.col("rd").alias("dst_tag"),
+                F.col("src").alias("src_tag"),
+                F.col("dst").alias("dst_tag"),
                 F.lit(False).alias("self"),
             )
             .unionByName(
-                rank_dict.select(
-                    F.col("r").alias("src_tag"),
-                    F.col("r").alias("dst_tag"),
+                vt.degrees.select(
+                    F.col("vid").alias("src_tag"),
+                    F.col("vid").alias("dst_tag"),
                     F.lit(True).alias("self"),
                 )
             ),
             vt.e_rows + n,
         )
-        init = rank_dict.select(
-            F.col("r").alias("tag"),
-            F.col("r").alias("component"),
-            F.lit(True).alias(ACTIVE),
-        )
     else:
-        e, sub, _ = distributed.salted_tables(
+        e, sub = distributed.salted_tables(
             source, vt, ("src", "dst_tag"), split, threshold, alpha, level, mode
         )
 
@@ -276,28 +233,7 @@ def connected_components(
         chain=not use_broadcast,
     )
     final = runner.run(init, step, max_iterations)
-    if use_broadcast:
-        # decode the rank encoding: two vertex-sized broadcast joins, then
-        # the same comp_t→string cast chain as the unencoded path (so e.g.
-        # numeric_ids still normalizes the component string identically)
-        return (
-            final.join(
-                F.broadcast(
-                    rank_dict.select(F.col("r").alias("tag"), F.col("tag").alias("_id"))
-                ),
-                "tag",
-            )
-            .join(
-                F.broadcast(
-                    rank_dict.select(
-                        F.col("r").alias("component"), F.col("tag").alias("_comp")
-                    )
-                ),
-                "component",
-            )
-            .select(
-                F.col("_id").alias("id"),
-                F.col("_comp").cast(comp_t).cast("string").alias("component"),
-            )
-        )
-    return final.select(F.col("tag").alias("id"), F.col("component").cast("string"))
+    vids = ("tag",) if numeric_ids else ("tag", "component")
+    return distributed.decode(final, vt, *vids).select(
+        F.col("tag").alias("id"), F.col("component").cast("string")
+    )

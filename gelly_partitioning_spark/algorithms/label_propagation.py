@@ -77,48 +77,41 @@ def label_propagation(
 
     ``prepared`` (a ``sources.graph_store.PreparedGraph``) is the restart
     path: the persisted bucketed layout replaces split + the initial edge
-    repartition. It must be a STRING layout (``use_long_ids=False``):
-    initial labels derive from the *original* ids (numeric value or their
-    hash) — an xxhash64-encoded layout would mint different labels and
-    different tie-breaks. It takes the same rung decision as an edge
-    frame.
+    repartition. It takes the same rung decision as an edge frame.
+
+    The distributed rungs key vertices on the vertex table's long ``vid``
+    (``distributed``); the initial label derives from the original id and
+    is carried as a value, so the key changes no label and no tie-break.
 
     ``superstep_batch`` chains K supersteps per materializing action
     (identical results) — compatible with the workset since r4: the
     runner drops to k=1 exactly while the delta crossover is engaged
     (``batch_size_fn`` below); 0 = auto-choose from the first superstep's
     wall."""
-    # try_cast: non-numeric ids fall back to a stable 64-bit hash (a plain
-    # cast throws under ANSI instead of returning NULL)
-    label0 = F.coalesce(F.expr("try_cast(tag as long)"), F.xxhash64("tag"))
-    init_cols = [
-        "tag",
-        label0.alias("label"),
-        F.lit(1.0).alias("score"),
-        F.lit(True).alias(ACTIVE),
-    ]
-    if prepared is not None and prepared.tag_dict is not None:
-        raise ValueError(
-            "label_propagation needs a string prepared layout "
-            "(save_prepared_graph(..., use_long_ids=False)): initial "
-            "labels derive from original ids, not xxhash64 encodings"
-        )
     source = normalize_edges(edges) if prepared is None else prepared
     vt = distributed.vertex_table(source)
     n, e_rows = vt.n, vt.e_rows
-    init = vt.degrees.select(*init_cols)
+    # try_cast: non-numeric ids fall back to a stable 64-bit hash (a plain
+    # cast throws under ANSI instead of returning NULL)
+    label0 = F.coalesce(F.expr("try_cast(tag as long)"), F.xxhash64("tag"))
+    init = vt.degrees.select(
+        F.col("vid").alias("tag"),
+        label0.alias("label"),
+        F.lit(1.0).alias("score"),
+        F.lit(True).alias(ACTIVE),
+    )
     use_broadcast = distributed.use_broadcast_state(
         n, init.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
     )
     if use_broadcast:
         e = distributed.broadcast_table(
-            distributed.undirected_tags(source).select(
+            distributed.undirected_vids(source, vt).select(
                 F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"), "w"
             ),
             e_rows,
         )
     else:
-        e, sub, _ = distributed.salted_tables(
+        e, sub = distributed.salted_tables(
             source, vt, ("src", "dst_tag", "w"), split, threshold, alpha, level, mode
         )
     avg_deg = max(1.0, e_rows / max(n, 1))
@@ -253,4 +246,4 @@ def label_propagation(
         # runner resolves it after measuring the first superstep.
         runner.batch_size_fn = lambda: 1 if _delta_now() else runner.batch_size
     final = runner.run(init, step, max_iterations)
-    return final.select(F.col("tag").alias("id"), "label")
+    return distributed.decode(final, vt, "tag").select(F.col("tag").alias("id"), "label")

@@ -13,17 +13,17 @@ Scale notes:
 - scatter join keyed on the *salted* src sub-vertex id — balanced;
 - rank/deg contributions summed with groupBy(dst_tag): sum is reducible so
   map-side partial aggregation bounds the hub's reduce fan-in;
-- iterative hot path runs on xxhash64-encoded LONG keys (collision-checked,
-  see encoding.py) — 8-byte keys cut shuffle bytes and hash cost ~3-4x vs
-  the raw string ids; results decode through the tag dictionary at the end;
+- the distributed rungs run on the vertex table's long ``vid`` keys
+  (``distributed``): 8-byte keys cut shuffle bytes and hash cost ~3-4x vs
+  the raw string ids; results decode through the vertex table at the end;
 - shuffle_hash join hints: every build side is vertex-sized, and sort-merge
   would re-sort the 2|E| edge side per superstep;
 - convergence = L∞(new-old) ≤ tol, folded into the same superstep action
   via the runner's ``_changed`` flag (no second pass).
 
-PageRank values are invariant under the id encoding (ranks attach to tags;
-only join keys change), so the NumPy-oracle and plain≡split tests cover
-both paths; ``use_long_ids=False`` forces the string path.
+PageRank values are invariant under the id encoding (ranks attach to
+vertices; only join keys change), so the NumPy-oracle and plain≡split
+tests cover every rung.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..encoding import decode
 from ..graph import normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
@@ -75,13 +74,6 @@ def _pagerank_kernel(
         return {"id": strs, "rank": r}, done, conv
 
     return kernel
-
-
-def _deg(vt: distributed.VertexTable, key) -> DataFrame:
-    """(tag, deg double) per vertex, the tags keyed by ``key``."""
-    return vt.degrees.select(
-        key("tag").alias("tag"), F.col("degree").cast("double").alias("deg")
-    )
 
 
 def _self_rows(deg: DataFrame) -> DataFrame:
@@ -129,22 +121,22 @@ def pagerank(
     It takes the same rung decision as an edge frame; on the salted rung
     this call skips the split AND the initial repartition — the bucketed
     scan already carries HashPartitioning(src), so the edge side never
-    exchanges, cold start included. ``split/threshold/alpha/level/mode/
-    use_long_ids`` are baked into the persisted layout and ignored here.
+    exchanges, cold start included. ``split/threshold/alpha/level/mode``
+    are baked into the persisted layout and ignored here.
+
+    ``use_long_ids`` is accepted and ignored: every distributed rung runs
+    on the vertex table's long ids.
     """
     if prepared is None:
         edges = normalize_edges(edges)
 
-        if (
-            use_long_ids
-            and broadcast_threshold_vertices is None
-            and (runner is None or runner.checkpoint_dir is None)
+        if broadcast_threshold_vertices is None and (
+            runner is None or runner.checkpoint_dir is None
         ):
             # the single-task rung (single_task.py): skipped when the
             # caller pinned a strategy (broadcast_threshold_vertices),
-            # wants resumable checkpoints, forced the string path, or the
-            # table is too big for one task's memory; a hash collision
-            # found in-task falls through to the probed paths below
+            # wants resumable checkpoints, or the table is too big for one
+            # task's memory; a hash collision found in-task falls through
             copy = single_task.gate(
                 edges.select("src", "dst"),
                 single_task_budget_bytes,
@@ -161,36 +153,29 @@ def pagerank(
                     return out
     source = edges if prepared is None else prepared
 
-    # the vertex/degree table, shared by the rung decision, both static
-    # tables and the split fan-out; on an edge frame its agg also checks
-    # that xxhash64 is injective on the tags (hash ids collide on this
-    # vertex set: the exact string path; the salted layout additionally
-    # re-checks sub-vertex ids)
-    vt = distributed.vertex_table(source, check_hashes=use_long_ids)
+    # the vertex/degree table and its vids, shared by the rung decision,
+    # both static tables, the split fan-out and the decode
+    vt = distributed.vertex_table(source)
     n = vt.n
     if n == 0:
         return vt.degrees.sparkSession.createDataFrame([], "id string, rank double")
-    key = F.xxhash64 if vt.injective else F.col
+    deg = vt.degrees.select(
+        F.col("vid").alias("tag"), F.col("degree").cast("double").alias("deg")
+    )
 
     # broadcast-state: the rank table (~16 B/vertex) is broadcast and
     # map-joined against a static (dst_tag, tag, deg) edge table, so
     # the 2|E| side never shuffles. Salted: sub-vertex routing (the
     # reference's Split-Merge) with shuffle_hash hints (build sides are
     # vertex-sized; SMJ would re-sort the edge side each superstep).
-    # (The degree table has the state's row shape: a tag and a double.)
+    # (The degree table has the state's row shape: a vid and a double.)
     use_broadcast = distributed.use_broadcast_state(
-        n, _deg(vt, key).schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
+        n, deg.schema, broadcast_threshold_vertices, broadcast_state_budget_bytes
     )
     if use_broadcast:
-        tag_dict = vt.tag_dict
-        if vt.injective:
-            tag_dict = vt.degrees.select(
-                key("tag").alias("tag"), F.col("tag").alias("tag_str")
-            ).localCheckpoint(eager=False)
-        deg = _deg(vt, key)
         e = distributed.broadcast_table(
-            distributed.undirected_tags(source)
-            .select(key("dst").alias("dst_tag"), key("src").alias("tag"))
+            distributed.undirected_vids(source, vt)
+            .select(F.col("dst").alias("dst_tag"), F.col("src").alias("tag"))
             .join(F.broadcast(deg), "tag")
             .select("dst_tag", "tag", "deg")
             .unionByName(_self_rows(deg)),
@@ -198,11 +183,10 @@ def pagerank(
         )
     else:
         # contribution weight rank/deg travels with each sub-vertex
-        e, sub_deg, tag_dict = distributed.salted_tables(
+        e, sub_deg = distributed.salted_tables(
             source, vt, ("src", "dst_tag"), split, threshold, alpha, level, mode,
-            encode=bool(vt.injective), with_deg=True,
+            with_deg=True,
         )
-        deg = _deg(vt, key if tag_dict is not None else F.col)
 
     base = (1.0 - damping) / n
     init = deg.select("tag", F.lit(1.0 / n).alias("rank"))
@@ -263,6 +247,4 @@ def pagerank(
         chain=not use_broadcast,
     )
     final = runner.run(init, step, iters)
-    if tag_dict is not None:
-        final = decode(final, tag_dict, col="tag")
-    return final.select(F.col("tag").alias("id"), "rank")
+    return distributed.decode(final, vt, "tag").select(F.col("tag").alias("id"), "rank")

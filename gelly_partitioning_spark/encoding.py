@@ -1,17 +1,17 @@
-"""Internal long-id encoding for the iterative hot path.
+"""xxhash64 long-id encoding of a string split graph, with a checked
+precondition.
 
-String vertex ids ('r:repo-1234', 'p:src/.../mod.rs') cost 3-4x the
-shuffle bytes and hash/compare time of a fixed 8-byte key. The iterative
-algorithms therefore run on ``xxhash64``-encoded long keys internally and
-join back to strings only at the output boundary.
+The engine no longer calls this module: its distributed rungs key on the
+long ``vid`` the vertex table mints, unique and order-preserving by
+construction (``distributed``), so there is no hash to check. It stays
+for the benchmark's traced layer probe (``perfbench/run.py``), which
+times ``encode_split_graph`` on the corpus graph, until that probe
+measures the id mint instead.
 
 Collision policy: xxhash64 over |V| distinct ids collides with probability
 ~|V|^2 / 2^65 (≈4e-8 at 1.2M, ≈2.7% at 1e9). ``encode_split_graph``
-VERIFIES injectivity with one distinct-count job and raises if a collision
-exists — at which point the caller falls back to the exact string path
-(correctness is never probabilistic; the hash is an optimization with a
-checked precondition). A dense dictionary (zipWithIndex-style) is the
-future path for 1e9+ vertex graphs where collisions become likely.
+VERIFIES injectivity with one distinct-count job and raises
+``IdCollisionError`` if a collision exists.
 """
 
 from __future__ import annotations
@@ -69,11 +69,3 @@ def encode_split_graph(sg: SplitGraph, check: bool = True) -> EncodedGraph:
             )
     return EncodedGraph(edges=edges, vertices=vertices, tag_dict=tag_dict)
 
-
-def decode(df: DataFrame, tag_dict: DataFrame, col: str = "tag") -> DataFrame:
-    """Replace the long ``col`` with its original string via the dictionary."""
-    out_cols = [c for c in df.columns if c != col]
-    return (
-        df.join(tag_dict, df[col] == tag_dict["tag"], "inner")
-        .select(F.col("tag_str").alias(col), *out_cols)
-    )

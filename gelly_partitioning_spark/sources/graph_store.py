@@ -8,12 +8,14 @@ reference re-reads its CSV and re-splits on every run
 (AlphaNodeSplitting.java:256-273 — no counterpart); this module removes
 the cost for *our* restarts:
 
-- ``save_prepared_graph`` runs split + (optional) long-id encoding ONCE,
-  the same ``distributed.salted_layout`` a fresh salted run builds, and
-  writes the routing table as a Spark **bucketed table**
+- ``save_prepared_graph`` runs the split ONCE, the same
+  ``distributed.salted_layout`` a fresh salted run builds on the same
+  long vids, and writes the routing table as a Spark **bucketed table**
   (``bucketBy(n, 'src')`` + ``sortBy('src')``): the on-disk layout IS the
   hash partitioning the scatter join needs. The per-sub-vertex
-  (src, tag, deg) attachment table is bucketed the same way.
+  (src, tag, deg) attachment table is bucketed the same way, and the
+  (vid, tag, degree) vertex table that minted the vids is stored beside
+  them: a restart keys on it and decodes through it.
 - ``load_prepared_graph`` reopens the tables; a bucketed scan reports
   ``HashPartitioning(src, n)`` so the scatter join's edge side needs **no
   Exchange at all** — Spark shuffles only the (vertex-sized) rank side to
@@ -52,17 +54,14 @@ class PreparedGraph:
               survives the cache (InMemoryRelation keeps child
               partitioning).
     sub_deg:  (src, tag, deg) one row per sub-vertex, bucketed by src.
-    tag_dict: (tag, id) decode dictionary when long-encoded, else None.
+    vertices: (vid, tag, degree) the vertex table the layout was split
+              on; ``src`` is a sub-vertex id, ``tag`` and ``dst_tag`` vids.
     """
 
     edges: DataFrame
     sub_deg: DataFrame
-    tag_dict: DataFrame | None
+    vertices: DataFrame
     name: str
-
-    def degrees(self) -> DataFrame:
-        """(tag, deg) per original vertex — one row per tag."""
-        return self.sub_deg.select("tag", "deg").distinct()
 
 
 def _table(name: str, suffix: str) -> str:
@@ -79,58 +78,46 @@ def save_prepared_graph(
     buckets: int = 32,
     use_long_ids: bool = True,
 ) -> PreparedGraph:
-    """Split + encode ``edges`` once; persist the bucketed layout.
+    """Split ``edges`` once; persist the bucketed layout and its vertex
+    table, replacing every table a layout of the same name had.
 
-    The split fan-out, threshold and encoding are baked into the layout —
-    a restart reuses all three (changing them means re-preparing, exactly
-    like re-bucketing a table).
+    The split fan-out and threshold are baked into the layout — a restart
+    reuses both (changing them means re-preparing, exactly like
+    re-bucketing a table). ``use_long_ids`` is accepted and ignored: a
+    layout is always keyed on the vertex table's long ids.
     """
     spark = edges.sparkSession
     edges = normalize_edges(edges)
     vt = distributed.vertex_table(edges)
-    e, sub_deg, tag_dict = distributed.salted_layout(
-        edges, vt, True, threshold, alpha, level, encode=use_long_ids, with_deg=True
+    e, sub_deg = distributed.salted_layout(
+        edges, vt, True, threshold, alpha, level, with_deg=True
     )
 
-    def write_bucketed(df: DataFrame, suffix: str) -> None:
+    def write(df: DataFrame, suffix: str, bucketed: bool = True) -> None:
         tbl = _table(name, suffix)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(buckets, "src")
-            .sortBy("src")
-            .option("path", f"{base_path}/{suffix}")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
+        w = df.write.mode("overwrite")
+        if bucketed:
+            w = w.bucketBy(buckets, "src").sortBy("src")
+        w.option("path", f"{base_path}/{suffix}").format("parquet").saveAsTable(tbl)
 
-    write_bucketed(e, "edges")
-    write_bucketed(sub_deg, "subdeg")
-    tbl = _table(name, "tags")
-    # ALWAYS drop the old tags table first: re-preparing the same name as a
-    # string layout (use_long_ids=False, or after an IdCollisionError
-    # fallback) over a previously long-encoded layout must not leave a
-    # stale dictionary behind — load_prepared_graph would hand consumers a
-    # long-keyed tag_dict against string tags (silent empty/wrong joins)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if tag_dict is not None:
-        tag_dict.write.mode("overwrite").option("path", f"{base_path}/tags").format(
-            "parquet"
-        ).saveAsTable(tbl)
-    else:
-        import shutil
-
-        shutil.rmtree(f"{base_path}/tags", ignore_errors=True)
+    write(e, "edges")
+    write(sub_deg, "subdeg")
+    write(vt.degrees, "vertices", bucketed=False)
     release_checkpoint(vt.degrees)
     return load_prepared_graph(spark, name)
 
 
 def load_prepared_graph(spark: SparkSession, name: str) -> PreparedGraph:
     """Reopen a persisted layout by name (same metastore/warehouse)."""
-    edges = spark.table(_table(name, "edges"))
-    sub_deg = spark.table(_table(name, "subdeg"))
-    try:
-        tag_dict = spark.table(_table(name, "tags"))
-    except Exception:
-        tag_dict = None
-    return PreparedGraph(edges=edges, sub_deg=sub_deg, tag_dict=tag_dict, name=name)
+    if not spark.catalog.tableExists(_table(name, "vertices")):
+        raise ValueError(
+            f"prepared layout {name!r} has no vertex table (an older format "
+            "keyed on hashed or string ids): re-save it with save_prepared_graph"
+        )
+    return PreparedGraph(
+        edges=spark.table(_table(name, "edges")),
+        sub_deg=spark.table(_table(name, "subdeg")),
+        vertices=spark.table(_table(name, "vertices")),
+        name=name,
+    )

@@ -90,13 +90,44 @@ def _route(edge_col: str, neighbor_tag_col: str, n_splits_col: str, seed: int):
     ).otherwise(F.col(edge_col))
 
 
+def _without_separator(col: str):
+    """``col``, failing the task on an id that contains ``SEP``."""
+    return F.when(~F.col(col).contains(SEP), F.col(col)).otherwise(
+        F.raise_error(F.concat(F.lit(f"vertex id contains reserved separator {SEP!r}: "), F.col(col)))
+    ).alias(col)
+
+
+def resolve_threshold(degree_df: DataFrame, threshold: int | None) -> int:
+    """``threshold``, or, when None, xMin derived from a (degree) table
+    (see ``split_graph``)."""
+    if threshold is not None:
+        return threshold
+    row = degree_df.agg(
+        F.count("*").alias("n"),
+        F.ceil(F.avg("degree")).alias("mean_t"),
+        F.expr("approx_percentile(degree, 0.999)").alias("q_t"),
+    ).first()
+    mean_t = max(int(row["mean_t"]) if row["mean_t"] is not None else 2, 2)
+    if (row["n"] or 0) >= 10_000 and row["q_t"] is not None:
+        return max(int(row["q_t"]), mean_t)
+    return mean_t
+
+
+def n_splits(threshold: int, alpha: int, level: int):
+    """The flat fan-out of a vertex from its ``degree`` column:
+    clamp(ceil(degree/threshold), 1, alpha**level)."""
+    return F.least(
+        F.lit(int(alpha) ** int(level)).cast("long"),
+        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("degree") / F.lit(threshold))),
+    )
+
+
 def split_graph(
     edges: DataFrame,
     threshold: int | None = DEFAULT_THRESHOLD,
     alpha: int = DEFAULT_ALPHA,
     level: int = DEFAULT_LEVEL,
     mode: str = "flat",
-    degree_df: DataFrame | None = None,
 ) -> SplitGraph:
     """Build the split graph from a *directed* edge DataFrame.
 
@@ -122,28 +153,17 @@ def split_graph(
     # the rewrite pass would otherwise each re-run the upstream scan +
     # distinct (the explain audit showed the subtree duplicated).
     und = checkpoint_static(undirected(edges), eager=False)
-    if degree_df is None:
-        # lazy vertex-sized cache: the derived degree table feeds BOTH
-        # broadcast fan-out builds (and the auto-threshold agg) — without
-        # it each consumer re-ran the full aggregation (r6, the same fix
-        # degree_count's explicit path got; the plan showed the groupBy
-        # subtree once per BroadcastExchange)
-        degree_df = (
-            und.groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").cast("long").alias("degree"))
-            .localCheckpoint(eager=False)
-        )
-    if threshold is None:
-        row = degree_df.agg(
-            F.count("*").alias("n"),
-            F.ceil(F.avg("degree")).alias("mean_t"),
-            F.expr("approx_percentile(degree, 0.999)").alias("q_t"),
-        ).first()
-        mean_t = max(int(row["mean_t"]) if row["mean_t"] is not None else 2, 2)
-        if (row["n"] or 0) >= 10_000 and row["q_t"] is not None:
-            threshold = max(int(row["q_t"]), mean_t)
-        else:
-            threshold = mean_t
+    # lazy vertex-sized cache: the degree table feeds BOTH broadcast
+    # fan-out builds (and the auto-threshold agg) — without it each
+    # consumer re-ran the full aggregation (r6, the same fix degree_count's
+    # explicit path got; the plan showed the groupBy subtree once per
+    # BroadcastExchange)
+    degree_df = (
+        und.groupBy(F.col("src").alias("id"))
+        .agg(F.count("*").cast("long").alias("degree"))
+        .localCheckpoint(eager=False)
+    )
+    threshold = resolve_threshold(degree_df, threshold)
     if mode == "flat":
         e = _split_flat(und, degree_df, threshold, alpha, level)
     elif mode == "tree":
@@ -161,32 +181,15 @@ def split_graph(
 
 def _split_flat(und: DataFrame, degree_df: DataFrame, threshold: int, alpha: int, level: int) -> DataFrame:
     """Single-pass split: fan-out = clamp(ceil(degree/threshold), 1, alpha^level)."""
-    cap = int(alpha) ** int(level)
     fanout = degree_df.select(
-        "id",
-        F.least(
-            F.lit(cap).cast("long"),
-            F.greatest(F.lit(1).cast("long"), F.ceil(F.col("degree") / F.lit(threshold))),
-        ).alias("n_splits"),
+        "id", n_splits(threshold, alpha, level).alias("n_splits")
     ).filter(F.col("n_splits") > 1)
     # Guard: an input id that already contains the sub-vertex separator
     # would make generated sub-vertex ids ambiguous (and unsplit() would
     # truncate it). Checked only on the tiny skewed set when the fanout
     # table materializes for broadcast — non-split ids never acquire a
     # suffix, and all tag-based code paths ignore the id string entirely.
-    fanout = fanout.select(
-        F.when(
-            ~F.col("id").contains(SEP), F.col("id")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"vertex id contains reserved separator {SEP!r}: "),
-                    F.col("id"),
-                )
-            )
-        ).alias("id"),
-        "n_splits",
-    )
+    fanout = fanout.select(_without_separator("id"), "n_splits")
     # The skewed set is tiny (power-law tail above threshold) — broadcast
     # both attachment joins so the full edge set is never shuffled here.
     e = (
@@ -231,18 +234,7 @@ def _split_tree(und: DataFrame, threshold: int, alpha: int, level: int) -> DataF
         # already contains SEP would make generated sub-vertex ids ambiguous
         # (level-0 only: deeper levels split ids the engine itself minted)
         if lvl == 0:
-            skewed = skewed.select(
-                F.when(~F.col("id").contains(SEP), F.col("id"))
-                .otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit(f"vertex id contains reserved separator {SEP!r}: "),
-                            F.col("id"),
-                        )
-                    )
-                )
-                .alias("id")
-            )
+            skewed = skewed.select(_without_separator("id"))
         alpha_col = f"__alpha_{lvl}"
         sk_src = F.broadcast(skewed.select(F.col("id").alias("src"), F.lit(int(alpha)).cast("long").alias(alpha_col)))
         sk_dst = F.broadcast(skewed.select(F.col("id").alias("dst"), F.lit(int(alpha)).cast("long").alias(alpha_col + "d")))
@@ -260,6 +252,95 @@ def _split_tree(und: DataFrame, threshold: int, alpha: int, level: int) -> DataF
             )
         )
     return e
+
+
+# -- the long-id form the distributed rungs run on ---------------------------
+
+
+def salt_bits(alpha: int, level: int, max_vid: int = 0) -> int:
+    """b, the low bits of a long sub-vertex id ``(vid << b) | salt`` that
+    hold the salt: ceil(log2 alpha) per level, so every flat fan-out
+    (≤ alpha**level) and every tree path fits. Raises when the largest
+    vertex id shifted by b does not fit a signed long."""
+    b = int(level) * (int(alpha) - 1).bit_length()
+    if max_vid.bit_length() + b > 63:
+        raise ValueError(
+            f"sub-vertex ids do not fit a long: vertex id {max_vid} shifted by "
+            f"{b} salt bits (alpha={alpha}, level={level}); lower alpha or level"
+        )
+    return b
+
+
+def route_vids(edges: DataFrame, ids: DataFrame, bits: int) -> DataFrame:
+    """(src, dst_tag, w): both orientations of each directed edge, the
+    endpoints mapped to their ``vid`` through ``ids`` (tag, vid, n) and the
+    source salted to sub-vertex ``(vid << bits) | pmod(xxhash64(neighbour
+    vid), n)`` — routing by the neighbour, as ``_route`` does on strings.
+    One pass: each mapped edge explodes into its two routing rows."""
+
+    def end(c: str, v: str, n: str):
+        return ids.select(F.col("tag").alias(c), F.col("vid").alias(v), F.col("n").alias(n))
+
+    e = edges.join(end("src", "s", "sn"), "src").join(end("dst", "d", "dn"), "dst")
+
+    def row(v: str, n: str, nbr: str):
+        salt = F.pmod(F.xxhash64(nbr), F.col(n))
+        return F.struct(
+            F.shiftleft(v, bits).bitwiseOR(salt).alias("src"),
+            F.col(nbr).alias("dst_tag"),
+            F.col("w"),
+        )
+
+    return e.select(F.explode(F.array(row("s", "sn", "d"), row("d", "dn", "s"))).alias("r")).select("r.*")
+
+
+def _fan(base, n, shift: int = 0):
+    """Explode each row into its ``n`` salted ids ``base | (k << shift)``,
+    k < n (k = 0 is ``base`` itself)."""
+    salts = F.sequence(F.lit(0).cast("long"), n - 1)
+    return F.explode(F.transform(salts, lambda k: base.bitwiseOR(F.shiftleft(k, shift))))
+
+
+def split_vids(
+    edges: DataFrame, vertices: DataFrame, threshold: int | None, alpha: int,
+    level: int, mode: str = "flat", max_vid: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """The split of a directed (src, dst, w) edge frame on the long ids of
+    ``vertices`` (tag, vid, degree): (routing rows (src, dst_tag, w),
+    sub-vertices (src, tag, degree)), ``tag`` being the vertex's vid.
+
+    Sub-vertex ids are unique by construction, and the sub-vertex table
+    is built from the fan-out, not recovered from the 2|E| routing rows:
+    flat mode fans each vertex out to its n_splits salts; tree mode fans
+    the skewed sub-vertices out level by level, each level's bucket in its
+    own ceil(log2 alpha) bits. A salt that draws no edge is a sub-vertex
+    without routing rows, which joins nothing.
+    """
+    b = salt_bits(alpha, level, max_vid)
+    threshold = resolve_threshold(vertices, threshold)
+    vid, one = F.col("vid"), F.lit(1).cast("long")
+    if mode not in ("flat", "tree"):
+        raise ValueError(f"unknown split mode: {mode}")
+    n = n_splits(threshold, alpha, level) if mode == "flat" else one
+    e = route_vids(edges, vertices.select("tag", "vid", n.alias("n")), b)
+    subs = vertices.select(_fan(F.shiftleft(vid, b), n).alias("src"), vid.alias("tag"), "degree")
+    per = (int(alpha) - 1).bit_length()
+    for lvl in range(int(level) if mode == "tree" else 0):
+        skewed = (
+            e.groupBy("src").count().filter(F.col("count") > threshold)
+            .select("src", F.lit(int(alpha)).cast("long").alias("_n"))
+        )
+        if skewed.isEmpty():
+            break
+        skewed, n = F.broadcast(skewed), F.coalesce("_n", one)
+        bucket = F.pmod(F.xxhash64("dst_tag", F.lit(lvl + 1)), n)
+        e = e.join(skewed, "src", "left").select(
+            F.col("src").bitwiseOR(F.shiftleft(bucket, lvl * per)).alias("src"), "dst_tag", "w"
+        )
+        subs = subs.join(skewed, "src", "left").select(
+            _fan(F.col("src"), n, lvl * per).alias("src"), "tag", "degree"
+        )
+    return e, subs
 
 
 def merge_by_tag(partials: DataFrame, agg_exprs: list, key: str = "tag") -> DataFrame:

@@ -194,14 +194,18 @@ def release_checkpoint(df: DataFrame) -> None:
     """Best-effort unpersist of a localCheckpointed DataFrame's cached RDD.
 
     Only frames whose analyzed plan is a LogicalRDD (i.e. produced by
-    localCheckpoint) hold a persisted RDD; anything else is a no-op (the
-    reflection call fails and is swallowed). A localCheckpointed Dataset
+    localCheckpoint), or a chain of single-child nodes (a projection) over
+    one, hold a persisted RDD; anything else is a no-op (the reflection
+    call fails and is swallowed). A localCheckpointed Dataset
     is not in the CacheManager (``unpersist()`` is a no-op) and ``toRdd()``
     builds a DERIVED, non-persisted RDD; the persisted RDD is the one the
     LogicalRDD plan node holds, so that is the one released.
     """
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.children().size() == 1:
+            plan = plan.children().head()
+        plan.rdd().unpersist(False)
     except Exception:
         pass
 

@@ -18,17 +18,6 @@ def prepared(spark, hub_graph, tmp_path_factory):
     )
 
 
-@pytest.fixture(scope="module")
-def prepared_str(spark, hub_graph, tmp_path_factory):
-    """String (unencoded) layout — required by CC/LP, whose semantics are
-    defined on original ids."""
-    base = str(tmp_path_factory.mktemp("store_str"))
-    return save_prepared_graph(
-        hub_graph, name="hubpg_str", base_path=base, threshold=2, alpha=2,
-        level=4, buckets=4, use_long_ids=False,
-    )
-
-
 def test_prepared_pagerank_matches_cold_path(spark, hub_graph, prepared):
     want = {r["id"]: r["rank"] for r in pagerank(hub_graph, fixed_iterations=8, threshold=2).collect()}
     got = {r["id"]: r["rank"] for r in pagerank(None, fixed_iterations=8, prepared=prepared).collect()}
@@ -45,38 +34,52 @@ def test_prepared_reload_by_name(spark, prepared):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_prepared_cc_matches_cold_path(spark, hub_graph, prepared_str):
-    want = {
-        r["id"]: r["component"]
-        for r in connected_components(hub_graph, split=True, threshold=2).collect()
-    }
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(None, prepared=prepared_str).collect()
-    }
-    assert got == want
+# the broadcast and the salted rung
+RUNGS = [{}, {"broadcast_threshold_vertices": 0}]
 
 
-def test_prepared_lp_matches_cold_path(spark, hub_graph, prepared_str):
-    want = {
-        r["id"]: r["label"]
-        for r in label_propagation(
-            hub_graph, split=True, threshold=2, max_iterations=8,
-            broadcast_threshold_vertices=0,  # salted path, like prepared
-        ).collect()
-    }
-    got = {
-        r["id"]: r["label"]
-        for r in label_propagation(None, max_iterations=8, prepared=prepared_str).collect()
-    }
-    assert got == want
+def test_prepared_cc_matches_cold_path(spark, hub_graph, prepared):
+    """CC's min id comes from the original ids, which the layout's vertex
+    table keeps, so a prepared run equals a fresh one on either rung."""
+    for rung in RUNGS:
+        want = {
+            r["id"]: r["component"]
+            for r in connected_components(hub_graph, split=True, threshold=2, **rung).collect()
+        }
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(None, prepared=prepared, **rung).collect()
+        }
+        assert got == want, rung
 
 
-def test_prepared_cc_lp_reject_encoded_layout(spark, prepared):
-    with pytest.raises(ValueError, match="string prepared layout"):
-        connected_components(None, prepared=prepared)
-    with pytest.raises(ValueError, match="string prepared layout"):
-        label_propagation(None, prepared=prepared)
+def test_prepared_lp_matches_cold_path(spark, hub_graph, prepared):
+    for rung in RUNGS:
+        want = {
+            r["id"]: r["label"]
+            for r in label_propagation(
+                hub_graph, split=True, threshold=2, max_iterations=8, **rung
+            ).collect()
+        }
+        got = {
+            r["id"]: r["label"]
+            for r in label_propagation(None, max_iterations=8, prepared=prepared, **rung).collect()
+        }
+        assert got == want, rung
+
+
+def test_older_layout_without_vertex_table_raises(spark, hub_graph, tmp_path):
+    """A layout saved before the vertex table was stored (routing and
+    sub-vertex tables only) is refused with the way out."""
+    rows = spark.createDataFrame([("1#0", "2", 1.0)], "src string, dst_tag string, w double")
+    spark.sql("DROP TABLE IF EXISTS oldpg_vertices")
+    for suffix in ("edges", "subdeg"):
+        spark.sql(f"DROP TABLE IF EXISTS oldpg_{suffix}")
+        rows.write.option("path", str(tmp_path / suffix)).format("parquet").saveAsTable(
+            f"oldpg_{suffix}"
+        )
+    with pytest.raises(ValueError, match="re-save it with save_prepared_graph"):
+        load_prepared_graph(spark, "oldpg")
 
 
 def test_prepared_scatter_has_no_edge_side_exchange(spark, prepared):

@@ -1,16 +1,22 @@
-"""Physical-plan regression tests (explain-only — no jobs executed).
+"""Physical-plan regression tests (explain-only, except the salted
+superstep guard, which runs the two-superstep call it inspects).
 
 Locks in the plan properties the engine promises at scale:
 - parquet scans are column-pruned (ReadSchema ⊆ needed columns)
 - the skew-fanout attachment joins are broadcast
-- iterative scatter joins are shuffle-hash (no per-superstep edge sort)
+- iterative scatter joins are shuffle-hash (no per-superstep edge sort),
+  and the salted routing rows never exchange inside the loop
 - no cartesian product outside explicitly-quadratic operators
 """
 
 import io
+import re
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
+
+from gelly_partitioning_spark import connected_components, pagerank
 
 
 def plan_of(df) -> str:
@@ -37,6 +43,20 @@ def test_split_uses_broadcast(spark, hub_graph):
     p = plan_of(sg.edges)
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
+
+
+def test_vid_routing_uses_broadcast(spark, hub_graph):
+    """The long-id split maps both endpoints to vids through the
+    broadcast vertex table: the 2|E| side is not shuffled to build it."""
+    from gelly_partitioning_spark import distributed, normalize_edges
+
+    g = normalize_edges(hub_graph)
+    e, _ = distributed.salted_layout(
+        g, distributed.vertex_table(g), True, 2, 2, 4
+    )
+    p = plan_of(e)
+    joins = [n for n in re.findall(r"^\(\d+\) (\w+)", p, re.M) if n.endswith("Join")]
+    assert joins == ["BroadcastHashJoin"] * 2, p
 
 
 def test_triangle_no_cartesian(spark, tri_graph):
@@ -99,3 +119,41 @@ def test_jaccard_wedges_are_degree_oriented(spark, jaccard_graph):
     assert "lo#" in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+SALTED_SUPERSTEP = {
+    "pagerank": lambda g: pagerank(
+        g, fixed_iterations=2, threshold=2, broadcast_threshold_vertices=0
+    ).collect(),
+    "cc": lambda g: connected_components(
+        g, max_iterations=2, threshold=2, broadcast_threshold_vertices=0
+    ).collect(),
+}
+
+
+@pytest.mark.parametrize("algo", list(SALTED_SUPERSTEP))
+def test_salted_superstep_keeps_routing_rows_in_place(spark, hub_graph, monkeypatch, algo):
+    """Superstep 1 of a salted run: the routing table's checkpoint keeps
+    HashPartitioning(src), so its scan feeds the scatter join with no
+    Exchange; only vertex-sized sides shuffle. Five exchanges and three
+    joins per superstep (the routing-row exchange is the one a checkpoint
+    that lost its partitioning would add)."""
+    from gelly_partitioning_spark.superstep import SuperstepRunner
+
+    plans, run = [], SuperstepRunner.run
+
+    def first_step(self, state, step, *a, **k):
+        plans.append(plan_of(step(state, 1)))
+        return run(self, state, step, *a, **k)
+
+    monkeypatch.setattr(SuperstepRunner, "run", first_step)
+    SALTED_SUPERSTEP[algo](hub_graph)
+    p = plans[0]
+    nodes = re.findall(r"^\(\d+\) (\w+)", p, re.M)
+    assert nodes.count("Exchange") == 5, p
+    assert sum(n.endswith("Join") for n in nodes) == 3, p
+    routing = re.search(
+        r"Scan ExistingRDD\nOutput \[\d+\]: \[(src#\d+L), dst_tag#\d+L\]", p
+    ).group(1)
+    # the scan's own partitioning is the only hash partitioning on that key
+    assert p.count(f"hashpartitioning({routing},") == 1, p

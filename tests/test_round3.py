@@ -159,22 +159,20 @@ def test_auto_threshold_small_graph_uses_mean(spark, hub_graph):
 def test_auto_threshold_quantile_on_large_powerlaw(spark):
     """≥10k vertices: the p99.9 quantile (tail cut) wins over the mean —
     far fewer, far more skewed vertices get split."""
-    from gelly_partitioning_spark import from_pairs, split_graph
+    from gelly_partitioning_spark.splitting import resolve_threshold
 
     # synthetic degree table: zipf-ish, 12000 vertices, a few extreme hubs
     degs = [(f"v{i}", max(1, int(2000 / (i + 1)))) for i in range(12000)]
-    degree_df = spark.createDataFrame(degs, "id string, degree long")
-    tiny = from_pairs(spark, [("v0", "v1")])
-    sg = split_graph(tiny, threshold=None, degree_df=degree_df)
+    t = resolve_threshold(spark.createDataFrame(degs, "id string, degree long"), None)
     values = sorted(d for _, d in degs)
     mean_t = sum(values) / len(values)
     # approx_percentile rank error is ±n/accuracy ≈ ±1.2 ranks here; allow
     # a ±10-rank window around the exact p99.9 order statistic
     lo = values[int(0.999 * (len(values) - 1)) - 10]
     hi = values[min(int(0.999 * (len(values) - 1)) + 10, len(values) - 1)]
-    assert sg.threshold > mean_t  # not the bulk mean
-    assert lo <= sg.threshold <= hi
-    assert sg.threshold <= values[-1]
+    assert t > mean_t  # not the bulk mean
+    assert lo <= t <= hi
+    assert t <= values[-1]
 
 
 # -- superstep micro-batching --------------------------------------------------

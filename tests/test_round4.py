@@ -94,10 +94,13 @@ def test_embedding_near_dup_default_is_exact(spark):
     assert default == exact  # recall 1 unless the caller opts into LSH
 
 
-# -- stale tag dictionary dropped on re-prepare (ADVICE r3 #1) -----------------
+# -- re-saving a layout name replaces every table of it ----------------------
 
 
-def test_reprepare_string_layout_drops_stale_tag_dict(spark, hub_graph, tmp_path):
+def test_resave_replaces_every_layout_table(spark, hub_graph, cc_graph, tmp_path):
+    """A name re-saved over another graph's layout keeps none of the old
+    routing rows, sub-vertices or vertex table: the restart answers for
+    the new graph."""
     from gelly_partitioning_spark import connected_components
     from gelly_partitioning_spark.sources import (
         load_prepared_graph,
@@ -105,20 +108,16 @@ def test_reprepare_string_layout_drops_stale_tag_dict(spark, hub_graph, tmp_path
     )
 
     base = str(tmp_path / "store")
-    p1 = save_prepared_graph(
-        hub_graph, name="restale", base_path=base, threshold=2, buckets=4
-    )
-    assert p1.tag_dict is not None  # long-encoded layout
-    p2 = save_prepared_graph(
-        hub_graph, name="restale", base_path=base, threshold=2, buckets=4,
-        use_long_ids=False,
-    )
-    assert p2.tag_dict is None
-    reloaded = load_prepared_graph(spark, "restale")
-    assert reloaded.tag_dict is None  # no stale dictionary survives
+    save_prepared_graph(hub_graph, name="resave", base_path=base, threshold=2, buckets=4)
+    save_prepared_graph(cc_graph, name="resave", base_path=base, threshold=2, buckets=4)
+    reloaded = load_prepared_graph(spark, "resave")
+    assert reloaded.edges.count() == 2 * cc_graph.count()
+    assert {r["tag"] for r in reloaded.vertices.collect()} == {"1", "2", "3", "4"}
+    vids = {r["vid"] for r in reloaded.vertices.collect()}
+    assert {r["tag"] for r in reloaded.sub_deg.collect()} == vids
     want = {
         r["id"]: r["component"]
-        for r in connected_components(hub_graph, split=True, threshold=2).collect()
+        for r in connected_components(cc_graph, split=True, threshold=2).collect()
     }
     got = {
         r["id"]: r["component"]
