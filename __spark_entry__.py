@@ -36,7 +36,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from gelly_partitioning_spark import (  # noqa: E402
     connected_components,
     degree_count,
-    jaccard,
+    jaccard_counts,
     pagerank,
     skew_census,
     triangle_count,
@@ -298,13 +298,12 @@ def _q_skew_census(spark, sf_dir):
 def _cooc_raw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-occurrence pair stream BEFORE the global distinct and the
     string minting: (s, d) long part keys, s < d numerically, one row
-    per per-order pair (cross-order duplicates remain). Feeds the
-    triangle count only — the count depends solely on the distinct
-    UNORDERED pair set, which is identical to cooc_edges' (orientation
-    convention and id spelling cannot change which unordered pairs
-    exist), so the raw stream lets triangle_count_long_pairs dedup
-    in-task instead of paying the distinct Exchange + string mint that
-    the declared cooc_edges schema needs."""
+    per per-order pair (cross-order duplicates remain). Its distinct
+    UNORDERED pair set is cooc_edges' (orientation convention and id
+    spelling cannot change which unordered pairs exist), so the triangle
+    count and jaccard, which both dedup on every rung, read it and skip
+    the distinct Exchange that the declared cooc_edges schema needs
+    (jaccard mints the 'p…' ids per row)."""
     li = _lineitem(spark, sf_dir).select(
         "l_orderkey", F.col("l_partkey").cast("long").alias("pk")
     )
@@ -336,29 +335,18 @@ def _q_triangle(spark, sf_dir):
 
 
 def _q_jaccard(spark, sf_dir):
-    # integer numerator/denominator — exact across engines; common
-    # neighbors via the degree-oriented triangle enumeration (bounded by
-    # degeneracy², not hub² — see algorithms/jaccard.py); the oracle keeps
-    # the naive wedge self-join as the semantic twin
-    from gelly_partitioning_spark.algorithms.jaccard import edge_common_neighbors
-    from gelly_partitioning_spark.graph import canonical_edges, degrees
-
-    edges = cooc_edges(spark, sf_dir)
-    canon = canonical_edges(edges).withColumn("w", F.lit(1.0))
-    deg = degrees(canon)
-    common = edge_common_neighbors(canon.select("src", "dst")).withColumnRenamed(
-        "common", "common_cnt"
-    )
-    return (
-        canon.select("src", "dst")
-        .join(common, ["src", "dst"], "left")
-        .join(deg.withColumnRenamed("id", "src").withColumnRenamed("degree", "sd"), "src")
-        .join(deg.withColumnRenamed("id", "dst").withColumnRenamed("degree", "dd"), "dst")
-        .select(
-            "src",
-            "dst",
-            F.coalesce("common_cnt", F.lit(0)).cast("long").alias("common_cnt"),
-            (F.col("sd") + F.col("dd") - F.coalesce("common_cnt", F.lit(0))).cast("long").alias("union_cnt"),
+    # integer numerator/denominator — exact across engines; one numpy
+    # task when the edge set fits the single-task rung, else the
+    # degree-oriented wedge/close joins (see algorithms/jaccard.py); the
+    # oracle keeps the naive wedge self-join as the semantic twin.
+    # jaccard_counts canonicalizes and dedups its input on both rungs, so
+    # it reads the raw pair stream: cooc_edges' distinct would be a second
+    # exchange for the same set
+    raw = _cooc_raw_pairs(spark, sf_dir)
+    return jaccard_counts(
+        raw.select(
+            F.concat(F.lit("p"), F.col("s").cast("string")).alias("src"),
+            F.concat(F.lit("p"), F.col("d").cast("string")).alias("dst"),
         )
     )
 

@@ -8,6 +8,7 @@ from .algorithms import (
     connected_components,
     degree_count,
     jaccard,
+    jaccard_counts,
     jaccard_vertex,
     label_propagation,
     pagerank,

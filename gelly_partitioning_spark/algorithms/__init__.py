@@ -1,6 +1,6 @@
 from .connected_components import connected_components
 from .degree import degree_count
-from .jaccard import jaccard, jaccard_vertex
+from .jaccard import jaccard, jaccard_counts, jaccard_vertex
 from .label_propagation import label_propagation
 from .neighborhoods import aggregate_neighborhoods, neighbor_sets
 from .pagerank import pagerank
@@ -11,6 +11,7 @@ __all__ = [
     "connected_components",
     "degree_count",
     "jaccard",
+    "jaccard_counts",
     "jaccard_vertex",
     "label_propagation",
     "aggregate_neighborhoods",

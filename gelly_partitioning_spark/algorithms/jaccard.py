@@ -12,26 +12,41 @@ the hub's neighbor set never lives in one task):
   common(a,b) = #common neighbors of edge (a,b) = #triangles through (a,b)
   J(a,b)      = common / (deg(a) + deg(b) − common)
 
-restricted to actual edges (a,b); edges with no common neighbor get 0.0 via
-left join + coalesce.
+restricted to actual edges (a,b). Since those pairs ARE edges, common()
+comes from the same degree-oriented enumeration as triangle_count (each
+triangle found ONCE at its lowest-(degree,id) vertex, wedge fan-out
+bounded by degeneracy², not hub²), each triangle credited to its 3 edges
+— never the naive wedge self-join's deg(w)² rows through every hub w.
 
-Because J is only needed for pairs that ARE edges, the wedge count per
-pair equals the triangle count through that edge — so common() is
-computed with the same degree-oriented enumeration as triangle_count
-(each triangle found ONCE at its lowest-(degree,id) vertex, wedge
-fan-out bounded by degeneracy², not hub²), then each triangle is
-credited to its 3 edges. The naive undirected wedge self-join generates
-deg(w)² rows through every hub w — the round-1 scale gap this replaces.
-Per-vertex map flavor: ``jaccard_vertex`` collects the per-edge rows
-into a map (reference JACCARD_VERTICES golden).
+``jaccard_counts`` is the one pipeline (``jaccard``, ``jaccard_vertex``
+and the driver's query derive from it), on two rungs:
+
+- single-task, when the rows fit ``single_task_budget_bytes``: one task
+  codes the ids in string order (Python ``str`` order is Spark's UTF-8
+  binary order), canonicalizes and dedups, and runs triangle_count's
+  per-edge common-neighbour kernel — no exchange, no join;
+- distributed, above the budget or on an empty input: the canonical edge
+  set, ``edge_common_neighbors``' oriented wedge/close joins and two
+  degree joins; an edge with no common neighbor gets 0 (left join).
+
+``jaccard_vertex`` collects the per-edge rows into a per-vertex map (the
+reference's JACCARD_VERTICES golden).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import single_task
 from ..graph import canonical_edges, degrees, normalize_edges
-from .triangle_count import oriented_edges
+from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
+from .triangle_count import canonical_pairs, common_neighbour_counts, oriented_edges
+
+# Single-task working set per input (src, dst) string row, measured: the
+# task over sf0.1's 1,199,575 co-occurrence rows ('p…' ids) peaks 248 MB
+# above a fresh Python process's baseline, 217 B/row (Arrow in, the
+# string coding, the kernel's bitmap and wedge chunks, Arrow out).
+_SINGLE_TASK_ROW_BYTES = 220
 
 
 def edge_common_neighbors(canon: DataFrame) -> DataFrame:
@@ -70,38 +85,75 @@ def edge_common_neighbors(canon: DataFrame) -> DataFrame:
     return per_edge.groupBy("src", "dst").agg(F.count("*").cast("long").alias("common"))
 
 
-def jaccard(edges: DataFrame) -> DataFrame:
-    """(src, dst, jaccard) for each canonical undirected edge."""
-    edges = normalize_edges(edges)
-    canon = (
-        canonical_edges(edges).withColumn("w", F.lit(1.0)).localCheckpoint(eager=True)
-    )
-    # two consumers (the src- and dst-side degree attachments) — one
-    # vertex-sized materialization instead of two full aggregations
-    deg = degrees(canon).localCheckpoint(eager=False)
-    common = edge_common_neighbors(canon.select("src", "dst"))
+def _counts_kernel(c):
+    """(src, dst, common_cnt, union_cnt) of the canonical simple edge set
+    of raw string (src, dst) rows. The ids become their ranks in sorted
+    string order, so canonical_pairs' lo < hi is the id-canonical
+    orientation ``canonical_edges`` gives."""
+    import numpy as np
+    import pandas as pd
 
-    j = (
-        canon.join(common, ["src", "dst"], "left")
+    m = len(c["src"])
+    # popped: the input's string objects are freed once they are coded
+    codes, ids = pd.factorize(np.concatenate([c.pop("src"), c.pop("dst")]), sort=True)
+    lo, hi = canonical_pairs(np, codes[:m], codes[m:])
+    common = common_neighbour_counts(np, lo, hi)
+    deg = np.bincount(np.concatenate([lo, hi]), minlength=len(ids))
+    return {
+        "src": ids[lo],
+        "dst": ids[hi],
+        "common_cnt": common,
+        "union_cnt": deg[lo] + deg[hi] - common,
+    }
+
+
+def jaccard_counts(
+    edges: DataFrame, single_task_budget_bytes: int = DEFAULT_SINGLE_TASK_BUDGET
+) -> DataFrame:
+    """(src, dst, common_cnt, union_cnt) for each canonical undirected
+    edge (src < dst): its common-neighbor count and the size of its
+    endpoints' neighbor-set union, both exact integers."""
+    edges = normalize_edges(edges)
+    copy = single_task.gate(
+        edges.select("src", "dst"), single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES
+    )
+    if copy is not None:
+        return single_task.run(
+            copy, _counts_kernel, "src string, dst string, common_cnt long, union_cnt long"
+        )
+    canon = canonical_edges(edges).withColumn("w", F.lit(1.0))
+    deg = degrees(canon)
+    common = F.coalesce("common", F.lit(0)).cast("long")
+    return (
+        canon.select("src", "dst")
+        .join(edge_common_neighbors(canon.select("src", "dst")), ["src", "dst"], "left")
         .join(deg.withColumnRenamed("id", "src").withColumnRenamed("degree", "sd"), "src")
         .join(deg.withColumnRenamed("id", "dst").withColumnRenamed("degree", "dd"), "dst")
-        .withColumn("common", F.coalesce("common", F.lit(0)))
         .select(
             "src",
             "dst",
-            (
-                F.col("common")
-                / (F.col("sd") + F.col("dd") - F.col("common")).cast("double")
-            ).alias("jaccard"),
+            common.alias("common_cnt"),
+            (F.col("sd") + F.col("dd") - common).cast("long").alias("union_cnt"),
         )
     )
-    return j
 
 
-def jaccard_vertex(edges: DataFrame) -> DataFrame:
+def jaccard(
+    edges: DataFrame, single_task_budget_bytes: int = DEFAULT_SINGLE_TASK_BUDGET
+) -> DataFrame:
+    """(src, dst, jaccard) for each canonical undirected edge."""
+    c = jaccard_counts(edges, single_task_budget_bytes)
+    return c.select(
+        "src", "dst", (F.col("common_cnt") / F.col("union_cnt").cast("double")).alias("jaccard")
+    )
+
+
+def jaccard_vertex(
+    edges: DataFrame, single_task_budget_bytes: int = DEFAULT_SINGLE_TASK_BUDGET
+) -> DataFrame:
     """(id, neighbors: map<string,double>) — per-vertex {neighbor: J} map,
     the reference's JACCARD_VERTICES shape (library/Jaccard.java:33-37)."""
-    j = jaccard(edges)
+    j = jaccard(edges, single_task_budget_bytes)
     both = j.unionByName(
         j.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "jaccard")
     )

@@ -1,10 +1,12 @@
 """The single-task rung: a whole graph computation inside ONE Spark task.
 
 When the input fits one task's memory, PageRank, connected components,
-degree count and triangle count skip the distributed paths: the rows
-are Arrow-batched into one ``mapInPandas`` task, a vectorized numpy
-kernel does the whole computation, and one result batch comes out: no
-collect into the application process, no per-superstep jobs. The
+degree count, triangle count and Jaccard skip the distributed paths:
+the rows are Arrow-batched into one ``mapInPandas`` task, a vectorized
+numpy kernel does the whole computation, and one result batch comes
+out: no collect into the application process, no per-superstep or
+per-join jobs. (Triangle count and Jaccard share one kernel, the
+per-edge common-neighbour count in ``algorithms/triangle_count.py``.) The
 algorithms own only their kernels and their working-set bytes per row;
 this module owns how the rung is gated, entered and abandoned:
 
@@ -86,9 +88,9 @@ def run(df: DataFrame, kernel: Callable[[dict], dict], schema: str) -> DataFrame
     """``kernel`` over all of ``df`` inside one ``mapInPandas`` task.
 
     The kernel receives one numpy array per input column (the Arrow
-    batches concatenated by column name) and returns the output columns
-    as a dict. ``df`` must be non-empty (``gate`` and ``admits`` ensure
-    it).
+    batches concatenated by column name) in a dict it may pop from, and
+    returns the output columns as a dict. ``df`` must be non-empty
+    (``gate`` and ``admits`` ensure it).
     """
     cols = df.columns
 
@@ -97,9 +99,9 @@ def run(df: DataFrame, kernel: Callable[[dict], dict], schema: str) -> DataFrame
         import pandas as pd
 
         chunks = list(pdfs)
-        yield pd.DataFrame(
-            kernel({c: np.concatenate([ch[c].to_numpy() for ch in chunks]) for c in cols})
-        )
+        columns = {c: np.concatenate([ch[c].to_numpy() for ch in chunks]) for c in cols}
+        del chunks  # the kernel may pop its columns to free them early
+        yield pd.DataFrame(kernel(columns))
 
     return df.coalesce(1).mapInPandas(task, schema)
 

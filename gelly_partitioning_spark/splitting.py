@@ -44,7 +44,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from .superstep import checkpoint_static
+from .superstep import checkpoint_static, release_checkpoint
 from .graph import undirected
 
 # Sub-vertex id separator. The reference uses '_' (SplitVertex.java:88);
@@ -220,15 +220,20 @@ def _split_tree(und: DataFrame, threshold: int, alpha: int, level: int) -> DataF
     """Reference-shaped recursive split: ``level`` rounds, each splitting
     currently-skewed (sub-)vertices by ``alpha`` with a fresh hash seed
     (SplitVertex.java:61-114; per-level rehash = seeded xxhash64 here).
-    Kept for parity debugging; O(level) passes — use 'flat' at scale."""
+    Kept for parity debugging; O(level) passes, each checkpointed — use
+    'flat' at scale."""
     e = und.select(
         "src", "dst", "w",
         F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"),
     )
+    owned: list[DataFrame] = []  # the previous level's checkpoint
     for lvl in range(int(level)):
+        # each level reads the last one's checkpoint, so its work does not
+        # re-run the levels before it
         deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
-        skewed = deg.filter(F.col("degree") > threshold).select("id")
-        if skewed.isEmpty():
+        skewed = deg.filter(F.col("degree") > threshold).select("id").localCheckpoint(eager=False)
+        if not skewed.count():
+            release_checkpoint(skewed)
             break
         # same reserved-separator guard as _split_flat: an input id that
         # already contains SEP would make generated sub-vertex ids ambiguous
@@ -250,7 +255,11 @@ def _split_tree(und: DataFrame, threshold: int, alpha: int, level: int) -> DataF
                 "src_tag",
                 "dst_tag",
             )
+            .localCheckpoint(eager=True)
         )
+        for df in (skewed, *owned):
+            release_checkpoint(df)
+        owned = [e]
     return e
 
 
@@ -325,21 +334,29 @@ def split_vids(
     e = route_vids(edges, vertices.select("tag", "vid", n.alias("n")), b)
     subs = vertices.select(_fan(F.shiftleft(vid, b), n).alias("src"), vid.alias("tag"), "degree")
     per = (int(alpha) - 1).bit_length()
+    owned: list[DataFrame] = []  # the previous level's checkpoints
     for lvl in range(int(level) if mode == "tree" else 0):
+        # each level reads the last one's checkpoints, so its work does
+        # not re-run the levels before it
         skewed = (
             e.groupBy("src").count().filter(F.col("count") > threshold)
             .select("src", F.lit(int(alpha)).cast("long").alias("_n"))
+            .localCheckpoint(eager=False)
         )
-        if skewed.isEmpty():
+        if not skewed.count():
+            release_checkpoint(skewed)
             break
         skewed, n = F.broadcast(skewed), F.coalesce("_n", one)
         bucket = F.pmod(F.xxhash64("dst_tag", F.lit(lvl + 1)), n)
         e = e.join(skewed, "src", "left").select(
             F.col("src").bitwiseOR(F.shiftleft(bucket, lvl * per)).alias("src"), "dst_tag", "w"
-        )
+        ).localCheckpoint(eager=True)
         subs = subs.join(skewed, "src", "left").select(
             _fan(F.col("src"), n, lvl * per).alias("src"), "tag", "degree"
-        )
+        ).localCheckpoint(eager=True)
+        for df in (skewed, *owned):
+            release_checkpoint(df)
+        owned = [e, subs]
     return e, subs
 
 

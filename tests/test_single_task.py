@@ -12,6 +12,7 @@ from gelly_partitioning_spark import (
     connected_components,
     degree_count,
     from_pairs,
+    jaccard_counts,
     pagerank,
     triangle_count,
     triangle_count_long_pairs,
@@ -32,7 +33,12 @@ def _cached(df):
 
 
 def _long_pairs(g):
-    return g.select(F.col(g.columns[0]).cast("long"), F.col(g.columns[1]).cast("long"))
+    """The graph on long ids: each (string-cast) id hashed, nulls kept."""
+
+    def key(c):
+        return F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c).cast("string")))
+
+    return g.select(key(g.columns[0]), key(g.columns[1]))
 
 
 ALGOS = {
@@ -50,6 +56,7 @@ ALGOS = {
     "triangle_count_long_pairs": lambda g, **kw: triangle_count_long_pairs(
         _long_pairs(g), **kw
     ).first()["triangles"],
+    "jaccard_counts": lambda g, **kw: sorted(map(tuple, jaccard_counts(g, **kw).collect())),
 }
 
 GRAPHS = {
@@ -66,6 +73,22 @@ GRAPHS = {
     "null_endpoint": lambda spark, request: _cached(spark.createDataFrame(
         [("1", "2"), ("1", "3"), ("1", None), ("2", "3"), (None, "4"), ("3", "4")],
         "src string, dst string",
+    )),
+    # string order ("10" < "100" < "2" < "9") is not numeric order
+    "string_order_ids": lambda spark, request: _cached(from_pairs(
+        spark, [(10, 9), (9, 100), (100, 10), (2, 10), (2, 9), (9, 7)]
+    )),
+    "unicode_ids": lambda spark, request: _cached(from_pairs(
+        spark, [("é", "a"), ("a", "ü"), ("ü", "é"), ("日本", "a"), ("日本", "é"), ("z", "日本")]
+    )),
+    # the string split (degree's distributed rung) still rejects a split
+    # vertex named with its separator, so the '#' id stays below threshold
+    "separator_id": lambda spark, request: _cached(from_pairs(
+        spark, [("x#1", "y"), ("y", "z"), ("z", "x#1"), ("z", "w"), ("w", "y")]
+    )),
+    "dup_reversed": lambda spark, request: _cached(from_pairs(
+        spark, [("a", "b"), ("b", "a"), ("a", "b"), ("b", "c"), ("c", "b"), ("c", "a"),
+                ("a", "c"), ("c", "d"), ("d", "c"), ("b", "d")]
     )),
 }
 
@@ -195,15 +218,34 @@ def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
 
 def test_triangle_core_close_methods_agree(monkeypatch):
     # the in-task close picks bitmap vs searchsorted from the exact
-    # vertex count; both must count identically (monkeypatching the cap
-    # works here because the core runs in-process, not on a worker)
+    # vertex count; both must give the same per-edge common-neighbour
+    # counts (monkeypatching the cap works here because the kernel runs
+    # in-process, not on a worker)
     import numpy as np
 
     s, d = np.random.default_rng(7).integers(0, 500, (2, 20000))
     keys = np.unique(np.minimum(s, d) * 500 + np.maximum(s, d))  # canonical, deduped
     lo, hi = keys // 500, keys % 500
     lo, hi = lo[lo != hi], hi[lo != hi]
-    bitmap = tcm._count_canonical_pairs(np, lo, hi)
+    bitmap = tcm.common_neighbour_counts(np, lo, hi)
     monkeypatch.setattr(tcm, "_BITMAP_CAP_BYTES", 0)
-    searchsorted = tcm._count_canonical_pairs(np, lo, hi)
-    assert bitmap == searchsorted > 0
+    searchsorted = tcm.common_neighbour_counts(np, lo, hi)
+    assert (bitmap == searchsorted).all() and bitmap.sum() > 0
+    # against the dense adjacency: |N(lo) ∩ N(hi)| per edge
+    adj = np.zeros((500, 500), dtype=np.int64)
+    adj[lo, hi] = adj[hi, lo] = 1
+    assert (bitmap == (adj @ adj)[lo, hi]).all()
+
+
+def test_jaccard_rung_runs_few_jobs(spark, tier_runs):
+    # a machine-independent bound on the rung's cost: the gate's count,
+    # the kernel task and the collect (the distributed path runs ~23)
+    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
+    sc, group = spark.sparkContext, "jaccard-single-task"
+    sc.setJobGroup(group, group)
+    try:
+        rows = jaccard_counts(g).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tier_runs) == 1 and len(rows) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5

@@ -1,8 +1,10 @@
 """Split-Merge kernel invariants (SplitVertex.java semantics)."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from gelly_partitioning_spark import degree_count, split_graph
+from gelly_partitioning_spark import degree_count, from_pairs, normalize_edges, split_graph
+from gelly_partitioning_spark import distributed as dist
 from gelly_partitioning_spark.splitting import SEP
 
 from .conftest import HUB_DEGREES
@@ -86,3 +88,32 @@ def test_split_rejects_id_with_separator(spark):
     sg = split_graph(bad, threshold=2, alpha=2, level=4)
     with pytest.raises(Exception, match="reserved separator"):
         sg.edges.count()
+
+
+@pytest.mark.parametrize("form", ["long", "string"])
+def test_tree_split_jobs_grow_linearly(spark, form):
+    # each tree level reads the previous level's checkpoint, so every
+    # level adds the same jobs; over the lazily grown plan each level
+    # re-ran all the ones before it (long: 20, 37, 70 jobs at levels 2-4)
+    g = normalize_edges(from_pairs(spark, [("hub", f"leaf{i}") for i in range(20)])).cache()
+    g.count()
+    vt = dist.vertex_table(g)
+    sc = spark.sparkContext
+
+    def jobs(level):
+        group = f"tree-split-{form}-{level}"
+        sc.setJobGroup(group, group)
+        try:
+            if form == "long":
+                e, subs = dist.salted_layout(g, vt, True, 1, 2, level, "tree")
+                subs.count()
+            else:
+                e = split_graph(g, threshold=1, level=level, mode="tree").edges
+            e.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # threshold 1: every level up to 4 still splits some sub-vertex
+    two, three, four = map(jobs, (2, 3, 4))
+    assert four - three == three - two > 0

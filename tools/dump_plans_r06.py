@@ -115,6 +115,7 @@ try:
     dump("cc_single_task", plan_of(connected_components(edges, threshold=256)))
     dump("degree_single_task", plan_of(entry._q_degree(spark, sf_dir)))
     dump("triangle_single_task", plan_of(entry._q_triangle(spark, sf_dir)))
+    dump("jaccard_single_task", plan_of(entry._q_jaccard(spark, sf_dir)))
 except TypeError:
     pass
 
@@ -134,7 +135,16 @@ dump(
     ),
 )
 dump("minhash_lsh", plan_of(entry._q_minhash(spark, sf_dir)))
-dump("jaccard", plan_of(entry._q_jaccard(spark, sf_dir)))
+# jaccard: the distributed (>budget) wedge/close plan over the same
+# cooc_edges input as the before-file (the query itself now reads the raw
+# pair stream); the round-start tree has no jaccard_counts
+try:
+    from gelly_partitioning_spark import jaccard_counts
+
+    jac = jaccard_counts(entry.cooc_edges(spark, sf_dir), single_task_budget_bytes=0)
+except ImportError:
+    jac = entry._q_jaccard(spark, sf_dir)
+dump("jaccard", plan_of(jac))
 # the distributed (>budget) degree path, same entry args/input as the
 # before-file so the pair is comparable — the r6 fan-out fix shows as the
 # two BroadcastExchange aggregation subtrees collapsing into one shared
