@@ -21,10 +21,11 @@ bounded by degeneracy², not hub²), each triangle credited to its 3 edges
 ``jaccard_counts`` is the one pipeline (``jaccard``, ``jaccard_vertex``
 and the driver's query derive from it), on two rungs:
 
-- single-task, when the rows fit ``single_task_budget_bytes``: one task
-  codes the ids in string order (Python ``str`` order is Spark's UTF-8
-  binary order), canonicalizes and dedups, and runs triangle_count's
-  per-edge common-neighbour kernel — no exchange, no join;
+- single-task, when the rows fit ``single_task_budget_bytes`` (each
+  charged a fixed size plus its ids' bytes): one task codes the ids in
+  string order (Python ``str`` order is Spark's UTF-8 binary order),
+  canonicalizes and dedups, and runs triangle_count's per-edge
+  common-neighbour kernel — no exchange, no join;
 - distributed, above the budget or on an empty input: the canonical edge
   set, ``edge_common_neighbors``' oriented wedge/close joins and two
   degree joins; an edge with no common neighbor gets 0 (left join).
@@ -35,6 +36,8 @@ reference's JACCARD_VERTICES golden).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
@@ -42,11 +45,19 @@ from ..graph import canonical_edges, degrees, normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from .triangle_count import canonical_pairs, common_neighbour_counts, oriented_edges
 
-# Single-task working set per input (src, dst) string row, measured: the
-# task over sf0.1's 1,199,575 co-occurrence rows ('p…' ids) peaks 248 MB
-# above a fresh Python process's baseline, 217 B/row (Arrow in, the
-# string coding, the kernel's bitmap and wedge chunks, Arrow out).
-_SINGLE_TASK_ROW_BYTES = 220
+# Single-task working set of an input (src, dst) string row: a fixed
+# charge plus one per UTF-8 byte of its two ids (Arrow in, the Python
+# strings, Arrow out). Measured by replaying the task outside Spark
+# (10k-row Arrow batches -> pandas -> kernel -> Arrow, peak RSS above a
+# fresh process's baseline, searchsorted close): ~165 B per row at
+# 1.2-1.5M rows (up to ~250 B on smaller inputs, which stay far below
+# the budget) plus 2.0-2.5 B per id byte. sf0.1's 1,199,575 'p…' rows
+# (13.1 MB of ids) are charged 256 MB and peak at 221-233 MB; 148,000 rows
+# of ~205-byte ids are charged 268 MB and peak at 195-203 MB. Python stores an
+# id that mixes ASCII with characters beyond Latin-1 at 2-4 bytes per
+# character, which this charge does not cover.
+_SINGLE_TASK_ROW_BYTES = 170
+_ID_BYTE_COST = 4
 
 
 def edge_common_neighbors(canon: DataFrame) -> DataFrame:
@@ -85,19 +96,24 @@ def edge_common_neighbors(canon: DataFrame) -> DataFrame:
     return per_edge.groupBy("src", "dst").agg(F.count("*").cast("long").alias("common"))
 
 
-def _counts_kernel(c):
+def _counts_kernel(c, budget_bytes):
     """(src, dst, common_cnt, union_cnt) of the canonical simple edge set
     of raw string (src, dst) rows. The ids become their ranks in sorted
     string order, so canonical_pairs' lo < hi is the id-canonical
-    orientation ``canonical_edges`` gives."""
+    orientation ``canonical_edges`` gives. The kernel's bitmap gets the
+    budget left after the gate's charge for these rows."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     m = len(c["src"])
     # popped: the input's string objects are freed once they are coded
     codes, ids = pd.factorize(np.concatenate([c.pop("src"), c.pop("dst")]), sort=True)
+    id_bytes = pc.binary_length(pa.array(ids, pa.string())).to_numpy() @ np.bincount(codes)
+    left = budget_bytes - m * _SINGLE_TASK_ROW_BYTES - _ID_BYTE_COST * int(id_bytes)
     lo, hi = canonical_pairs(np, codes[:m], codes[m:])
-    common = common_neighbour_counts(np, lo, hi)
+    common = common_neighbour_counts(np, lo, hi, left)
     deg = np.bincount(np.concatenate([lo, hi]), minlength=len(ids))
     return {
         "src": ids[lo],
@@ -115,11 +131,16 @@ def jaccard_counts(
     endpoints' neighbor-set union, both exact integers."""
     edges = normalize_edges(edges)
     copy = single_task.gate(
-        edges.select("src", "dst"), single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES
+        edges.select("src", "dst"),
+        single_task_budget_bytes,
+        _SINGLE_TASK_ROW_BYTES,
+        _ID_BYTE_COST * (F.octet_length("src") + F.octet_length("dst")),
     )
     if copy is not None:
         return single_task.run(
-            copy, _counts_kernel, "src string, dst string, common_cnt long, union_cnt long"
+            copy,
+            partial(_counts_kernel, budget_bytes=single_task_budget_bytes),
+            "src string, dst string, common_cnt long, union_cnt long",
         )
     canon = canonical_edges(edges).withColumn("w", F.lit(1.0))
     deg = degrees(canon)
@@ -138,25 +159,28 @@ def jaccard_counts(
     )
 
 
-def jaccard(
-    edges: DataFrame, single_task_budget_bytes: int = DEFAULT_SINGLE_TASK_BUDGET
-) -> DataFrame:
+def jaccard(edges: DataFrame) -> DataFrame:
     """(src, dst, jaccard) for each canonical undirected edge."""
-    c = jaccard_counts(edges, single_task_budget_bytes)
+    c = jaccard_counts(edges)
     return c.select(
         "src", "dst", (F.col("common_cnt") / F.col("union_cnt").cast("double")).alias("jaccard")
     )
 
 
-def jaccard_vertex(
-    edges: DataFrame, single_task_budget_bytes: int = DEFAULT_SINGLE_TASK_BUDGET
-) -> DataFrame:
+def jaccard_vertex(edges: DataFrame) -> DataFrame:
     """(id, neighbors: map<string,double>) — per-vertex {neighbor: J} map,
     the reference's JACCARD_VERTICES shape (library/Jaccard.java:33-37)."""
-    j = jaccard(edges, single_task_budget_bytes)
-    both = j.unionByName(
-        j.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "jaccard")
-    )
+    # both orientations of each edge from ONE scan: the single-task rung's
+    # output has no exchange for a union's second branch to reuse
+    j = jaccard(edges)
+    both = j.select(
+        F.explode(
+            F.array(
+                F.struct("src", "dst", "jaccard"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), "jaccard"),
+            )
+        ).alias("r")
+    ).select("r.*")
     return (
         both.groupBy(F.col("src").alias("id"))
         .agg(

@@ -17,6 +17,8 @@ its wedge gather, with one fewer shuffle.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
@@ -30,11 +32,6 @@ from ..superstep import fits_broadcast_budget, session_broadcast_threshold
 # codegen to ~0.5 s (length-bucketed triu_indices pair gather + one
 # bitmap probe per wedge).
 _SINGLE_TASK_ROW_BYTES = 48
-# In-task cap for the n²/8-byte adjacency bitmap used by the wedge-close
-# probe; above it the close falls back to a searchsorted membership test
-# on packed rank keys (~5x slower per wedge, no n² memory) — the choice
-# is made INSIDE the task where the exact vertex count is known.
-_BITMAP_CAP_BYTES = 512 << 20
 # Wedges generated per numpy step, and four times the closed wedges held
 # before they are credited: bounds the kernel's transient arrays (~40 B
 # per wedge) whatever the graph.
@@ -56,7 +53,7 @@ def canonical_pairs(np, s, d):
     return lo, hi
 
 
-def common_neighbour_counts(np, lo_ids, hi_ids):
+def common_neighbour_counts(np, lo_ids, hi_ids, bitmap_budget_bytes):
     """Per-edge common-neighbour counts (int64, aligned with the input) of
     a CANONICAL (lo < hi by any total order), DEDUPED, self-loop-free
     simple edge set given as two integer arrays. An edge's count is the
@@ -67,6 +64,12 @@ def common_neighbour_counts(np, lo_ids, hi_ids):
     needs some orientation — enumerate each triangle's unique wedge at its
     lowest-ranked vertex, close it against the edge set, and credit the
     closed wedge to its three edges. Pure integer work.
+
+    The close probes an n²/8-byte adjacency bitmap when it fits
+    ``bitmap_budget_bytes`` (the caller's budget left after its rows'
+    charge), else a ``searchsorted`` membership test on packed rank keys
+    (no n² memory; sf0.1's 41M wedges take 2.5 s instead of 1.1 s): the
+    choice is made in-task, where the exact vertex count n is known.
 
     Max out-degree after degree-orientation is ≤ √(2m) (a vertex keeping
     t out-edges has t neighbors of degree ≥ t, so Σdeg ≥ t²), hence one
@@ -96,7 +99,7 @@ def common_neighbour_counts(np, lo_ids, hi_ids):
     # the lexsort order above IS ascending key order
     ekeys = lo.astype(np.int64) * n + hi
     stride = (n + 7) >> 3
-    use_bitmap = n * stride <= _BITMAP_CAP_BYTES
+    use_bitmap = n * stride <= bitmap_budget_bytes
     if use_bitmap:
         # adjacency bitmap: bit (u, v) set iff oriented edge u→v exists
         bits = np.zeros(n * stride, dtype=np.uint8)
@@ -150,7 +153,7 @@ def common_neighbour_counts(np, lo_ids, hi_ids):
     return common
 
 
-def _raw_pairs_kernel(c):
+def _raw_pairs_kernel(c, budget_bytes):
     """One-row (triangles) from a RAW (s, d) long-pair multiset —
     duplicates, self-loops and either orientation allowed; canonicalize
     + dedup run in-task (a 1.2M-row sort beats a distinct Exchange plus
@@ -159,7 +162,8 @@ def _raw_pairs_kernel(c):
     hashed canonical pairs here too."""
     import numpy as np
 
-    common = common_neighbour_counts(np, *canonical_pairs(np, c["s"], c["d"]))
+    left = budget_bytes - len(c["s"]) * _SINGLE_TASK_ROW_BYTES
+    common = common_neighbour_counts(np, *canonical_pairs(np, c["s"], c["d"]), left)
     return {"triangles": np.array([common.sum() // 3], dtype=np.int64)}
 
 
@@ -188,7 +192,8 @@ def triangle_count_long_pairs(
     )
     copy = single_task.gate(pairs, single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES)
     if copy is not None:
-        return single_task.run(copy, _raw_pairs_kernel, "triangles long")
+        kernel = partial(_raw_pairs_kernel, budget_bytes=single_task_budget_bytes)
+        return single_task.run(copy, kernel, "triangles long")
     return triangle_count(
         pairs.select(F.col("s").alias("src"), F.col("d").alias("dst")),
         single_task_budget_bytes=single_task_budget_bytes,
@@ -284,7 +289,7 @@ def triangle_count(
             # unchanged.
             return single_task.run(
                 canon.select(F.col("src").alias("s"), F.col("dst").alias("d")),
-                _raw_pairs_kernel,
+                partial(_raw_pairs_kernel, budget_bytes=single_task_budget_bytes),
                 "triangles long",
             )
     o = oriented_edges(canon, already_canonical=True).localCheckpoint(eager=True)

@@ -236,11 +236,12 @@ def salted_tables(
     if isinstance(source, DataFrame):
         e, subs = salted_layout(source, vt, split, threshold, alpha, level, mode, with_deg)
         e = e.select(*cols)
-        if not _broadcasts(vt, vt.degrees):  # shuffled endpoint joins: plan them under AQE
-            e = e.localCheckpoint(eager=True)
+        tree = mode == "tree"  # the tree split hands over both tables checkpointed
+        if not tree and not _broadcasts(vt, vt.degrees):
+            e = e.localCheckpoint(eager=True)  # shuffled endpoint joins: plan them under AQE
         routing = salted_table(e, vt.e_rows)
-        release_checkpoint(e)  # the routing rows checkpointed above, if they were
-        return routing, subs.localCheckpoint(eager=True)
+        release_checkpoint(e)  # the routing rows' checkpoint, if they had one
+        return routing, subs if tree else subs.localCheckpoint(eager=True)
     subs = source.sub_deg if with_deg else source.sub_deg.select("src", "tag")
     return source.edges.select(*cols).cache(), subs.cache()
 

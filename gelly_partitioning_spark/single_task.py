@@ -11,6 +11,7 @@ algorithms own only their kernels and their working-set bytes per row;
 this module owns how the rung is gated, entered and abandoned:
 
 - ``gate``: a jobless Catalyst-stats pre-check, then ONE bounded count
+  (summing an optional per-row byte charge, e.g. jaccard's id bytes)
   that both measures the input (never past budget + 1 rows) and
   materializes the one-partition copy the kernel reads;
 - ``run``: the one Arrow batching boundary — chunks concatenated by
@@ -30,7 +31,7 @@ import time
 from typing import Callable
 
 from pyspark.errors import PythonException
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .superstep import (
     SuperstepMetrics,
@@ -52,15 +53,20 @@ DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
 COLLISION_MARKER = "xxhash64 collision on vertex ids"
 
 
-def admits(rows: int, budget_bytes: int, row_bytes: int) -> bool:
-    """True when ``rows`` rows (at least one) of ``row_bytes`` each fit
-    the budget; a zero budget admits nothing."""
-    return bool(budget_bytes) and 0 < rows <= budget_bytes // row_bytes
+def admits(rows: int, budget_bytes: int, row_bytes: int, extra_bytes: int = 0) -> bool:
+    """True when ``rows`` rows (at least one) of ``row_bytes`` each, plus
+    ``extra_bytes``, fit the budget; a zero budget admits nothing."""
+    return bool(budget_bytes) and 0 < rows and rows * row_bytes + extra_bytes <= budget_bytes
 
 
-def gate(df: DataFrame, budget_bytes: int, row_bytes: int) -> DataFrame | None:
+def gate(
+    df: DataFrame, budget_bytes: int, row_bytes: int, extra_bytes: Column | None = None
+) -> DataFrame | None:
     """A materialized one-partition copy of ``df`` when it fits the rung,
-    else None (the caller then continues on ``df`` itself).
+    else None (the caller then continues on ``df`` itself). ``extra_bytes``
+    is an optional per-row charge on top of ``row_bytes``, an expression
+    over ``df``'s columns (e.g. the bytes of its strings), summed by the
+    same action that counts the rows.
 
     The jobless stats hint skips obviously oversized inputs outright.
     Estimates can be crude (an underestimate passes), so the exact gate
@@ -78,7 +84,11 @@ def gate(df: DataFrame, budget_bytes: int, row_bytes: int) -> DataFrame | None:
     if hint is not None and hint > 8 * budget_bytes:
         return None
     copy = df.coalesce(1).limit(budget_bytes // row_bytes + 1).localCheckpoint(eager=False)
-    if admits(copy.count(), budget_bytes, row_bytes):
+    if extra_bytes is None:
+        rows, extra = copy.count(), 0
+    else:
+        rows, extra = copy.agg(F.count(F.lit(1)), F.sum(extra_bytes)).first()
+    if admits(rows, budget_bytes, row_bytes, extra or 0):
         return copy
     release_checkpoint(copy)
     return None

@@ -323,7 +323,9 @@ def split_vids(
     flat mode fans each vertex out to its n_splits salts; tree mode fans
     the skewed sub-vertices out level by level, each level's bucket in its
     own ceil(log2 alpha) bits. A salt that draws no edge is a sub-vertex
-    without routing rows, which joins nothing.
+    without routing rows, which joins nothing. Tree mode returns both
+    tables as checkpoints the caller owns (and releases); flat mode
+    returns them unmaterialized.
     """
     b = salt_bits(alpha, level, max_vid)
     threshold = resolve_threshold(vertices, threshold)
@@ -334,10 +336,11 @@ def split_vids(
     e = route_vids(edges, vertices.select("tag", "vid", n.alias("n")), b)
     subs = vertices.select(_fan(F.shiftleft(vid, b), n).alias("src"), vid.alias("tag"), "degree")
     per = (int(alpha) - 1).bit_length()
-    owned: list[DataFrame] = []  # the previous level's checkpoints
-    for lvl in range(int(level) if mode == "tree" else 0):
+    if mode == "tree":
         # each level reads the last one's checkpoints, so its work does
         # not re-run the levels before it
+        e, subs = e.localCheckpoint(eager=True), subs.localCheckpoint(eager=True)
+    for lvl in range(int(level) if mode == "tree" else 0):
         skewed = (
             e.groupBy("src").count().filter(F.col("count") > threshold)
             .select("src", F.lit(int(alpha)).cast("long").alias("_n"))
@@ -348,15 +351,15 @@ def split_vids(
             break
         skewed, n = F.broadcast(skewed), F.coalesce("_n", one)
         bucket = F.pmod(F.xxhash64("dst_tag", F.lit(lvl + 1)), n)
+        last = (skewed, e, subs)
         e = e.join(skewed, "src", "left").select(
             F.col("src").bitwiseOR(F.shiftleft(bucket, lvl * per)).alias("src"), "dst_tag", "w"
         ).localCheckpoint(eager=True)
         subs = subs.join(skewed, "src", "left").select(
             _fan(F.col("src"), n, lvl * per).alias("src"), "tag", "degree"
         ).localCheckpoint(eager=True)
-        for df in (skewed, *owned):
+        for df in last:
             release_checkpoint(df)
-        owned = [e, subs]
     return e, subs
 
 

@@ -68,9 +68,10 @@ def test_triangle_no_cartesian(spark, tri_graph):
 
 
 def test_jaccard_no_cartesian(spark, jaccard_graph):
-    from gelly_partitioning_spark import jaccard
+    from gelly_partitioning_spark import jaccard_counts
 
-    p = plan_of(jaccard(jaccard_graph))
+    # the distributed rung: the single-task one plans no join at all
+    p = plan_of(jaccard_counts(jaccard_graph, single_task_budget_bytes=0))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 

@@ -63,6 +63,7 @@ GRAPHS = {
     "hub_graph": lambda spark, request: request.getfixturevalue("hub_graph"),
     "cc_graph": lambda spark, request: request.getfixturevalue("cc_graph"),
     "tri_graph": lambda spark, request: request.getfixturevalue("tri_graph"),
+    "jaccard_graph": lambda spark, request: request.getfixturevalue("jaccard_graph"),
     "dups_self_loops": lambda spark, request: _cached(from_pairs(
         spark, [(1, 2), (2, 1), (1, 1), (2, 3), (3, 1), (3, 3), (2, 3), (3, 4), (4, 4)]
     )),
@@ -216,20 +217,20 @@ def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
     assert gate_rows == [19, len(TRI_EDGES)] and len(tier_runs) == 1
 
 
-def test_triangle_core_close_methods_agree(monkeypatch):
+def test_triangle_core_close_methods_agree():
     # the in-task close picks bitmap vs searchsorted from the exact
-    # vertex count; both must give the same per-edge common-neighbour
-    # counts (monkeypatching the cap works here because the kernel runs
-    # in-process, not on a worker)
+    # vertex count and the budget left; both must give the same per-edge
+    # common-neighbour counts
     import numpy as np
 
     s, d = np.random.default_rng(7).integers(0, 500, (2, 20000))
     keys = np.unique(np.minimum(s, d) * 500 + np.maximum(s, d))  # canonical, deduped
     lo, hi = keys // 500, keys % 500
     lo, hi = lo[lo != hi], hi[lo != hi]
-    bitmap = tcm.common_neighbour_counts(np, lo, hi)
-    monkeypatch.setattr(tcm, "_BITMAP_CAP_BYTES", 0)
-    searchsorted = tcm.common_neighbour_counts(np, lo, hi)
+    n = len(np.unique(np.r_[lo, hi]))
+    bitmap_bytes = n * ((n + 7) >> 3)  # n rows of n bits
+    bitmap = tcm.common_neighbour_counts(np, lo, hi, bitmap_bytes)
+    searchsorted = tcm.common_neighbour_counts(np, lo, hi, bitmap_bytes - 1)
     assert (bitmap == searchsorted).all() and bitmap.sum() > 0
     # against the dense adjacency: |N(lo) ∩ N(hi)| per edge
     adj = np.zeros((500, 500), dtype=np.int64)
@@ -249,3 +250,20 @@ def test_jaccard_rung_runs_few_jobs(spark, tier_runs):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(tier_runs) == 1 and len(rows) == 5
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+
+def test_jaccard_gate_charges_id_bytes(spark, tier_runs):
+    # the same graph, its ids spelled 1 or 200 bytes long: a budget that
+    # admits the short spelling declines the long one, whose strings the
+    # task would hold several times over
+    jm = importlib.import_module("gelly_partitioning_spark.algorithms.jaccard")
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1)]
+    short = _cached(from_pairs(spark, pairs))
+    long = _cached(from_pairs(spark, [(f"{a:0>200}", f"{b:0>200}") for a, b in pairs]))
+    budget = len(pairs) * (jm._SINGLE_TASK_ROW_BYTES + 2 * jm._ID_BYTE_COST)
+    want = ALGOS["jaccard_counts"](short, single_task_budget_bytes=0)
+    assert ALGOS["jaccard_counts"](short, single_task_budget_bytes=budget) == want
+    assert len(tier_runs) == 1
+    got = ALGOS["jaccard_counts"](long, single_task_budget_bytes=budget)
+    assert len(tier_runs) == 1  # declined: the distributed rung answered
+    assert [(s.lstrip("0"), d.lstrip("0"), c, u) for s, d, c, u in got] == want

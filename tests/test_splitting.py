@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from gelly_partitioning_spark import degree_count, from_pairs, normalize_edges, split_graph
 from gelly_partitioning_spark import distributed as dist
 from gelly_partitioning_spark.splitting import SEP
+from gelly_partitioning_spark.superstep import release_checkpoint
 
 from .conftest import HUB_DEGREES
 
@@ -117,3 +118,20 @@ def test_tree_split_jobs_grow_linearly(spark, form):
     # threshold 1: every level up to 4 still splits some sub-vertex
     two, three, four = map(jobs, (2, 3, 4))
     assert four - three == three - two > 0
+
+
+@pytest.mark.parametrize("mode", ["flat", "tree"])
+def test_salted_tables_leave_only_their_tables(spark, mode):
+    # the tree split's level checkpoints are released or handed over: a
+    # call leaves persisted exactly the two tables it returns
+    g = normalize_edges(from_pairs(spark, [("hub", f"leaf{i}") for i in range(20)])).cache()
+    g.count()
+    vt = dist.vertex_table(g)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    routing, subs = dist.salted_tables(g, vt, ("src", "dst_tag"), True, 1, 2, 3, mode)
+    assert persisted().size() - before == 2
+    assert subs.count() > vt.n  # the hub split
+    for df in (routing, subs):
+        release_checkpoint(df)
+    assert persisted().size() == before
