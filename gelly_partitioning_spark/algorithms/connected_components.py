@@ -47,10 +47,12 @@ from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
 ACTIVE = "_active"
 
-# Single-task working set per undirected row: two int64 key columns, the
-# string id column and the index vectors. Pure integer/rank arithmetic —
-# the result is EXACTLY the min original id per component.
-_SINGLE_TASK_ROW_BYTES = 56
+# Single-task working set per undirected row (two per input edge): the
+# Arrow id strings, their dictionary codes and the sorted gather vectors.
+# The task replayed outside Spark (as pagerank's) peaks at 151-175 B per
+# input edge on 0.6-2.4M edges. Pure integer/rank arithmetic — the result
+# is EXACTLY the min original id per component.
+_SINGLE_TASK_ROW_BYTES = 88
 
 
 def _cc_kernel(max_iterations: int, numeric_ids: bool):
@@ -135,21 +137,16 @@ def connected_components(
 
         if runner is None and broadcast_threshold_vertices is None:
             # the single-task rung (single_task.py); callers that pass a
-            # runner want per-superstep metrics, and a hash collision
-            # found in-task falls through to the probed paths below
-            copy = single_task.gate(
-                edges.select("src", "dst"),
+            # runner want per-superstep metrics
+            out = single_task.run_loop(
+                edges,
+                _cc_kernel(max_iterations, numeric_ids),
+                "id string, component string",
                 single_task_budget_bytes,
                 2 * _SINGLE_TASK_ROW_BYTES,
             )
-            if copy is not None:
-                out = single_task.run_loop(
-                    copy,
-                    _cc_kernel(max_iterations, numeric_ids),
-                    "id string, component string",
-                )
-                if out is not None:
-                    return out
+            if out is not None:
+                return out
     source = edges if prepared is None else prepared
 
     vt = distributed.vertex_table(source)

@@ -23,7 +23,7 @@ and the driver's query derive from it), on two rungs:
 
 - single-task, when the rows fit ``single_task_budget_bytes`` (each
   charged a fixed size plus its ids' bytes): one task codes the ids in
-  string order (Python ``str`` order is Spark's UTF-8 binary order),
+  string order (Arrow sorts strings by their UTF-8 bytes, as Spark does),
   canonicalizes and dedups, and runs triangle_count's per-edge
   common-neighbour kernel — no exchange, no join;
 - distributed, above the budget or on an empty input: the canonical edge
@@ -36,8 +36,6 @@ reference's JACCARD_VERTICES golden).
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
@@ -46,16 +44,14 @@ from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from .triangle_count import canonical_pairs, common_neighbour_counts, oriented_edges
 
 # Single-task working set of an input (src, dst) string row: a fixed
-# charge plus one per UTF-8 byte of its two ids (Arrow in, the Python
-# strings, Arrow out). Measured by replaying the task outside Spark
-# (10k-row Arrow batches -> pandas -> kernel -> Arrow, peak RSS above a
-# fresh process's baseline, searchsorted close): ~165 B per row at
-# 1.2-1.5M rows (up to ~250 B on smaller inputs, which stay far below
-# the budget) plus 2.0-2.5 B per id byte. sf0.1's 1,199,575 'p…' rows
-# (13.1 MB of ids) are charged 256 MB and peak at 221-233 MB; 148,000 rows
-# of ~205-byte ids are charged 268 MB and peak at 195-203 MB. Python stores an
-# id that mixes ASCII with characters beyond Latin-1 at 2-4 bytes per
-# character, which this charge does not cover.
+# charge plus one per UTF-8 byte of its two ids, summed in the task from
+# the Arrow string buffers. Set from a task that turned every id into a
+# Python string (~165 B per row plus 2.0-2.5 B per id byte). The Arrow
+# task replayed outside Spark (10k-row Arrow batches -> kernel -> Arrow,
+# peak RSS above a fresh process, searchsorted close) holds no Python
+# string per row and peaks about half as high: sf0.1's 1,199,575 'p…'
+# rows (13.1 MB of ids) are charged 256 MB and peak at 136 MB; 148,000
+# rows of ~205-byte ids are charged 268 MB and peak at 112 MB.
 _SINGLE_TASK_ROW_BYTES = 170
 _ID_BYTE_COST = 4
 
@@ -96,31 +92,26 @@ def edge_common_neighbors(canon: DataFrame) -> DataFrame:
     return per_edge.groupBy("src", "dst").agg(F.count("*").cast("long").alias("common"))
 
 
-def _counts_kernel(c, budget_bytes):
+def _counts_kernel(c, left_bytes):
     """(src, dst, common_cnt, union_cnt) of the canonical simple edge set
     of raw string (src, dst) rows. The ids become their ranks in sorted
     string order, so canonical_pairs' lo < hi is the id-canonical
     orientation ``canonical_edges`` gives. The kernel's bitmap gets the
-    budget left after the gate's charge for these rows."""
+    budget left after the rows' charge."""
     import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     m = len(c["src"])
-    # popped: the input's string objects are freed once they are coded
-    codes, ids = pd.factorize(np.concatenate([c.pop("src"), c.pop("dst")]), sort=True)
-    id_bytes = pc.binary_length(pa.array(ids, pa.string())).to_numpy() @ np.bincount(codes)
-    left = budget_bytes - m * _SINGLE_TASK_ROW_BYTES - _ID_BYTE_COST * int(id_bytes)
+    codes, ids = single_task.sorted_codes(c.pop("src"), c.pop("dst"))
     lo, hi = canonical_pairs(np, codes[:m], codes[m:])
-    common = common_neighbour_counts(np, lo, hi, left)
+    del codes
+    common = common_neighbour_counts(np, lo, hi, left_bytes)
     deg = np.bincount(np.concatenate([lo, hi]), minlength=len(ids))
     return {
-        "src": ids[lo],
-        "dst": ids[hi],
+        "src": ids.take(lo),
+        "dst": ids.take(hi),
         "common_cnt": common,
         "union_cnt": deg[lo] + deg[hi] - common,
-    }
+    }, None
 
 
 def jaccard_counts(
@@ -130,18 +121,16 @@ def jaccard_counts(
     edge (src < dst): its common-neighbor count and the size of its
     endpoints' neighbor-set union, both exact integers."""
     edges = normalize_edges(edges)
-    copy = single_task.gate(
+    out = single_task.run(
         edges.select("src", "dst"),
+        _counts_kernel,
+        "src string, dst string, common_cnt long, union_cnt long",
         single_task_budget_bytes,
         _SINGLE_TASK_ROW_BYTES,
-        _ID_BYTE_COST * (F.octet_length("src") + F.octet_length("dst")),
-    )
-    if copy is not None:
-        return single_task.run(
-            copy,
-            partial(_counts_kernel, budget_bytes=single_task_budget_bytes),
-            "src string, dst string, common_cnt long, union_cnt long",
-        )
+        _ID_BYTE_COST,
+    ).out
+    if out is not None:
+        return out
     canon = canonical_edges(edges).withColumn("w", F.lit(1.0))
     deg = degrees(canon)
     common = F.coalesce("common", F.lit(0)).cast("long")

@@ -35,9 +35,12 @@ from ..graph import normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
-# Single-task working set per undirected row: two int64 key columns plus
-# the index/rank vectors.
-_SINGLE_TASK_ROW_BYTES = 48
+# Single-task working set per undirected row (two per input edge): the
+# Arrow id strings, their dictionary codes, the index/rank vectors and the
+# output. The task replayed outside Spark (10k-row Arrow batches -> kernel
+# -> Arrow, peak RSS above a fresh process) peaks at 86-109 B per input
+# edge on 0.6-2.4M edges of ~7-byte ids.
+_SINGLE_TASK_ROW_BYTES = 56
 
 
 def _pagerank_kernel(
@@ -136,21 +139,17 @@ def pagerank(
             # the single-task rung (single_task.py): skipped when the
             # caller pinned a strategy (broadcast_threshold_vertices),
             # wants resumable checkpoints, or the table is too big for one
-            # task's memory; a hash collision found in-task falls through
-            copy = single_task.gate(
-                edges.select("src", "dst"),
+            # task's memory
+            out = single_task.run_loop(
+                edges,
+                _pagerank_kernel(damping, tol, max_iterations, fixed_iterations),
+                "id string, rank double",
                 single_task_budget_bytes,
                 2 * _SINGLE_TASK_ROW_BYTES,
+                runner,
             )
-            if copy is not None:
-                out = single_task.run_loop(
-                    copy,
-                    _pagerank_kernel(damping, tol, max_iterations, fixed_iterations),
-                    "id string, rank double",
-                    runner,
-                )
-                if out is not None:
-                    return out
+            if out is not None:
+                return out
     source = edges if prepared is None else prepared
 
     # the vertex/degree table and its vids, shared by the rung decision,

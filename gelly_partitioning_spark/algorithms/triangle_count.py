@@ -17,21 +17,22 @@ its wedge gather, with one fewer shuffle.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
 from ..graph import canonical_edges, normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
-from ..superstep import fits_broadcast_budget, session_broadcast_threshold
+from ..superstep import fits_broadcast_budget, release_checkpoint, session_broadcast_threshold
 
-# Single-task working set per (raw or canonical) pair. On the single-task
-# rung the orientation + wedge enumeration + close run as vectorized numpy
-# in one task — the 41M-wedge sf0.1 count drops from ~5 s of JVM join
-# codegen to ~0.5 s (length-bucketed triu_indices pair gather + one
-# bitmap probe per wedge).
-_SINGLE_TASK_ROW_BYTES = 48
+# Single-task working set per (raw or canonical) pair; the close's bitmap
+# gets only the budget left after it. On the single-task rung the
+# orientation + wedge enumeration + close run as vectorized numpy in one
+# task — the 41M-wedge sf0.1 count drops from ~5 s of JVM join codegen to
+# ~0.5 s (length-bucketed triu_indices pair gather + one bitmap probe per
+# wedge). The task replayed outside Spark (10k-row Arrow batches -> kernel
+# -> Arrow, peak RSS above a fresh process, searchsorted close) peaks at
+# 105 B per pair on sf0.1's 1,199,575 raw pairs and 84 B on 2.4M.
+_SINGLE_TASK_ROW_BYTES = 112
 # Wedges generated per numpy step, and four times the closed wedges held
 # before they are credited: bounds the kernel's transient arrays (~40 B
 # per wedge) whatever the graph.
@@ -153,7 +154,7 @@ def common_neighbour_counts(np, lo_ids, hi_ids, bitmap_budget_bytes):
     return common
 
 
-def _raw_pairs_kernel(c, budget_bytes):
+def _raw_pairs_kernel(c, left_bytes):
     """One-row (triangles) from a RAW (s, d) long-pair multiset —
     duplicates, self-loops and either orientation allowed; canonicalize
     + dedup run in-task (a 1.2M-row sort beats a distinct Exchange plus
@@ -162,9 +163,9 @@ def _raw_pairs_kernel(c, budget_bytes):
     hashed canonical pairs here too."""
     import numpy as np
 
-    left = budget_bytes - len(c["s"]) * _SINGLE_TASK_ROW_BYTES
-    common = common_neighbour_counts(np, *canonical_pairs(np, c["s"], c["d"]), left)
-    return {"triangles": np.array([common.sum() // 3], dtype=np.int64)}
+    lo, hi = canonical_pairs(np, c.pop("s").to_numpy(), c.pop("d").to_numpy())
+    common = common_neighbour_counts(np, lo, hi, left_bytes)
+    return {"triangles": np.array([common.sum() // 3], dtype=np.int64)}, None
 
 
 def triangle_count_long_pairs(
@@ -190,10 +191,12 @@ def triangle_count_long_pairs(
     pairs = pairs.select(F.col(cols[0]).alias("s"), F.col(cols[1]).alias("d")).filter(
         F.col("s").isNotNull() & F.col("d").isNotNull()
     )
-    copy = single_task.gate(pairs, single_task_budget_bytes, _SINGLE_TASK_ROW_BYTES)
-    if copy is not None:
-        kernel = partial(_raw_pairs_kernel, budget_bytes=single_task_budget_bytes)
-        return single_task.run(copy, kernel, "triangles long")
+    out = single_task.run(
+        pairs, _raw_pairs_kernel, "triangles long", single_task_budget_bytes,
+        _SINGLE_TASK_ROW_BYTES,
+    ).out
+    if out is not None:
+        return out
     return triangle_count(
         pairs.select(F.col("s").alias("src"), F.col("d").alias("dst")),
         single_task_budget_bytes=single_task_budget_bytes,
@@ -287,11 +290,16 @@ def triangle_count(
             # one task; the close picks bitmap vs searchsorted in-task
             # from the exact vertex count. >budget graphs continue below
             # unchanged.
-            return single_task.run(
+            out = single_task.run(
                 canon.select(F.col("src").alias("s"), F.col("dst").alias("d")),
-                partial(_raw_pairs_kernel, budget_bytes=single_task_budget_bytes),
+                _raw_pairs_kernel,
                 "triangles long",
-            )
+                single_task_budget_bytes,
+                _SINGLE_TASK_ROW_BYTES,
+            ).out
+            if out is not None:
+                release_checkpoint(canon)
+                return out
     o = oriented_edges(canon, already_canonical=True).localCheckpoint(eager=True)
     # The wedge table (Σ C(outdeg, 2) rows) is the LARGEST relation in
     # this query — orders of magnitude bigger than the edge set. When the

@@ -1,25 +1,27 @@
 """The single-task rung: a whole graph computation inside ONE Spark task.
 
 When the input fits one task's memory, PageRank, connected components,
-degree count, triangle count and Jaccard skip the distributed paths:
-the rows are Arrow-batched into one ``mapInPandas`` task, a vectorized
-numpy kernel does the whole computation, and one result batch comes
-out: no collect into the application process, no per-superstep or
-per-join jobs. (Triangle count and Jaccard share one kernel, the
-per-edge common-neighbour count in ``algorithms/triangle_count.py``.) The
+degree count, triangle count and Jaccard skip the distributed paths: the
+rows are Arrow-batched into one ``mapInArrow`` task, a vectorized numpy
+kernel does the whole computation, and one result batch comes out: no
+collect into the application process, no per-superstep or per-join jobs.
+(Triangle count and Jaccard share one kernel, the per-edge
+common-neighbour count in ``algorithms/triangle_count.py``.) The
 algorithms own only their kernels and their working-set bytes per row;
-this module owns how the rung is gated, entered and abandoned:
+this module owns how the rung is entered, gated and abandoned.
 
-- ``gate``: a jobless Catalyst-stats pre-check, then ONE bounded count
-  (summing an optional per-row byte charge, e.g. jaccard's id bytes)
-  that both measures the input (never past budget + 1 rows) and
-  materializes the one-partition copy the kernel reads;
-- ``run``: the one Arrow batching boundary — chunks concatenated by
-  column name, one kernel call, one output frame;
-- ``run_loop``: the iterative kernels' wrapper — undirected hashed keys
-  in, the result checkpointed, its iteration count read back into a
-  ``SuperstepMetrics`` record, and a fallback to the distributed paths
-  when the in-task check finds an xxhash64 collision.
+A call on the rung is one Spark action (``run``):
+``df.coalesce(1).limit(cap + 1).mapInArrow(task).localCheckpoint(eager=True)``,
+cap = budget // row_bytes. The task streams the Arrow batches, counts
+the rows, adds the optional charge per byte of their strings (jaccard's
+id bytes) and applies ``admits``. On admit it runs the kernel; on decline
+it drains the rest of its input without keeping it and yields no rows (a
+worker that leaves input unread is exited by PySpark, and the next call
+pays a fresh one). An oversized input therefore costs at most cap + 1
+streamed rows, never a full scan. The decision, the rows streamed and the
+kernel's report come back through a last-value accumulator: no job. A
+jobless Catalyst-stats pre-check declines obviously oversized inputs
+before any of this.
 
 Every rung returns the same answer; this one only changes where the
 work runs.
@@ -28,10 +30,12 @@ work runs.
 from __future__ import annotations
 
 import time
-from typing import Callable
+from typing import Callable, NamedTuple
 
-from pyspark.errors import PythonException
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .superstep import (
     SuperstepMetrics,
@@ -41,16 +45,28 @@ from .superstep import (
 )
 
 # Working-set budget of the one task; 0 disables the rung. The default
-# admits ~5M undirected PageRank rows (48 bytes each).
+# admits ~2.4M (src, dst) PageRank rows.
 DEFAULT_SINGLE_TASK_BUDGET = 256 << 20
 
-# Raised by the IN-TASK xxhash64 injectivity check (``run_loop``):
-# ``run_loop`` matches it in the surfaced PythonException and falls back
-# to the probed distributed paths. Collision probability is ~n²/2^65 — the
-# check is for exactness, not likelihood. local[] runs with task
-# maxFailures=1, so a collision costs one task; a cluster retries the
-# deterministic failure spark.task.maxFailures times before the fallback.
-COLLISION_MARKER = "xxhash64 collision on vertex ids"
+
+class Outcome(NamedTuple):
+    """One ``run``: the rows its task streamed (at most cap + 1; 0 when
+    no task ran), the materialized result (None on decline) and the
+    kernel's report."""
+
+    rows: int
+    out: DataFrame | None
+    report: object = None
+
+
+class _LastValue(AccumulatorParam):
+    """Last value wins, so a retried task reports the same thing again."""
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, value, update):
+        return value if update is None else update
 
 
 def admits(rows: int, budget_bytes: int, row_bytes: int, extra_bytes: int = 0) -> bool:
@@ -59,140 +75,128 @@ def admits(rows: int, budget_bytes: int, row_bytes: int, extra_bytes: int = 0) -
     return bool(budget_bytes) and 0 < rows and rows * row_bytes + extra_bytes <= budget_bytes
 
 
-def gate(
-    df: DataFrame, budget_bytes: int, row_bytes: int, extra_bytes: Column | None = None
-) -> DataFrame | None:
-    """A materialized one-partition copy of ``df`` when it fits the rung,
-    else None (the caller then continues on ``df`` itself). ``extra_bytes``
-    is an optional per-row charge on top of ``row_bytes``, an expression
-    over ``df``'s columns (e.g. the bytes of its strings), summed by the
-    same action that counts the rows.
+def _task(batches, cols, kernel, budget_bytes, row_bytes, byte_cost, schema, report):
+    """The rung's task body over an iterator of Arrow record batches:
+    yields the kernel's output batch on admit, nothing on decline, and
+    passes (rows, admitted, kernel report) to ``report`` either way."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    The jobless stats hint skips obviously oversized inputs outright.
-    Estimates can be crude (an underestimate passes), so the exact gate
-    behind it counts ``df.coalesce(1).limit(cap + 1)``: one task pulls
-    rows until cap + 1, so an oversized input costs at most cap + 1 rows
-    of work past any upstream shuffle, never a full scan, and an admitted
-    one is counted and materialized by the same action. (A limit without the
-    coalesce would add a single-partition exchange: a shuffle stage of up
-    to cap + 1 rows from every partition, measured ~0.08 s per call on a
-    13k-edge graph with local[4] on 4 vCPUs.)
+    kept, rows, extra = [], 0, 0
+    for b in batches:
+        rows += b.num_rows
+        if byte_cost:
+            strings = [a for a in b.columns if pa.types.is_string(a.type)
+                       or pa.types.is_large_string(a.type)]
+            extra += byte_cost * sum(pc.sum(pc.binary_length(a)).as_py() or 0 for a in strings)
+        if kept is not None and rows * row_bytes + extra <= budget_bytes:
+            kept.append(b)
+        else:
+            kept = None  # declined: drain the rest, keep nothing
+    if kept is None or not admits(rows, budget_bytes, row_bytes, extra):
+        report((rows, False, None))
+        return
+    columns = {c: pa.chunked_array([b.column(i) for b in kept]) for i, c in enumerate(cols)}
+    del kept, b  # the kernel may pop its columns to free them early
+    out, info = kernel(columns, budget_bytes - rows * row_bytes - extra)
+    report((rows, True, info))
+    yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+
+def run(
+    df: DataFrame,
+    kernel: Callable[[dict, int], tuple],
+    schema: str,
+    budget_bytes: int,
+    row_bytes: int,
+    byte_cost: int = 0,
+) -> Outcome:
+    """``kernel`` over all of ``df`` inside one task, when its rows fit.
+
+    Each row is charged ``row_bytes`` plus ``byte_cost`` per UTF-8 byte
+    of its string columns. ``kernel(columns, left_bytes)`` gets one Arrow
+    ``ChunkedArray`` per input column in a dict it may pop from, and the
+    budget left after the rows' charge; it returns ``(output columns,
+    report)``, the report any small picklable value. On admit the result
+    is materialized by the call's one action.
     """
     if not budget_bytes:
-        return None
+        return Outcome(0, None)
     hint = plan_size_hint_bytes(df)
     if hint is not None and hint > 8 * budget_bytes:
-        return None
-    copy = df.coalesce(1).limit(budget_bytes // row_bytes + 1).localCheckpoint(eager=False)
-    if extra_bytes is None:
-        rows, extra = copy.count(), 0
-    else:
-        rows, extra = copy.agg(F.count(F.lit(1)), F.sum(extra_bytes)).first()
-    if admits(rows, budget_bytes, row_bytes, extra or 0):
-        return copy
-    release_checkpoint(copy)
-    return None
+        return Outcome(0, None)
+    acc = df.sparkSession.sparkContext.accumulator(None, _LastValue())
+    cols, arrow = df.columns, to_arrow_schema(StructType.fromDDL(schema))
+
+    def task(batches):
+        return _task(batches, cols, kernel, budget_bytes, row_bytes, byte_cost, arrow, acc.add)
+
+    out = (
+        df.coalesce(1)
+        .limit(budget_bytes // row_bytes + 1)
+        .mapInArrow(task, schema)
+        .localCheckpoint(eager=True)
+    )
+    rows, admitted, report = acc.value
+    if not admitted:
+        release_checkpoint(out)
+        return Outcome(rows, None)
+    return Outcome(rows, out, report)
 
 
-def run(df: DataFrame, kernel: Callable[[dict], dict], schema: str) -> DataFrame:
-    """``kernel`` over all of ``df`` inside one ``mapInPandas`` task.
+def sorted_codes(*cols):
+    """(codes, ids) of Arrow string columns encoded together: ``ids``
+    their distinct values in sorted order (UTF-8 byte order, Spark's
+    string order) and ``codes`` each row's int64 index into them, the
+    columns' rows one after the other."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    The kernel receives one numpy array per input column (the Arrow
-    batches concatenated by column name) in a dict it may pop from, and
-    returns the output columns as a dict. ``df`` must be non-empty
-    (``gate`` and ``admits`` ensure it).
-    """
-    cols = df.columns
-
-    def task(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        chunks = list(pdfs)
-        columns = {c: np.concatenate([ch[c].to_numpy() for ch in chunks]) for c in cols}
-        del chunks  # the kernel may pop its columns to free them early
-        yield pd.DataFrame(kernel(columns))
-
-    return df.coalesce(1).mapInPandas(task, schema)
-
-
-def undirected_keys(edges: DataFrame) -> DataFrame:
-    """(s, d, s_str): both orientations of every edge on xxhash64 keys,
-    with the source's string id — the iterative kernels' input."""
-
-    def side(a: str, b: str) -> DataFrame:
-        return edges.select(
-            F.xxhash64(a).alias("s"), F.xxhash64(b).alias("d"), F.col(a).alias("s_str")
-        )
-
-    return side("src", "dst").unionByName(side("dst", "src"))
+    enc = pc.dictionary_encode(pa.chunked_array([ch for c in cols for ch in c.chunks]))
+    ids = enc.chunk(0).dictionary
+    order = pc.array_sort_indices(ids).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    return rank[np.concatenate([c.indices.to_numpy() for c in enc.chunks])], ids.take(order)
 
 
 def run_loop(
     edges: DataFrame,
     kernel: Callable[..., tuple],
     schema: str,
+    budget_bytes: int,
+    row_bytes: int,
     runner: SuperstepRunner | None = None,
 ) -> DataFrame | None:
-    """Run an iterative vertex kernel over ``undirected_keys(edges)`` (the
-    gate's copy) and materialize its result.
+    """Run an iterative vertex kernel over the (src, dst) rows of
+    ``edges`` in one task (``run``); None when the rung declines.
 
-    In the task the keys become dense vertex indexes: every vertex
-    appears on the s side of the undirected expansion, so unique(s) IS
-    the vertex set and first-occurrence indices recover the string ids —
-    no decode join. The exact injectivity check runs there too: two
-    DIFFERENT ids share a hash iff some row's string disagrees with its
-    hash's representative, which raises ``COLLISION_MARKER``.
-
-    ``kernel(si, di, strs)`` gets the per-row source and destination
-    vertex indexes and the per-vertex string ids, and returns
-    ``(columns, iterations, converged)``; the last two become the run's
-    one ``SuperstepMetrics`` record on ``runner`` (a new one when None)
-    and ``runner.converged``. Returns None on a collision: the caller
-    then takes its distributed paths. Any other task failure propagates.
+    In the task both columns' id strings are encoded together in sorted
+    order: the dictionary IS the vertex set and the codes are the rows'
+    vertex indexes, so no decode join and no hash check is needed.
+    ``kernel(si, di, strs)`` gets the undirected expansion's per-row
+    source and destination indexes and the sorted ids (numpy objects),
+    and returns ``(columns, iterations, converged)``; the last two become
+    the run's one ``SuperstepMetrics`` record on ``runner`` (a new one
+    when None) and ``runner.converged``. A kernel failure propagates.
     """
 
-    def indexed(c):
+    def indexed(c, left_bytes):
         import numpy as np
 
-        s, s_str = c["s"], c["s_str"]
-        ids, first = np.unique(s, return_index=True)
-        si = np.searchsorted(ids, s)
-        strs = s_str[first]
-        if not (s_str == strs[si]).all():
-            raise ValueError(COLLISION_MARKER)
-        out, done, conv = kernel(si, np.searchsorted(ids, c["d"]), strs)
-        n = len(strs)
-        return {
-            **out,
-            "_iters": np.full(n, done, dtype=np.int32),
-            "_conv": np.full(n, conv),
-        }
+        m = len(c["src"])
+        codes, ids = sorted_codes(c.pop("src"), c.pop("dst"))
+        si, di = np.roll(codes, m), codes
+        out, done, conv = kernel(si, di, ids.to_numpy(zero_copy_only=False))
+        return out, (done, conv, len(ids))
 
     t0 = time.time()
-    try:
-        out = run(
-            undirected_keys(edges), indexed, f"{schema}, _iters int, _conv boolean"
-        ).localCheckpoint(eager=True)
-        meta = out.select(
-            F.max("_iters").alias("i"),
-            F.max(F.col("_conv").cast("int")).alias("c"),
-            F.count("*").alias("n"),
-        ).first()
-    except PythonException as exc:
-        if COLLISION_MARKER not in str(exc):
-            raise
+    o = run(edges.select("src", "dst"), indexed, schema, budget_bytes, row_bytes)
+    if o.out is None:
         return None
-    finally:
-        release_checkpoint(edges)  # the copy is dead once out is materialized
+    done, conv, n = o.report
     runner = runner or SuperstepRunner(edges.sparkSession)
-    runner.metrics.append(
-        SuperstepMetrics(
-            superstep=int(meta["i"]),
-            rows=int(meta["n"]),
-            changed=0 if meta["c"] else None,
-            wall_sec=time.time() - t0,
-        )
-    )
-    runner.converged = bool(meta["c"])
-    return out.drop("_iters", "_conv")
+    runner.metrics.append(SuperstepMetrics(done, n, 0 if conv else None, time.time() - t0))
+    runner.converged = conv
+    return o.out

@@ -49,8 +49,8 @@ def plan_size_hint_bytes(df) -> int | None:
 
     Used as a PRE-gate by the single-task tiers: an input whose estimate
     is already far above the tier budget skips the tier WITHOUT paying
-    the gate's count job (at scale that count would be a full scan run
-    just to learn the obvious). Estimates can be crude for complex
+    the task that streams up to cap + 1 rows just to learn the obvious.
+    Estimates can be crude for complex
     plans, so callers must keep an exact row-count gate behind this —
     an overestimate merely skips the tier (correct, just distributed),
     an underestimate is caught by the exact gate.

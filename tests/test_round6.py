@@ -121,85 +121,3 @@ def test_cc_auto_batching_matches_unbatched(spark, cc_graph):
 
     batched, unbatched = run(0), run(1)
     assert batched == unbatched
-
-
-def test_single_task_collision_marker_falls_back(spark, hub_graph, monkeypatch):
-    # the tier's injectivity check runs INSIDE the task: a collision
-    # marker raised there surfaces as a PythonException and must fall back
-    # to the distributed path, with the same answer; any other failure,
-    # and the marker text raised outside a task, must still surface
-    import importlib
-
-    from pyspark.errors import PythonException
-
-    from gelly_partitioning_spark import pagerank
-
-    st = importlib.import_module("gelly_partitioning_spark.single_task")
-    # the package re-exports the FUNCTION under the module name
-    prmod = importlib.import_module("gelly_partitioning_spark.algorithms.pagerank")
-
-    def ranks(**kw):
-        return {
-            r["id"]: r["rank"]
-            for r in pagerank(hub_graph, fixed_iterations=5, threshold=2, **kw).collect()
-        }
-
-    baseline = ranks(single_task_budget_bytes=0)
-    # two different strings on one hash key: the in-task check fires
-    colliding = spark.createDataFrame(
-        [(1, 2, "a"), (1, 2, "b"), (2, 1, "x")], "s long, d long, s_str string"
-    )
-    entered, run = [], st.run
-    monkeypatch.setattr(st, "run", lambda *a, **k: entered.append(1) or run(*a, **k))
-    monkeypatch.setattr(st, "undirected_keys", lambda edges: colliding)
-    got = ranks()
-    assert len(entered) == 1  # the tier ran, then fell back
-    assert got.keys() == baseline.keys()
-    for v in got:
-        assert abs(got[v] - baseline[v]) < 1e-12
-
-    # a NON-marker error in the task surfaces, not swallowed
-    def factory(*a):
-        def kernel(si, di, strs):
-            raise RuntimeError("unrelated failure")
-
-        return kernel
-
-    monkeypatch.undo()
-    monkeypatch.setattr(prmod, "_pagerank_kernel", factory)
-    with pytest.raises(PythonException, match="unrelated failure"):
-        ranks()
-
-    # nor is the marker text raised outside a Spark task
-    def outside_task(*a, **k):
-        raise ValueError(st.COLLISION_MARKER)
-
-    monkeypatch.setattr(st, "run", outside_task)
-    with pytest.raises(ValueError, match="collision"):
-        ranks()
-
-
-def test_single_task_in_task_collision_check_raises(spark, monkeypatch):
-    # craft an inconsistent (hash, string) pairing — two different
-    # strings on the same hash key — and pin that run_loop's in-task
-    # check raises the marker (through the surfaced Python exception)
-    # before the kernel is reached, and that run_loop then declines
-    import importlib
-
-    from pyspark.errors import PythonException
-
-    st = importlib.import_module("gelly_partitioning_spark.single_task")
-    df = spark.createDataFrame(
-        [(1, 2, "a"), (1, 2, "b"), (2, 1, "x"), (2, 1, "x")],
-        "s long, d long, s_str string",
-    )
-
-    def kernel(si, di, strs):
-        raise AssertionError("kernel reached despite a collision")
-
-    frames, run = [], st.run
-    monkeypatch.setattr(st, "run", lambda *a: frames.append(run(*a)) or frames[-1])
-    monkeypatch.setattr(st, "undirected_keys", lambda edges: df)
-    assert st.run_loop(df, kernel, "id string") is None
-    with pytest.raises(PythonException, match="xxhash64 collision"):
-        frames[0].collect()

@@ -1,11 +1,14 @@
 """The single-task rung (``gelly_partitioning_spark.single_task``): every
 algorithm that has it answers exactly as with the rung disabled, on every
-input shape; the gate is bounded and skips an oversized input without a
-job. (The collision fallback's tests are in ``test_round6``.)"""
+input shape; a call is one Spark action plus the caller's collect and
+leaves nothing persisted but its result; the in-task gate is bounded,
+keeps its worker when it declines, and an oversized stats hint skips the
+rung without a job."""
 
 import importlib
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from gelly_partitioning_spark import (
@@ -94,20 +97,31 @@ GRAPHS = {
 }
 
 
+def _record(monkeypatch, keep):
+    """Wrap ``single_task.run``; ``keep(seen, outcome)`` files each outcome."""
+    seen, orig = [], st.run
+
+    def run(*a, **k):
+        outcome = orig(*a, **k)
+        keep(seen, outcome)
+        return outcome
+
+    monkeypatch.setattr(st, "run", run)
+    return seen
+
+
 @pytest.fixture
 def tier_runs(monkeypatch):
-    """One entry per time the single-task runner was entered."""
-    calls, orig = [], st.run
-    monkeypatch.setattr(st, "run", lambda *a, **k: calls.append(1) or orig(*a, **k))
-    return calls
+    """One entry per single-task run the rung admitted."""
+    return _record(monkeypatch, lambda seen, o: o.out is not None and seen.append(o))
 
 
 @pytest.fixture
 def gate_rows(monkeypatch):
-    """Every row count a single-task gate compared with its budget."""
-    seen, orig = [], st.admits
-    monkeypatch.setattr(st, "admits", lambda rows, *a: seen.append(rows) or orig(rows, *a))
-    return seen
+    """The rows each single-task run's task streamed before it decided,
+    read from the run's returned outcome (runs that started no task,
+    e.g. on a zero budget, are left out)."""
+    return _record(monkeypatch, lambda seen, o: o.rows and seen.append(o.rows))
 
 
 def _assert_same(algo, got, want):
@@ -179,27 +193,127 @@ def test_gate_is_bounded(spark, monkeypatch, tier_runs, gate_rows, algo):
     _assert_same(algo, got, ALGOS[algo](g, single_task_budget_bytes=0))
 
 
+def _group_jobs(spark, group, fn):
+    """(fn(), the ids of the Spark jobs it ran), read by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _row_count():
+    """A kernel that returns its row count (nested, so Spark pickles it
+    by value and the worker need not import this module)."""
+
+    def kernel(c, left_bytes):
+        return {"n": [len(c["src"])]}, None
+
+    return kernel
+
+
 def test_oversized_hint_runs_no_job(spark, monkeypatch):
     # a stats hint far above the budget declines the rung before any
-    # Spark job: no count, no materialization
+    # Spark job: no task, no materialization
     g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1)]))
-    budget, sc = 1 << 20, spark.sparkContext
+    budget = 1 << 20
 
     def gate_jobs(hint, group):
         monkeypatch.setattr(st, "plan_size_hint_bytes", lambda df: hint)
-        sc.setJobGroup(group, group)
-        try:
-            copy = st.gate(g, budget, 16)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return copy, list(sc.statusTracker().getJobIdsForGroup(group))
+        return _group_jobs(spark, group, lambda: st.run(g, _row_count(), "n long", budget, 16))
 
-    copy, jobs = gate_jobs(8 * budget + 1, "gate-oversized-hint")
-    assert copy is None and jobs == []
-    # the control: without a hint the same gate counts, under its group
-    copy, jobs = gate_jobs(None, "gate-no-hint")
-    assert copy is not None and jobs
-    st.release_checkpoint(copy)
+    outcome, jobs = gate_jobs(8 * budget + 1, "gate-oversized-hint")
+    assert outcome.out is None and outcome.rows == 0 and jobs == []
+    # the control: without a hint the same call runs its task, under its group
+    outcome, jobs = gate_jobs(None, "gate-no-hint")
+    assert outcome.out.first()["n"] == 3 and jobs
+    st.release_checkpoint(outcome.out)
+
+
+def _worker_pids(spark):
+    """The pids of the idle Python worker pool: idle workers are handed
+    out first-in first-out, so one-task probes in a row cycle through the
+    pool until the first pid comes round again. A worker that was exited
+    is missing from the cycle."""
+
+    def pid(batches):
+        import os
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()]})
+
+    probe = spark.range(1).coalesce(1).mapInArrow(pid, "pid long")
+    first = probe.collect()[0]["pid"]
+    seen = {first}
+    while len(seen) < 64 and (p := probe.collect()[0]["pid"]) != first:
+        seen.add(p)
+    return seen
+
+
+def test_decline_drains_and_keeps_its_worker(spark, monkeypatch):
+    # an input the hint cannot size declines in the task after cap + 1
+    # rows; the task drains its input, so PySpark keeps its worker and the
+    # next Python task does not pay a fresh one
+    g = spark.range(1000).select(
+        (F.col("id") % 37).cast("string").alias("src"),
+        (F.col("id") + 100).cast("string").alias("dst"),
+    )
+    monkeypatch.setattr(st, "plan_size_hint_bytes", lambda df: None)
+    before = _worker_pids(spark)
+    outcome = st.run(g, _row_count(), "n long", 10 * 16, 16)
+    assert (outcome.rows, outcome.out) == (11, None)
+    assert _worker_pids(spark) == before
+
+
+# the most Spark jobs a call on the rung may run, the caller's collect
+# included: the fused task and the collect; triangle's and jaccard's
+# bounds leave room for the shuffle stage of the grouped pair stream
+# their driver queries read
+RUNG_JOBS = {
+    "pagerank": (lambda g: pagerank(g, fixed_iterations=10, threshold=2), 2),
+    "cc": (lambda g: connected_components(g, threshold=2), 2),
+    "degree": (lambda g: degree_count(g, threshold=2), 2),
+    "triangle_count_long_pairs": (lambda g: triangle_count_long_pairs(_long_pairs(g)), 4),
+    "jaccard_counts": (jaccard_counts, 4),
+}
+
+
+@pytest.mark.parametrize("algo", list(RUNG_JOBS))
+def test_rung_call_jobs_and_persisted_rdds(spark, tier_runs, algo):
+    # machine-independent: one action runs the task and materializes the
+    # result, and the call leaves no persisted RDD but that result
+    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
+    fn, most = RUNG_JOBS[algo]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    out, jobs = _group_jobs(spark, f"rung-jobs-{algo}", lambda: fn(g))
+    rows, collect_jobs = _group_jobs(spark, f"rung-collect-{algo}", out.collect)
+    assert len(tier_runs) == 1 and rows
+    assert len(jobs) + len(collect_jobs) <= most
+    assert len(set(persisted().keySet()) - before) == 1  # the result
+    st.release_checkpoint(out)
+    assert set(persisted().keySet()) - before == set()
+
+
+def test_kernel_error_surfaces(spark, hub_graph, monkeypatch):
+    # a failure inside the kernel surfaces as the task's PythonException;
+    # the rung never swallows it into a fallback
+    prmod = importlib.import_module("gelly_partitioning_spark.algorithms.pagerank")
+
+    def factory(*a):
+        def kernel(si, di, strs):
+            raise RuntimeError("unrelated failure")
+
+        return kernel
+
+    monkeypatch.setattr(prmod, "_pagerank_kernel", factory)
+    with pytest.raises(PythonException, match="unrelated failure"):
+        pagerank(_cached(hub_graph), fixed_iterations=5, threshold=2).collect()
 
 
 def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
@@ -239,17 +353,12 @@ def test_triangle_core_close_methods_agree():
 
 
 def test_jaccard_rung_runs_few_jobs(spark, tier_runs):
-    # a machine-independent bound on the rung's cost: the gate's count,
-    # the kernel task and the collect (the distributed path runs ~23)
+    # a machine-independent bound on the rung's cost: the fused task and
+    # the collect, with room to spare (the distributed path runs ~23)
     g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
-    sc, group = spark.sparkContext, "jaccard-single-task"
-    sc.setJobGroup(group, group)
-    try:
-        rows = jaccard_counts(g).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = _group_jobs(spark, "jaccard-single-task", lambda: jaccard_counts(g).collect())
     assert len(tier_runs) == 1 and len(rows) == 5
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert len(jobs) <= 4
 
 
 def test_jaccard_gate_charges_id_bytes(spark, tier_runs):

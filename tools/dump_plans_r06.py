@@ -107,17 +107,39 @@ capture_step(
     ),
 )
 
-# the r6 single-task tier's own (one-job) plans — no 'before' counterpart
+# the single-task rung's own plans — no 'before' counterpart. A call on
+# the rung materializes its result before it returns, so the plan of
+# record is the fused task's (coalesce(1).limit(cap + 1) -> MapInArrow),
+# captured as the rung checkpoints it
 from gelly_partitioning_spark import degree_count  # noqa: E402
 
-try:
-    dump("pagerank_single_task", plan_of(pagerank(edges, fixed_iterations=10, threshold=256)))
-    dump("cc_single_task", plan_of(connected_components(edges, threshold=256)))
-    dump("degree_single_task", plan_of(entry._q_degree(spark, sf_dir)))
-    dump("triangle_single_task", plan_of(entry._q_triangle(spark, sf_dir)))
-    dump("jaccard_single_task", plan_of(entry._q_jaccard(spark, sf_dir)))
-except TypeError:
-    pass
+
+def task_plan(fn) -> str:
+    cls = type(edges)  # the session's concrete DataFrame class
+    plans, orig = [], cls.localCheckpoint
+
+    def capture(self, *a, **k):
+        text = plan_of(self)
+        if "MapInArrow" in text:
+            plans.append(text)
+        return orig(self, *a, **k)
+
+    cls.localCheckpoint = capture
+    try:
+        fn()
+    finally:
+        cls.localCheckpoint = orig
+    return plans[-1]
+
+
+dump(
+    "pagerank_single_task",
+    task_plan(lambda: pagerank(edges, fixed_iterations=10, threshold=256)),
+)
+dump("cc_single_task", task_plan(lambda: connected_components(edges, threshold=256)))
+dump("degree_single_task", task_plan(lambda: entry._q_degree(spark, sf_dir)))
+dump("triangle_single_task", task_plan(lambda: entry._q_triangle(spark, sf_dir)))
+dump("jaccard_single_task", task_plan(lambda: entry._q_jaccard(spark, sf_dir)))
 
 # -- one-shot queries: the query-level plan is the evidence -----------------
 # triangle: the distributed (>budget) wedge/close plan, same entry input
