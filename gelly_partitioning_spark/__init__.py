@@ -26,7 +26,7 @@ from .graph import (
     vertices,
 )
 from .session import get_spark
-from .splitting import SplitGraph, merge_by_tag, propagate_to_subvertices, split_graph, unsplit
+from .splitting import SplitGraph, split_graph
 from .superstep import SuperstepRunner
 
 __version__ = "0.1.0"

@@ -5,18 +5,21 @@ SortDegreeNodeSplitting.java:28-97 (split path) — undirected degree per
 original vertex, computed on the *split* edge set then tree-merged.
 Golden fixture: util/NodeSplittingData.java:55-57.
 
-Spark shape: per-sub-vertex partial count (groups bounded by the split) →
-single ``groupBy(tag).sum`` merge. Two shuffles total, both balanced.
+Spark shape: the salted layout every distributed rung runs on
+(``distributed.vertex_table`` + ``salted_layout``), a per-sub-vertex
+partial count over its routing rows (groups bounded by the split), one
+``groupBy(vid).sum`` merge on ``sub >> b`` and one decode to the ids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .. import single_task
+from .. import distributed, single_task
 from ..graph import degrees, normalize_edges
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
-from ..splitting import merge_by_tag, split_graph
+from ..splitting import salt_bits
+from ..superstep import release_checkpoint
 
 # Single-task working set per endpoint (two per input edge): the Arrow
 # id string and its dictionary code. The task replayed outside Spark (as
@@ -35,20 +38,12 @@ def degree_count(
 ) -> DataFrame:
     """(id, degree): undirected degree per original vertex.
 
-    r6 restructure (guide §1.2 no duplicate passes): the round-start
-    shape derived the split fan-out table from the shared undirected
-    cache in a way that made BOTH broadcast fan-out builds re-run the
-    full degree aggregation (the two BroadcastExchange subtrees each
-    carried their own groupBy in the plan). ``split_graph``'s defaults
-    now derive ONE lazily-checkpointed degree table from the same lazily-
-    checkpointed undirected expansion — each is computed exactly once
-    (und on the first fan-out build, deg alongside it; the second fan-out
-    broadcast and the rewrite join read the caches). Below
-    ``single_task_budget_bytes`` the whole count instead runs as one
-    vectorized bincount task — the same budget-gated single-task
-    rung as pagerank/cc/triangle.
-    (Eagerly pre-materializing degree+und the way the ITERATIVE consumers
-    do measured 4.4 s vs 2.3 s here — that direction stays rejected.)
+    Below ``single_task_budget_bytes`` the whole count runs as one
+    vectorized bincount task, the same budget-gated single-task rung as
+    pagerank/cc/triangle. Above it, ``split=True`` counts over the salted
+    layout PageRank, CC and LP run on (``mode`` reaches
+    ``splitting.split_vids``), so any vertex id is accepted;
+    ``split=False`` is one plain ``groupBy``.
     """
     edges = normalize_edges(edges)
 
@@ -74,10 +69,12 @@ def degree_count(
         return out
     if not split:
         return degrees(edges)
-    sg = split_graph(edges, threshold=threshold, alpha=alpha, level=level, mode=mode)
-    partial = sg.edges.groupBy("src", "src_tag").agg(F.count("*").alias("pdeg"))
-    merged = merge_by_tag(
-        partial.select(F.col("src_tag").alias("tag"), "pdeg"),
-        [F.sum("pdeg").cast("long").alias("degree")],
-    )
-    return merged.select(F.col("tag").alias("id"), "degree")
+    vt = distributed.vertex_table(edges)
+    e, subs = distributed.salted_layout(edges, vt, True, threshold, alpha, level, mode)
+    if mode == "tree":
+        release_checkpoint(subs)  # handed over materialized; the merge reads only the routes
+    partial = e.groupBy("src").agg(F.count("*").alias("pdeg"))
+    merged = partial.groupBy(
+        F.shiftright("src", salt_bits(alpha, level, vt.n - 1)).alias("vid")
+    ).agg(F.sum("pdeg").cast("long").alias("degree"))
+    return distributed.decode(merged, vt, "vid").select(F.col("vid").alias("id"), "degree")

@@ -29,12 +29,12 @@ from ..splitting import split_graph
 
 
 def _shared_split(edges: DataFrame, threshold, alpha: int, level: int):
-    """Examined in r6 and deliberately left as bare split_graph: these are
-    ONE-PASS consumers of the split edges, and pre-materializing the
-    degree/undirected tables costs a serialized cache write that a single
-    pass never amortizes (measured on degree_count: 4.4 s vs 2.3 s at
-    sf0.1; guide §5). The iterative algorithms, which re-scan every
-    superstep, do share those tables — see pagerank/cc/lp."""
+    """The flat string split (``id#k``). These are ONE-PASS consumers of
+    the split edges: ``split_graph``'s lazy undirected and degree
+    checkpoints fill as the one pass runs, where the vertex table the
+    distributed rungs and ``degree_count`` key on is an eager checkpoint
+    plus a counting job before the first edge is routed (guide §5). The
+    iterative algorithms, which re-scan every superstep, amortize it."""
     return split_graph(edges, threshold=threshold, alpha=alpha, level=level)
 
 

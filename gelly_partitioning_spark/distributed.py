@@ -205,19 +205,19 @@ def salted_table(edges: DataFrame, rows: int) -> DataFrame:
     Pre-hash-partitioned by the scatter-join key ``src`` into the
     session's shuffle-partition count and checkpointed: the checkpoint
     keeps HashPartitioning(src), so every superstep's edge-side exchange
-    is elided and only the vertex-sized state shuffles. It is planned
-    with AQE off, the setting restored before it runs: an adaptive plan
-    reports UnknownPartitioning, which the checkpoint would keep.
+    is elided and only the vertex-sized state shuffles. It is planned and
+    checkpointed in a clone of the session with AQE off (an adaptive plan
+    reports UnknownPartitioning, which the checkpoint would keep), then
+    read back in the caller's session, whose settings it never touches.
     """
     spark = edges.sparkSession
     routed = edges.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("src"))
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        routed._jdf.queryExecution().executedPlan()  # planned once; the checkpoint reuses it
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    return checkpoint_static_sized(routed, rows, spark)
+    clone = spark._jsparkSession.cloneSession()
+    clone.conf().set("spark.sql.adaptive.enabled", "false")
+    rows_of = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    planned = DataFrame(rows_of(clone, routed._jdf.logicalPlan()), spark)
+    table = checkpoint_static_sized(planned, rows, spark)
+    return DataFrame(rows_of(spark._jsparkSession, table._jdf.logicalPlan()), spark)
 
 
 def salted_tables(

@@ -4,13 +4,18 @@ This is the engine's core contribution, a from-scratch reimplementation of
 the reference's node-splitting technique (splitUtils/SplitVertex.java):
 
 - *detect*  skewed vertices: degree > threshold      (SplitVertex.java:30-44)
-- *split*   replace a skewed vertex with sub-vertices ``id#b``; route each
-  incident edge to one sub-vertex by hashing the neighbor id
+- *split*   replace a skewed vertex with sub-vertices; route each incident
+  edge to one sub-vertex by hashing the neighbor id
   (SplitVertex.java:61-114; per-level rehash 286-294, 334-342)
 - *merge*   partial per-sub-vertex values back to the original vertex via an
   associative combiner                                (SplitVertex.java:186-225)
-- *propagate* merged values back down to every sub-vertex
-  (SplitVertex.java:402-428)
+
+The split has two id forms. ``split_vids`` is the one every distributed
+rung runs (PageRank, CC, LP and ``degree_count``): a sub-vertex is the
+long ``(vid << b) | salt`` over the vertex's minted ``vid``, unique by
+construction for any vertex id. ``split_graph`` is the string form
+``id#k``, flat only, for the one-pass neighborhood consumers and the
+partitioning plans; it rejects a split vertex whose id contains ``#``.
 
 Spark-first deviations (all answer-preserving — SURVEY.md §0: every merge
 combiner is commutative/associative, so routing hash choice never changes
@@ -22,8 +27,9 @@ results, only load balance):
    threshold), 1, alpha**level)`` and route with ``pmod(xxhash64(neighbor,
    seed), n_splits)`` — one degree job + one rewrite pass instead of
    ``level`` passes over the full edge set. At 100 TB that is the difference
-   between 1 and ``level`` full-shuffle scans. The recursive tree variant is
-   kept (`mode='tree'`) for reference-parity debugging.
+   between 1 and ``level`` full-shuffle scans. The recursive tree variant
+   (``mode='tree'``) exists only in ``split_vids``, for reference-parity
+   debugging.
 2. **Explicit ``tag`` column** carries the original vertex id alongside the
    sub-vertex id, replacing every ``indexOf('_')`` string scan
    (SplitVertex.java:102-109) and letting the final merge be a *single*
@@ -76,14 +82,14 @@ class SplitGraph:
         return self.vertices.select("tag").distinct()
 
 
-def _route(edge_col: str, neighbor_tag_col: str, n_splits_col: str, seed: int):
-    """Salted sub-vertex id: ``id#pmod(xxhash64(neighbor, seed), n)``.
+def _route(edge_col: str, neighbor_tag_col: str, n_splits_col: str):
+    """Salted sub-vertex id: ``id#pmod(xxhash64(neighbor, 0), n)``.
 
     Routing by the *neighbor* id (not random) is the reference's scheme
     (SplitVertex.java:286-296): all copies of the same (hub, neighbor)
     pair land on the same sub-vertex, keeping routing deterministic.
     """
-    bucket = F.pmod(F.xxhash64(F.col(neighbor_tag_col), F.lit(seed)), F.col(n_splits_col))
+    bucket = F.pmod(F.xxhash64(F.col(neighbor_tag_col), F.lit(0)), F.col(n_splits_col))
     return F.when(
         F.col(n_splits_col) > 1,
         F.concat(F.col(edge_col), F.lit(SEP), bucket.cast("string")),
@@ -127,9 +133,8 @@ def split_graph(
     threshold: int | None = DEFAULT_THRESHOLD,
     alpha: int = DEFAULT_ALPHA,
     level: int = DEFAULT_LEVEL,
-    mode: str = "flat",
 ) -> SplitGraph:
-    """Build the split graph from a *directed* edge DataFrame.
+    """Build the flat split graph from a *directed* edge DataFrame.
 
     Returns undirected-expanded routing edges whose skewed endpoints are
     rewritten to sub-vertex ids, plus the (id, tag) sub-vertex table.
@@ -155,40 +160,22 @@ def split_graph(
     und = checkpoint_static(undirected(edges), eager=False)
     # lazy vertex-sized cache: the degree table feeds BOTH broadcast
     # fan-out builds (and the auto-threshold agg) — without it each
-    # consumer re-ran the full aggregation (r6, the same fix degree_count's
-    # explicit path got; the plan showed the groupBy subtree once per
-    # BroadcastExchange)
+    # consumer re-ran the full aggregation (the plan showed the groupBy
+    # subtree once per BroadcastExchange)
     degree_df = (
         und.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").cast("long").alias("degree"))
         .localCheckpoint(eager=False)
     )
     threshold = resolve_threshold(degree_df, threshold)
-    if mode == "flat":
-        e = _split_flat(und, degree_df, threshold, alpha, level)
-    elif mode == "tree":
-        e = _split_tree(und, threshold, alpha, level)
-    else:
-        raise ValueError(f"unknown split mode: {mode}")
-
-    verts = (
-        e.select(F.col("src").alias("id"), F.col("src_tag").alias("tag"))
-        .unionByName(e.select(F.col("dst").alias("id"), F.col("dst_tag").alias("tag")))
-        .distinct()
-    )
-    return SplitGraph(edges=e, vertices=verts, alpha=alpha, level=level, threshold=threshold)
-
-
-def _split_flat(und: DataFrame, degree_df: DataFrame, threshold: int, alpha: int, level: int) -> DataFrame:
-    """Single-pass split: fan-out = clamp(ceil(degree/threshold), 1, alpha^level)."""
     fanout = degree_df.select(
         "id", n_splits(threshold, alpha, level).alias("n_splits")
     ).filter(F.col("n_splits") > 1)
     # Guard: an input id that already contains the sub-vertex separator
-    # would make generated sub-vertex ids ambiguous (and unsplit() would
-    # truncate it). Checked only on the tiny skewed set when the fanout
-    # table materializes for broadcast — non-split ids never acquire a
-    # suffix, and all tag-based code paths ignore the id string entirely.
+    # would make generated sub-vertex ids ambiguous. Checked only on the
+    # tiny skewed set when the fanout table materializes for broadcast —
+    # non-split ids never acquire a suffix, and all tag-based code paths
+    # ignore the id string entirely.
     fanout = fanout.select(_without_separator("id"), "n_splits")
     # The skewed set is tiny (power-law tail above threshold) — broadcast
     # both attachment joins so the full edge set is never shuffled here.
@@ -207,60 +194,18 @@ def _split_flat(und: DataFrame, degree_df: DataFrame, threshold: int, alpha: int
         .withColumn("dst_n", F.coalesce("dst_n", F.lit(1).cast("long")))
     )
     e = e.select(
-        _route("src", "dst", "src_n", seed=0).alias("src"),
-        _route("dst", "src", "dst_n", seed=0).alias("dst"),
+        _route("src", "dst", "src_n").alias("src"),
+        _route("dst", "src", "dst_n").alias("dst"),
         "w",
         F.col("src").alias("src_tag"),
         F.col("dst").alias("dst_tag"),
     )
-    return e
-
-
-def _split_tree(und: DataFrame, threshold: int, alpha: int, level: int) -> DataFrame:
-    """Reference-shaped recursive split: ``level`` rounds, each splitting
-    currently-skewed (sub-)vertices by ``alpha`` with a fresh hash seed
-    (SplitVertex.java:61-114; per-level rehash = seeded xxhash64 here).
-    Kept for parity debugging; O(level) passes, each checkpointed — use
-    'flat' at scale."""
-    e = und.select(
-        "src", "dst", "w",
-        F.col("src").alias("src_tag"), F.col("dst").alias("dst_tag"),
+    verts = (
+        e.select(F.col("src").alias("id"), F.col("src_tag").alias("tag"))
+        .unionByName(e.select(F.col("dst").alias("id"), F.col("dst_tag").alias("tag")))
+        .distinct()
     )
-    owned: list[DataFrame] = []  # the previous level's checkpoint
-    for lvl in range(int(level)):
-        # each level reads the last one's checkpoint, so its work does not
-        # re-run the levels before it
-        deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
-        skewed = deg.filter(F.col("degree") > threshold).select("id").localCheckpoint(eager=False)
-        if not skewed.count():
-            release_checkpoint(skewed)
-            break
-        # same reserved-separator guard as _split_flat: an input id that
-        # already contains SEP would make generated sub-vertex ids ambiguous
-        # (level-0 only: deeper levels split ids the engine itself minted)
-        if lvl == 0:
-            skewed = skewed.select(_without_separator("id"))
-        alpha_col = f"__alpha_{lvl}"
-        sk_src = F.broadcast(skewed.select(F.col("id").alias("src"), F.lit(int(alpha)).cast("long").alias(alpha_col)))
-        sk_dst = F.broadcast(skewed.select(F.col("id").alias("dst"), F.lit(int(alpha)).cast("long").alias(alpha_col + "d")))
-        e = (
-            e.join(sk_src, "src", "left")
-            .join(sk_dst, "dst", "left")
-            .withColumn(alpha_col, F.coalesce(alpha_col, F.lit(1).cast("long")))
-            .withColumn(alpha_col + "d", F.coalesce(alpha_col + "d", F.lit(1).cast("long")))
-            .select(
-                _route("src", "dst_tag", alpha_col, seed=lvl + 1).alias("src"),
-                _route("dst", "src_tag", alpha_col + "d", seed=lvl + 1).alias("dst"),
-                "w",
-                "src_tag",
-                "dst_tag",
-            )
-            .localCheckpoint(eager=True)
-        )
-        for df in (skewed, *owned):
-            release_checkpoint(df)
-        owned = [e]
-    return e
+    return SplitGraph(edges=e, vertices=verts, alpha=alpha, level=level, threshold=threshold)
 
 
 # -- the long-id form the distributed rungs run on ---------------------------
@@ -361,25 +306,3 @@ def split_vids(
         for df in last:
             release_checkpoint(df)
     return e, subs
-
-
-def merge_by_tag(partials: DataFrame, agg_exprs: list, key: str = "tag") -> DataFrame:
-    """treeAggregate, collapsed: merge per-sub-vertex partials to one row
-    per original vertex with associative combiners (SplitVertex.java:186-225;
-    single groupBy is legal per SURVEY.md §7.1-2)."""
-    return partials.groupBy(key).agg(*agg_exprs)
-
-
-def propagate_to_subvertices(subvertices: DataFrame, tag_values: DataFrame, on: str = "tag") -> DataFrame:
-    """propagateValuesToSplitVertices (SplitVertex.java:402-428): attach the
-    merged per-original-vertex value to every sub-vertex. The join key is
-    ``tag`` with ≤ alpha^level rows per key on the left — balanced by
-    construction, so a plain shuffle join is safe at any scale; Catalyst/AQE
-    broadcasts tag_values automatically when it is small."""
-    return subvertices.join(tag_values, on=on)
-
-
-def unsplit(df: DataFrame, id_col: str = "id") -> DataFrame:
-    """Strip the sub-vertex suffix, recovering the original id
-    (cleanupEdges, SplitVertex.java:234-257)."""
-    return df.withColumn(id_col, F.substring_index(F.col(id_col), SEP, 1))

@@ -132,17 +132,32 @@ ON_STAR = {
 }
 
 
-@pytest.mark.parametrize("algo", list(ON_STAR))
+# degree's rungs: its split rungs run on the salted layout, not the
+# broadcast state
+DEGREE_RUNGS = {
+    "single-task": {},
+    "split-flat": {"single_task_budget_bytes": 0},
+    "split-tree": {"single_task_budget_bytes": 0, "mode": "tree"},
+}
+
+
+def _degree_on_star(g, **kw):
+    return {r["id"]: r["degree"] for r in degree_count(g, threshold=4, **kw).collect()}
+
+
+@pytest.mark.parametrize("algo", [*ON_STAR, "degree"])
 def test_every_rung_agrees_on_separator_ids(spark, calls, algo):
     g = from_pairs(spark, STAR).cache()
     g.count()  # sized, so the single-task gate admits it
-    tasks, salted = calls(single_task, "run_loop"), calls(dist, "salted_table")
+    tasks, salted = calls(single_task, "run_loop"), calls(dist, "salted_layout")
+    run, rungs = (_degree_on_star, DEGREE_RUNGS) if algo == "degree" else (ON_STAR[algo], RUNGS)
     answers = {}
-    for rung, kw in RUNGS.items():
-        answers[rung] = ON_STAR[algo](g, **kw)
+    for rung, kw in rungs.items():
+        answers[rung] = run(g, **kw)
         assert len(answers[rung]) == 21
-    # pagerank and cc took the single-task rung once, every salted run split
-    assert (len(tasks), len(salted)) == (0 if algo == "lp" else 1, 2)
+    # pagerank and cc took the iterative single-task rung once, every
+    # salted or split run split (so degree's unsplit run was its task)
+    assert (len(tasks), len(salted)) == (int(algo in ("pagerank", "cc")), 2)
     assert all(a == answers["single-task"] for a in answers.values()), answers
 
 

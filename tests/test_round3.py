@@ -131,17 +131,6 @@ def test_lp_workset_shrinks(spark):
     assert any(0 < c < n for c in changed)  # a genuinely partial frontier ran
 
 
-# -- tree-mode separator guard -------------------------------------------------
-
-
-def test_split_tree_rejects_separator_ids(spark):
-    from gelly_partitioning_spark import from_pairs, split_graph
-
-    bad = from_pairs(spark, [("a#1", f"x{i}") for i in range(8)])
-    with pytest.raises(Exception, match="reserved separator"):
-        split_graph(bad, threshold=2, mode="tree").edges.collect()
-
-
 # -- quantile auto threshold ---------------------------------------------------
 
 

@@ -85,10 +85,8 @@ GRAPHS = {
     "unicode_ids": lambda spark, request: _cached(from_pairs(
         spark, [("é", "a"), ("a", "ü"), ("ü", "é"), ("日本", "a"), ("日本", "é"), ("z", "日本")]
     )),
-    # the string split (degree's distributed rung) still rejects a split
-    # vertex named with its separator, so the '#' id stays below threshold
     "separator_id": lambda spark, request: _cached(from_pairs(
-        spark, [("x#1", "y"), ("y", "z"), ("z", "x#1"), ("z", "w"), ("w", "y")]
+        spark, [("x#1", "y"), ("y", "z"), ("z", "x#1"), ("z", "w"), ("w", "y"), ("x#1", "w")]
     )),
     "dup_reversed": lambda spark, request: _cached(from_pairs(
         spark, [("a", "b"), ("b", "a"), ("a", "b"), ("b", "c"), ("c", "b"), ("c", "a"),

@@ -77,9 +77,8 @@ def test_auto_threshold_from_avg_degree(hub_graph):
 
 
 def test_split_rejects_id_with_separator(spark):
-    """A to-be-split vertex id containing the reserved separator must be
-    rejected (its sub-vertex ids would be ambiguous and unsplit() would
-    truncate it)."""
+    """A to-be-split vertex id containing the string split's reserved
+    separator must be rejected (its sub-vertex ids would be ambiguous)."""
     import pytest
     from gelly_partitioning_spark import from_pairs
 
@@ -91,11 +90,11 @@ def test_split_rejects_id_with_separator(spark):
         sg.edges.count()
 
 
-@pytest.mark.parametrize("form", ["long", "string"])
+@pytest.mark.parametrize("form", ["long"])
 def test_tree_split_jobs_grow_linearly(spark, form):
     # each tree level reads the previous level's checkpoint, so every
     # level adds the same jobs; over the lazily grown plan each level
-    # re-ran all the ones before it (long: 20, 37, 70 jobs at levels 2-4)
+    # re-ran all the ones before it (20, 37, 70 jobs at levels 2-4)
     g = normalize_edges(from_pairs(spark, [("hub", f"leaf{i}") for i in range(20)])).cache()
     g.count()
     vt = dist.vertex_table(g)
@@ -105,11 +104,8 @@ def test_tree_split_jobs_grow_linearly(spark, form):
         group = f"tree-split-{form}-{level}"
         sc.setJobGroup(group, group)
         try:
-            if form == "long":
-                e, subs = dist.salted_layout(g, vt, True, 1, 2, level, "tree")
-                subs.count()
-            else:
-                e = split_graph(g, threshold=1, level=level, mode="tree").edges
+            e, subs = dist.salted_layout(g, vt, True, 1, 2, level, "tree")
+            subs.count()
             e.count()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -135,3 +131,18 @@ def test_salted_tables_leave_only_their_tables(spark, mode):
     for df in (routing, subs):
         release_checkpoint(df)
     assert persisted().size() == before
+
+
+def test_salted_tables_never_write_the_session_conf(spark, monkeypatch):
+    # the routing table is planned without AQE in a cloned session: a
+    # thread sharing the caller's session never sees a setting flip
+    from pyspark.sql.conf import RuntimeConfig
+
+    g = normalize_edges(from_pairs(spark, [("hub", f"leaf{i}") for i in range(20)]))
+    vt = dist.vertex_table(g)
+    writes, orig = [], RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, *a: writes.append(a) or orig(self, *a))
+    tables = dist.salted_tables(g, vt, ("src", "dst_tag"), True, 1, 2, 3, "flat")
+    assert writes == []
+    for df in tables:
+        release_checkpoint(df)

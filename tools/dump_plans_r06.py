@@ -168,9 +168,10 @@ except ImportError:
     jac = entry._q_jaccard(spark, sf_dir)
 dump("jaccard", plan_of(jac))
 # the distributed (>budget) degree path, same entry args/input as the
-# before-file so the pair is comparable — the r6 fan-out fix shows as the
-# two BroadcastExchange aggregation subtrees collapsing into one shared
-# ExistingRDD scan
+# before-file so the pair is comparable: the salted layout's two broadcast
+# endpoint joins over the input edges, the per-sub-vertex count and the
+# merge on the vertex id (one exchange each), then one broadcast decode
+# join; the vertex table they read is a checkpoint (Scan ExistingRDD)
 dump(
     "degree_count",
     plan_of(
