@@ -230,6 +230,7 @@ def connected_components(
         chain=not use_broadcast,
     )
     final = runner.run(init, step, max_iterations)
+    distributed.release_tables(e, None if use_broadcast else sub)
     vids = ("tag",) if numeric_ids else ("tag", "component")
     return distributed.decode(final, vt, *vids).select(
         F.col("tag").alias("id"), F.col("component").cast("string")

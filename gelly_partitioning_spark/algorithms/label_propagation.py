@@ -246,4 +246,5 @@ def label_propagation(
         # runner resolves it after measuring the first superstep.
         runner.batch_size_fn = lambda: 1 if _delta_now() else runner.batch_size
     final = runner.run(init, step, max_iterations)
+    distributed.release_tables(e, None if use_broadcast else sub)
     return distributed.decode(final, vt, "tag").select(F.col("tag").alias("id"), "label")

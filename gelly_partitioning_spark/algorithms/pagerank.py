@@ -246,4 +246,5 @@ def pagerank(
         chain=not use_broadcast,
     )
     final = runner.run(init, step, iters)
+    distributed.release_tables(e, None if use_broadcast else sub_deg)
     return distributed.decode(final, vt, "tag").select(F.col("tag").alias("id"), "rank")

@@ -10,6 +10,11 @@ maxIterations alpha level) as one dispatcher:
 
 or locally: ``python -m gelly_partitioning_spark.cli <algo> ...``.
 
+The session runs the engine's Python worker daemon
+(``session.PYTHON_DAEMON``), so the executors' Python must import
+``gelly_partitioning_spark`` when their workers start: installed, or on
+the executors' ``PYTHONPATH``.
+
 Edge input: parquet with (src, dst[, w]) or a tab-separated edge list
 ('#' comments skipped — reference S1 scan, AlphaNodeSplitting.java:256-273).
 Output: parquet (default) or CSV (reference S4 sink).
@@ -24,6 +29,7 @@ import sys
 from pyspark.sql import SparkSession
 
 from . import algorithms
+from .session import PYTHON_DAEMON
 from .sources.edge_list import read_edge_list
 from .superstep import SuperstepRunner
 
@@ -64,9 +70,12 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
-    spark = SparkSession.builder.appName(
-        f"gps-{args.algorithm}"
-    ).getOrCreate()  # master/conf come from spark-submit
+    # master and every other setting come from spark-submit
+    spark = (
+        SparkSession.builder.appName(f"gps-{args.algorithm}")
+        .config(*PYTHON_DAEMON)
+        .getOrCreate()
+    )
     edges = _load_edges(spark, args.edges)
 
     split_kw = dict(

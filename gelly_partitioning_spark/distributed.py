@@ -24,7 +24,8 @@ code, so where the split came from changes neither rung nor answer:
   join at setup; ``salted_layout`` is also what ``save_prepared_graph``
   writes;
 - ``wire_runner``: batch size, chained-checkpoint truncation and the
-  resume fingerprint.
+  resume fingerprint; ``release_tables`` drops the static tables once
+  the loop is done.
 
 Why the broadcast rung needs no split (guide §2.4/§1.2): in broadcast
 mode the scatter joins on the ORIGINAL source vertex's vid against the
@@ -244,6 +245,16 @@ def salted_tables(
         return routing, subs if tree else subs.localCheckpoint(eager=True)
     subs = source.sub_deg if with_deg else source.sub_deg.select("src", "tag")
     return source.edges.select(*cols).cache(), subs.cache()
+
+
+def release_tables(*tables: DataFrame | None) -> None:
+    """Release a run's static tables once its loop is done: a fresh run's
+    checkpoints, a prepared source's cached scans (None: no table). The
+    answer reads only the vertex table and the final state."""
+    for t in tables:
+        if t is not None:
+            release_checkpoint(t)
+            t.unpersist()
 
 
 def wire_runner(

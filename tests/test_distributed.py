@@ -352,6 +352,23 @@ def test_prepared_equals_fresh_on_each_rung(spark, hub_graph, layouts, calls, al
         assert got == want
 
 
+@pytest.mark.parametrize("prepared", [False, True])
+@pytest.mark.parametrize("salted", [False, True])
+@pytest.mark.parametrize("algo", ["pagerank-long", "cc", "lp"])
+def test_call_leaves_only_vertex_table_and_state(spark, hub_graph, layouts, algo, salted, prepared):
+    # the static tables are released once the loop is done (a fresh run's
+    # checkpoints, a prepared source's cached scans); the collected answer
+    # reads only the vertex table and the final state
+    long_ids, run = SOURCES[algo]
+    kw = {"broadcast_threshold_vertices": 0} if salted else {}
+    if prepared:
+        kw["prepared"] = layouts[long_ids]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    run(None if prepared else hub_graph, **kw)
+    assert len(set(persisted().keySet()) - before) <= 2
+
+
 @pytest.mark.parametrize("long_ids", [True, False])
 def test_layout_vertex_table_counts_routing_rows(spark, layouts, long_ids):
     pg = layouts[long_ids]
