@@ -4,16 +4,25 @@ Mirrors the reference's per-algorithm ``main()`` programs
 (e.g. SortDegreeNodeSplitting.java:296-315: edgePath outputPath
 maxIterations alpha level) as one dispatcher:
 
-    spark-submit --py-files gps.zip -m gelly_partitioning_spark.cli \\
+    spark-submit --py-files gps.zip tools/submit_cli.py \\
         pagerank --edges /data/edges.parquet --output /out \\
         --threshold 1000 --alpha 2 --level 8 --tol 1e-6
 
-or locally: ``python -m gelly_partitioning_spark.cli <algo> ...``.
+(``gps.zip``: the ``gelly_partitioning_spark`` directory, zipped) or
+locally: ``python -m gelly_partitioning_spark.cli <algo> ...``.
 
 The session runs the engine's Python worker daemon
-(``session.PYTHON_DAEMON``), so the executors' Python must import
-``gelly_partitioning_spark`` when their workers start: installed, or on
-the executors' ``PYTHONPATH``.
+(``session.PYTHON_DAEMON``) unless spark-submit names a daemon or ships
+``--py-files`` (``session.submitted_daemon_conf``): the daemon needs the
+package importable when the executors' workers start, before a task
+puts ``gps.zip`` on their path. To keep it under ``--py-files``, name
+the archive on the executors' path too; in local mode, where the
+executors share the driver's file system:
+
+    spark-submit --py-files gps.zip \\
+        --conf spark.executorEnv.PYTHONPATH=$PWD/gps.zip \\
+        --conf spark.python.daemon.module=gelly_partitioning_spark._daemon \\
+        tools/submit_cli.py pagerank ...
 
 Edge input: parquet with (src, dst[, w]) or a tab-separated edge list
 ('#' comments skipped — reference S1 scan, AlphaNodeSplitting.java:256-273).
@@ -26,10 +35,11 @@ import argparse
 import json
 import sys
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from . import algorithms
-from .session import PYTHON_DAEMON
+from .session import submitted_daemon_conf
 from .sources.edge_list import read_edge_list
 from .superstep import SuperstepRunner
 
@@ -70,10 +80,11 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
-    # master and every other setting come from spark-submit
+    # master and every other setting come from spark-submit, whose JVM holds them
+    SparkContext._ensure_initialized()
     spark = (
         SparkSession.builder.appName(f"gps-{args.algorithm}")
-        .config(*PYTHON_DAEMON)
+        .config(map=submitted_daemon_conf(SparkConf()))
         .getOrCreate()
     )
     edges = _load_edges(spark, args.edges)

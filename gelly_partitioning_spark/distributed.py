@@ -24,8 +24,8 @@ code, so where the split came from changes neither rung nor answer:
   join at setup; ``salted_layout`` is also what ``save_prepared_graph``
   writes;
 - ``wire_runner``: batch size, chained-checkpoint truncation and the
-  resume fingerprint; ``release_tables`` drops the static tables once
-  the loop is done.
+  resume fingerprint; ``release_tables`` drops a run's static
+  checkpoints once the loop is done.
 
 Why the broadcast rung needs no split (guide §2.4/§1.2): in broadcast
 mode the scatter joins on the ORIGINAL source vertex's vid against the
@@ -248,13 +248,13 @@ def salted_tables(
 
 
 def release_tables(*tables: DataFrame | None) -> None:
-    """Release a run's static tables once its loop is done: a fresh run's
-    checkpoints, a prepared source's cached scans (None: no table). The
-    answer reads only the vertex table and the final state."""
+    """Release a run's static checkpoints once its loop is done (None: no
+    table); the answer reads only the vertex table and the final state.
+    A prepared source's cached scans stay cached: the next call on the
+    layout, or one reading it meanwhile, hits the same cache entry."""
     for t in tables:
         if t is not None:
             release_checkpoint(t)
-            t.unpersist()
 
 
 def wire_runner(

@@ -20,16 +20,34 @@ knob is the one you would set on a real multi-executor cluster:
   only when it changed. Every Python task of the session, not only the
   engine's, then needs ``gelly_partitioning_spark`` importable where the
   workers start (the working directory, ``PYTHONPATH`` or installed).
+  A session whose settings come from spark-submit (``cli.main``) takes
+  the daemon only where that holds (``submitted_daemon_conf``).
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 # the worker daemon every engine session runs (``_daemon.py``)
 PYTHON_DAEMON = ("spark.python.daemon.module", "gelly_partitioning_spark._daemon")
+
+
+def submitted_daemon_conf(conf: SparkConf) -> dict[str, str]:
+    """The daemon setting for a session built over spark-submit's ``conf``.
+
+    Empty if spark-submit names a daemon of its own, or ships Python files
+    (``--py-files``): the daemon starts before any task, and so before
+    PySpark puts those files on a worker's ``sys.path``, so outside YARN
+    it could not import the package from them. Those launches keep
+    PySpark's daemon; one whose executors import the package at start
+    can name the engine's with ``--conf``.
+    """
+    if conf.contains(PYTHON_DAEMON[0]) or conf.get("spark.submit.pyFiles", ""):
+        return {}
+    return dict([PYTHON_DAEMON])
 
 
 def get_spark(

@@ -12,6 +12,7 @@ import warnings
 from contextlib import contextmanager
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from gelly_partitioning_spark import (
@@ -356,17 +357,23 @@ def test_prepared_equals_fresh_on_each_rung(spark, hub_graph, layouts, calls, al
 @pytest.mark.parametrize("salted", [False, True])
 @pytest.mark.parametrize("algo", ["pagerank-long", "cc", "lp"])
 def test_call_leaves_only_vertex_table_and_state(spark, hub_graph, layouts, algo, salted, prepared):
-    # the static tables are released once the loop is done (a fresh run's
-    # checkpoints, a prepared source's cached scans); the collected answer
-    # reads only the vertex table and the final state
+    # a run's static checkpoints are released once the loop is done; the
+    # collected answer reads only the vertex table and the final state. A
+    # prepared source's scans stay cached for the next call on the layout:
+    # a first call caches them, and the measured call neither adds nor drops them
     long_ids, run = SOURCES[algo]
     kw = {"broadcast_threshold_vertices": 0} if salted else {}
+    source = hub_graph
     if prepared:
-        kw["prepared"] = layouts[long_ids]
+        kw["prepared"], source = layouts[long_ids], None
+        run(None, **kw)
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persisted().keySet())
-    run(None if prepared else hub_graph, **kw)
+    run(source, **kw)
     assert len(set(persisted().keySet()) - before) <= 2
+    if prepared and salted:
+        cols = ("src", "dst_tag", "w") if algo == "lp" else ("src", "dst_tag")
+        assert layouts[long_ids].edges.select(*cols).storageLevel != StorageLevel.NONE
 
 
 @pytest.mark.parametrize("long_ids", [True, False])
