@@ -64,8 +64,13 @@ def _dec6(col):
     return col.cast("decimal(18,6)").cast("double")
 
 
+# the lineitem columns every graph reads; a declared schema spares each
+# read the one-task Spark job that infers it from the file footers
+_LINEITEM_KEYS = "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT"
+
+
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return spark.read.schema(_LINEITEM_KEYS).parquet(f"{sf_dir}/lineitem.parquet")
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,14 +88,15 @@ def ps_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the regime the Split-Merge kernel exists for.
     SQL twin: PS_EDGES_SQL.
     """
+    # SQL expressions: each Column-API call would be a JVM round trip
     li = _lineitem(spark, sf_dir)
     return (
-        li.select(
-            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        li.selectExpr(
+            "concat('p', CAST(l_partkey AS STRING)) AS src",
+            "concat('s', CAST(l_suppkey AS STRING)) AS dst",
         )
         .distinct()
-        .withColumn("w", F.lit(1.0))
+        .selectExpr("src", "dst", "1.0D AS w")
     )
 
 
@@ -98,6 +104,25 @@ PS_EDGES_SQL = (
     "SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src, "
     "'s' || CAST(l_suppkey AS VARCHAR) AS dst FROM lineitem"
 )
+
+
+def _order_pairs(spark: SparkSession, sf_dir: str, less: str) -> DataFrame:
+    """(s, d): the long part-key pairs of each order's distinct parts
+    that satisfy ``less``, a SQL condition on ``a`` and ``b``. One
+    shuffle (group by order) and the pairs made in-row by SQL lambdas,
+    where the equivalent self-join pays the same exchange plus a sort and
+    merge; collect_set's order is irrelevant, every pair is emitted."""
+    grp = _lineitem(spark, sf_dir).groupBy("l_orderkey").agg(
+        F.expr("collect_set(l_partkey) AS ps")
+    )
+    return grp.selectExpr(
+        "inline(flatten(transform(ps, a -> transform("
+        f"filter(ps, b -> {less}), b -> named_struct('s', a, 'd', b)))))"
+    )
+
+
+# the 'p…' ids of (s, d) part-key pairs
+_MINT_PARTS = ("concat('p', CAST(s AS STRING)) AS src", "concat('p', CAST(d AS STRING)) AS dst")
 
 
 def cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,37 +136,9 @@ def cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     string forms, so ('p'||a < 'p'||b) ⟺ (cast(a) < cast(b)) and the
     result set is token-identical to COOC_EDGES_SQL (concat with a fixed
     prefix is injective and order-preserving over equal prefixes)."""
-    li = _lineitem(spark, sf_dir).select(
-        "l_orderkey", F.col("l_partkey").cast("long").alias("pk")
-    )
-    # one shuffle (groupBy orderkey) + in-row pair generation instead of
-    # the equivalent self-join (which pays the same exchange plus a sort
-    # and merge); collect_set order is irrelevant — every a<b combination
-    # is emitted and the global distinct fixes the set
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("pk").alias("ps"))
-    pairs = (
-        grp.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ps",
-                        lambda a: F.filter(
-                            F.transform(
-                                "ps", lambda b: F.struct(a.alias("ka"), b.alias("kb"))
-                            ),
-                            lambda s: s["ka"].cast("string") < s["kb"].cast("string"),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.ka").alias("ka"), F.col("p.kb").alias("kb"))
-        .distinct()
-    )
-    return pairs.select(
-        F.concat(F.lit("p"), F.col("ka").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("kb").cast("string")).alias("dst"),
-    ).withColumn("w", F.lit(1.0))
+    # the global distinct fixes the set: pairs repeat across orders
+    pairs = _order_pairs(spark, sf_dir, "CAST(a AS STRING) < CAST(b AS STRING)")
+    return pairs.distinct().selectExpr(*_MINT_PARTS, "1.0D AS w")
 
 
 COOC_EDGES_SQL = (
@@ -165,12 +162,11 @@ def lp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL twin: LP_EDGES_SQL."""
     li = _lineitem(spark, sf_dir)
     return (
-        li.select(
-            F.col("l_partkey").cast("long").cast("string").alias("src"),
-            (F.col("l_suppkey").cast("long") + F.lit(1000000)).cast("string").alias("dst"),
+        li.selectExpr(
+            "CAST(l_partkey AS STRING) AS src", "CAST(l_suppkey + 1000000 AS STRING) AS dst"
         )
         .distinct()
-        .withColumn("w", F.lit(1.0))
+        .selectExpr("src", "dst", "1.0D AS w")
     )
 
 
@@ -304,25 +300,7 @@ def _cooc_raw_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count and jaccard, which both dedup on every rung, read it and skip
     the distinct Exchange that the declared cooc_edges schema needs
     (jaccard mints the 'p…' ids per row)."""
-    li = _lineitem(spark, sf_dir).select(
-        "l_orderkey", F.col("l_partkey").cast("long").alias("pk")
-    )
-    grp = li.groupBy("l_orderkey").agg(F.collect_set("pk").alias("ps"))
-    return grp.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ps",
-                    lambda a: F.filter(
-                        F.transform(
-                            "ps", lambda b: F.struct(a.alias("ka"), b.alias("kb"))
-                        ),
-                        lambda s: s["ka"] < s["kb"],
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select(F.col("p.ka").alias("s"), F.col("p.kb").alias("d"))
+    return _order_pairs(spark, sf_dir, "a < b")
 
 
 def _q_triangle(spark, sf_dir):
@@ -342,13 +320,7 @@ def _q_jaccard(spark, sf_dir):
     # jaccard_counts canonicalizes and dedups its input on both rungs, so
     # it reads the raw pair stream: cooc_edges' distinct would be a second
     # exchange for the same set
-    raw = _cooc_raw_pairs(spark, sf_dir)
-    return jaccard_counts(
-        raw.select(
-            F.concat(F.lit("p"), F.col("s").cast("string")).alias("src"),
-            F.concat(F.lit("p"), F.col("d").cast("string")).alias("dst"),
-        )
-    )
+    return jaccard_counts(_cooc_raw_pairs(spark, sf_dir).selectExpr(*_MINT_PARTS))
 
 
 def _q_token_count(spark, sf_dir):

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..graph import normalize_edges
+from ..graph import normalize_edges, normalize_endpoints
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
@@ -133,13 +133,11 @@ def connected_components(
     It takes the same rung decision as an edge frame.
     """
     if prepared is None:
-        edges = normalize_edges(edges)
-
         if runner is None and broadcast_threshold_vertices is None:
             # the single-task rung (single_task.py); callers that pass a
             # runner want per-superstep metrics
             out = single_task.run_loop(
-                edges,
+                normalize_endpoints(edges),
                 _cc_kernel(max_iterations, numeric_ids),
                 "id string, component string",
                 single_task_budget_bytes,
@@ -147,6 +145,7 @@ def connected_components(
             )
             if out is not None:
                 return out
+        edges = normalize_edges(edges)
     source = edges if prepared is None else prepared
 
     vt = distributed.vertex_table(source)

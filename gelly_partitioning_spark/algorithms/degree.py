@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..graph import degrees, normalize_edges
+from ..graph import degrees, normalize_edges, normalize_endpoints
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..splitting import salt_bits
 from ..superstep import release_checkpoint
@@ -45,8 +45,6 @@ def degree_count(
     ``splitting.split_vids``), so any vertex id is accepted;
     ``split=False`` is one plain ``groupBy``.
     """
-    edges = normalize_edges(edges)
-
     # the single-task rung (single_task.py): physical strategy only,
     # identical rows; the split pipeline below is the >budget path
     def kernel(c, left_bytes):
@@ -59,7 +57,7 @@ def degree_count(
         return {"id": ids, "degree": np.bincount(codes)}, None
 
     out = single_task.run(
-        edges.select("src", "dst"),
+        normalize_endpoints(edges),
         kernel,
         "id string, degree long",
         single_task_budget_bytes,
@@ -67,6 +65,7 @@ def degree_count(
     ).out
     if out is not None:
         return out
+    edges = normalize_edges(edges)
     if not split:
         return degrees(edges)
     vt = distributed.vertex_table(edges)

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
-from ..graph import canonical_edges, degrees, normalize_edges
+from ..graph import canonical_edges, degrees, normalize_edges, normalize_endpoints
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from .triangle_count import canonical_pairs, common_neighbour_counts, oriented_edges
 
@@ -120,9 +120,8 @@ def jaccard_counts(
     """(src, dst, common_cnt, union_cnt) for each canonical undirected
     edge (src < dst): its common-neighbor count and the size of its
     endpoints' neighbor-set union, both exact integers."""
-    edges = normalize_edges(edges)
     out = single_task.run(
-        edges.select("src", "dst"),
+        normalize_endpoints(edges),
         _counts_kernel,
         "src string, dst string, common_cnt long, union_cnt long",
         single_task_budget_bytes,
@@ -131,7 +130,7 @@ def jaccard_counts(
     ).out
     if out is not None:
         return out
-    canon = canonical_edges(edges).withColumn("w", F.lit(1.0))
+    canon = canonical_edges(normalize_edges(edges)).withColumn("w", F.lit(1.0))
     deg = degrees(canon)
     common = F.coalesce("common", F.lit(0)).cast("long")
     return (
@@ -150,9 +149,8 @@ def jaccard_counts(
 
 def jaccard(edges: DataFrame) -> DataFrame:
     """(src, dst, jaccard) for each canonical undirected edge."""
-    c = jaccard_counts(edges)
-    return c.select(
-        "src", "dst", (F.col("common_cnt") / F.col("union_cnt").cast("double")).alias("jaccard")
+    return jaccard_counts(edges).selectExpr(
+        "src", "dst", "common_cnt / CAST(union_cnt AS DOUBLE) AS jaccard"
     )
 
 
@@ -161,20 +159,11 @@ def jaccard_vertex(edges: DataFrame) -> DataFrame:
     the reference's JACCARD_VERTICES shape (library/Jaccard.java:33-37)."""
     # both orientations of each edge from ONE scan: the single-task rung's
     # output has no exchange for a union's second branch to reuse
-    j = jaccard(edges)
-    both = j.select(
-        F.explode(
-            F.array(
-                F.struct("src", "dst", "jaccard"),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), "jaccard"),
-            )
-        ).alias("r")
-    ).select("r.*")
-    return (
-        both.groupBy(F.col("src").alias("id"))
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct(F.col("dst"), F.col("jaccard"))))
-            ).alias("neighbors")
-        )
+    # both orientations of each edge from ONE scan: the single-task rung's
+    # output has no exchange for a union's second branch to reuse
+    both = jaccard(edges).selectExpr(
+        "inline(array(struct(src, dst, jaccard), struct(dst AS src, src AS dst, jaccard)))"
+    )
+    return both.groupBy(F.expr("src AS id")).agg(
+        F.expr("map_from_entries(sort_array(collect_list(struct(dst, jaccard)))) AS neighbors")
     )

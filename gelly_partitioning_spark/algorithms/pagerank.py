@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import distributed, single_task
-from ..graph import normalize_edges
+from ..graph import normalize_edges, normalize_endpoints
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import CHANGED, DEFAULT_BROADCAST_STATE_BUDGET, SuperstepRunner
 
@@ -102,7 +102,6 @@ def pagerank(
     alpha: int = 2,
     level: int = 4,
     mode: str = "flat",
-    use_long_ids: bool = True,
     broadcast_threshold_vertices: int | None = None,
     broadcast_state_budget_bytes: int = DEFAULT_BROADCAST_STATE_BUDGET,
     superstep_batch: int = 1,
@@ -126,13 +125,8 @@ def pagerank(
     scan already carries HashPartitioning(src), so the edge side never
     exchanges, cold start included. ``split/threshold/alpha/level/mode``
     are baked into the persisted layout and ignored here.
-
-    ``use_long_ids`` is accepted and ignored: every distributed rung runs
-    on the vertex table's long ids.
     """
     if prepared is None:
-        edges = normalize_edges(edges)
-
         if broadcast_threshold_vertices is None and (
             runner is None or runner.checkpoint_dir is None
         ):
@@ -141,7 +135,7 @@ def pagerank(
             # wants resumable checkpoints, or the table is too big for one
             # task's memory
             out = single_task.run_loop(
-                edges,
+                normalize_endpoints(edges),
                 _pagerank_kernel(damping, tol, max_iterations, fixed_iterations),
                 "id string, rank double",
                 single_task_budget_bytes,
@@ -150,6 +144,7 @@ def pagerank(
             )
             if out is not None:
                 return out
+        edges = normalize_edges(edges)
     source = edges if prepared is None else prepared
 
     # the vertex/degree table and its vids, shared by the rung decision,

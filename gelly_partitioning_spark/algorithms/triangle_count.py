@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import single_task
-from ..graph import canonical_edges, normalize_edges
+from ..graph import canonical_edges, normalize_edges, sql_identifier
 from ..single_task import DEFAULT_SINGLE_TASK_BUDGET
 from ..superstep import fits_broadcast_budget, release_checkpoint, session_broadcast_threshold
 
@@ -187,20 +187,15 @@ def triangle_count_long_pairs(
     distinct UNORDERED pair set is the same under any canonical
     orientation. ``triangle_count`` never calls back into this function.
     """
-    cols = pairs.columns
-    pairs = pairs.select(F.col(cols[0]).alias("s"), F.col(cols[1]).alias("d")).filter(
-        F.col("s").isNotNull() & F.col("d").isNotNull()
-    )
+    s, d = map(sql_identifier, pairs.columns[:2])
+    pairs = pairs.selectExpr(f"{s} AS s", f"{d} AS d").where("s IS NOT NULL AND d IS NOT NULL")
     out = single_task.run(
         pairs, _raw_pairs_kernel, "triangles long", single_task_budget_bytes,
         _SINGLE_TASK_ROW_BYTES,
     ).out
     if out is not None:
         return out
-    return triangle_count(
-        pairs.select(F.col("s").alias("src"), F.col("d").alias("dst")),
-        single_task_budget_bytes=single_task_budget_bytes,
-    )
+    return triangle_count(pairs, single_task_budget_bytes=single_task_budget_bytes)
 
 
 def oriented_edges(edges: DataFrame, already_canonical: bool = False) -> DataFrame:

@@ -18,25 +18,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-EDGE_COLS = ("src", "dst", "w")
+
+def sql_identifier(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, inner backticks
+    doubled, so dots, spaces and backticks in a column name stay part of it."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _normalized(edges: DataFrame, weighted: bool) -> DataFrame:
+    # one selectExpr and one where: a handful of JVM calls, where every
+    # Column-API call (F.col, cast, alias, &) is a round trip of its own
+    c = [sql_identifier(n) for n in edges.columns]
+    exprs = [f"CAST({c[0]} AS STRING) AS src", f"CAST({c[1]} AS STRING) AS dst"]
+    if weighted:
+        exprs.append(f"CAST({c[2]} AS DOUBLE) AS w" if len(c) > 2 else "1.0D AS w")
+    return edges.selectExpr(*exprs).where("src IS NOT NULL AND dst IS NOT NULL")
 
 
 def normalize_edges(edges: DataFrame) -> DataFrame:
     """Coerce an edge DataFrame to the canonical (src, dst, w) schema.
 
-    Ids become strings (reference keys are always String, SURVEY §1.2);
-    a missing weight column defaults to 1.0. An edge with a null endpoint
-    is dropped: it names no vertex, and dropping it here is what makes
-    every strategy rung agree on it.
+    The first two columns are the endpoints and the third, if any, the
+    weight, whatever their names. Ids become strings (reference keys are
+    always String, SURVEY §1.2); a missing weight column defaults to 1.0.
+    An edge with a null endpoint is dropped: it names no vertex, and
+    dropping it here is what makes every strategy rung agree on it.
     """
-    cols = edges.columns
-    src, dst = cols[0], cols[1]
-    w = F.col(cols[2]).cast("double") if len(cols) > 2 else F.lit(1.0)
-    return edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-        w.alias("w"),
-    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    return _normalized(edges, True)
+
+
+def normalize_endpoints(edges: DataFrame) -> DataFrame:
+    """``normalize_edges`` without the weight: (src, dst) only, the rows
+    the single-task rungs stream (none of their kernels reads ``w``)."""
+    return _normalized(edges, False)
 
 
 def undirected(edges: DataFrame) -> DataFrame:
@@ -46,19 +60,13 @@ def undirected(edges: DataFrame) -> DataFrame:
     algorithm in the engine runs over this expanded set, so a single
     ``groupBy('src')`` is the undirected degree.
     """
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w")
-    )
+    rev = edges.selectExpr("dst AS src", "src AS dst", "w")
     return edges.select("src", "dst", "w").unionByName(rev)
 
 
 def vertices(edges: DataFrame) -> DataFrame:
     """Distinct endpoint ids, one column ``id``."""
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    return edges.selectExpr("src AS id").unionByName(edges.selectExpr("dst AS id")).distinct()
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -70,9 +78,7 @@ def degrees(edges: DataFrame) -> DataFrame:
     fan-in at #partitions, so this is safe at any skew.
     """
     und = undirected(edges)
-    return und.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("degree")
-    )
+    return und.groupBy(F.expr("src AS id")).agg(F.expr("CAST(count(*) AS BIGINT) AS degree"))
 
 
 def skewed_vertices(degree_df: DataFrame, threshold: int) -> DataFrame:
@@ -86,11 +92,8 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
     *simple* edge set (GSATriangleCount.java:33-44 uses numeric order;
     we use lexicographic, consistent across engine and oracle)."""
     return (
-        edges.select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
+        edges.selectExpr("least(src, dst) AS src", "greatest(src, dst) AS dst")
+        .where("src != dst")
         .distinct()
     )
 

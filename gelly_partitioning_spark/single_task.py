@@ -23,6 +23,15 @@ kernel's report come back through a last-value accumulator: no job. A
 jobless Catalyst-stats pre-check declines obviously oversized inputs
 before any of this.
 
+Where a call's time goes (lineitem-default pagerank, 13k rows, 4 vCPUs,
+median of 9 warm calls, 207 ms): ~40 ms building the plan on the driver
+(45 JVM round trips; the time is mostly the JVM analysing each Dataset
+and the stats pre-check), until ~115 ms for Spark to schedule the task
+and start it on a worker, ~40 ms streaming the rows (two Arrow batches,
+with a socket wait between them that one batch or a Unix-domain socket
+avoids), 5 ms in the kernel and ~25 ms storing the result. The collect
+adds ~40 ms.
+
 Every rung returns the same answer; this one only changes where the
 work runs.
 """
@@ -30,6 +39,7 @@ work runs.
 from __future__ import annotations
 
 import time
+from functools import cache
 from typing import Callable, NamedTuple
 
 from pyspark.accumulators import AccumulatorParam
@@ -75,7 +85,7 @@ def admits(rows: int, budget_bytes: int, row_bytes: int, extra_bytes: int = 0) -
     return bool(budget_bytes) and 0 < rows and rows * row_bytes + extra_bytes <= budget_bytes
 
 
-def _task(batches, cols, kernel, budget_bytes, row_bytes, byte_cost, schema, report):
+def _task(batches, kernel, budget_bytes, row_bytes, byte_cost, schema, report):
     """The rung's task body over an iterator of Arrow record batches:
     yields the kernel's output batch on admit, nothing on decline, and
     passes (rows, admitted, kernel report) to ``report`` either way."""
@@ -96,11 +106,20 @@ def _task(batches, cols, kernel, budget_bytes, row_bytes, byte_cost, schema, rep
     if kept is None or not admits(rows, budget_bytes, row_bytes, extra):
         report((rows, False, None))
         return
-    columns = {c: pa.chunked_array([b.column(i) for b in kept]) for i, c in enumerate(cols)}
+    names = kept[0].schema.names  # the input's columns: no driver-side lookup
+    columns = {c: pa.chunked_array([b.column(i) for b in kept]) for i, c in enumerate(names)}
     del kept, b  # the kernel may pop its columns to free them early
     out, info = kernel(columns, budget_bytes - rows * row_bytes - extra)
     report((rows, True, info))
     yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+
+@cache
+def _schemas(ddl: str):
+    """(StructType, Arrow schema) of a DDL string, parsed once: a DDL
+    string handed to ``mapInArrow`` is parsed by the JVM on every call."""
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
 
 
 def run(
@@ -126,15 +145,15 @@ def run(
     if hint is not None and hint > 8 * budget_bytes:
         return Outcome(0, None)
     acc = df.sparkSession.sparkContext.accumulator(None, _LastValue())
-    cols, arrow = df.columns, to_arrow_schema(StructType.fromDDL(schema))
+    struct, arrow = _schemas(schema)
 
     def task(batches):
-        return _task(batches, cols, kernel, budget_bytes, row_bytes, byte_cost, arrow, acc.add)
+        return _task(batches, kernel, budget_bytes, row_bytes, byte_cost, arrow, acc.add)
 
     out = (
         df.coalesce(1)
         .limit(budget_bytes // row_bytes + 1)
-        .mapInArrow(task, schema)
+        .mapInArrow(task, struct)
         .localCheckpoint(eager=True)
     )
     rows, admitted, report = acc.value
@@ -169,8 +188,9 @@ def run_loop(
     row_bytes: int,
     runner: SuperstepRunner | None = None,
 ) -> DataFrame | None:
-    """Run an iterative vertex kernel over the (src, dst) rows of
-    ``edges`` in one task (``run``); None when the rung declines.
+    """Run an iterative vertex kernel over the rows of ``edges``, a
+    (src, dst) frame (``graph.normalize_endpoints``), in one task
+    (``run``); None when the rung declines.
 
     In the task both columns' id strings are encoded together in sorted
     order: the dictionary IS the vertex set and the codes are the rows'
@@ -192,7 +212,7 @@ def run_loop(
         return out, (done, conv, len(ids))
 
     t0 = time.time()
-    o = run(edges.select("src", "dst"), indexed, schema, budget_bytes, row_bytes)
+    o = run(edges, indexed, schema, budget_bytes, row_bytes)
     if o.out is None:
         return None
     done, conv, n = o.report

@@ -76,15 +76,14 @@ def save_prepared_graph(
     alpha: int = 2,
     level: int = 8,
     buckets: int = 32,
-    use_long_ids: bool = True,
 ) -> PreparedGraph:
     """Split ``edges`` once; persist the bucketed layout and its vertex
     table, replacing every table a layout of the same name had.
 
     The split fan-out and threshold are baked into the layout — a restart
     reuses both (changing them means re-preparing, exactly like
-    re-bucketing a table). ``use_long_ids`` is accepted and ignored: a
-    layout is always keyed on the vertex table's long ids.
+    re-bucketing a table). A layout is keyed on the vertex table's long
+    ids.
     """
     spark = edges.sparkSession
     edges = normalize_edges(edges)

@@ -7,6 +7,7 @@ All fixture graphs are copied from the reference's golden-data classes
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -15,6 +16,46 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from gelly_partitioning_spark import from_pairs, get_spark  # noqa: E402
+
+
+@contextmanager
+def jvm_round_trips(spark):
+    """The py4j commands the driver sends the JVM while the block runs, one
+    per round trip. py4j's garbage-collection detaches (prefix ``m\\nd\\n``),
+    sent whenever Python happens to free a JVM handle, are left out."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent, send = [], client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = send
+
+
+def cached(df):
+    """Cached and materialized, like the engine's real inputs: a frame
+    built from a Python list carries no size statistics until then, and
+    the single-task rung's stats pre-check skips it."""
+    df = df.cache()
+    df.count()
+    return df
+
+
+def group_jobs(spark, group, fn):
+    """(fn(), the ids of the Spark jobs it ran), read by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -296,55 +296,43 @@ SPLIT = {"threshold": 2, "alpha": 2, "level": 4}
 
 
 @pytest.fixture(scope="module")
-def layouts(spark, hub_graph, tmp_path_factory):
-    """hub_graph persisted with ``use_long_ids`` on and off: the flag is
-    ignored, both are the one long-id layout."""
-    return {
-        long_ids: save_prepared_graph(
-            hub_graph,
-            name=f"dist_{'long' if long_ids else 'str'}",
-            base_path=str(tmp_path_factory.mktemp("layout")),
-            buckets=4,
-            use_long_ids=long_ids,
-            **SPLIT,
-        )
-        for long_ids in (True, False)
-    }
+def layout(spark, hub_graph, tmp_path_factory):
+    """hub_graph persisted as a prepared layout."""
+    return save_prepared_graph(
+        hub_graph,
+        name="dist_long",
+        base_path=str(tmp_path_factory.mktemp("layout")),
+        buckets=4,
+        **SPLIT,
+    )
 
 
 SOURCES = {
-    "pagerank-long": (True, lambda g, **kw: {
+    "pagerank-long": lambda g, **kw: {
         r["id"]: r["rank"] for r in pagerank(
             g, fixed_iterations=10, single_task_budget_bytes=0, **SPLIT, **kw
         ).collect()
-    }),
-    # pagerank accepts use_long_ids=False and ignores it
-    "pagerank-string": (False, lambda g, **kw: {
-        r["id"]: r["rank"] for r in pagerank(
-            g, fixed_iterations=10, single_task_budget_bytes=0, use_long_ids=False,
-            **SPLIT, **kw,
-        ).collect()
-    }),
-    "cc": (False, lambda g, **kw: {
+    },
+    "cc": lambda g, **kw: {
         r["id"]: r["component"] for r in connected_components(
             g, single_task_budget_bytes=0, **SPLIT, **kw
         ).collect()
-    }),
-    "lp": (False, lambda g, **kw: {
+    },
+    "lp": lambda g, **kw: {
         r["id"]: r["label"]
         for r in label_propagation(g, max_iterations=8, **SPLIT, **kw).collect()
-    }),
+    },
 }
 
 
 @pytest.mark.parametrize("salted", [False, True])
 @pytest.mark.parametrize("algo", list(SOURCES))
-def test_prepared_equals_fresh_on_each_rung(spark, hub_graph, layouts, calls, algo, salted):
-    long_ids, run = SOURCES[algo]
+def test_prepared_equals_fresh_on_each_rung(spark, hub_graph, layout, calls, algo, salted):
+    run = SOURCES[algo]
     kw = {"broadcast_threshold_vertices": 0} if salted else {}
     broadcast, tables = calls(dist, "broadcast_table"), calls(dist, "salted_tables")
     want = run(hub_graph, **kw)
-    got = run(None, prepared=layouts[long_ids], **kw)
+    got = run(None, prepared=layout, **kw)
     rung = (0, 2) if salted else (2, 0)
     assert (len(broadcast), len(tables)) == rung
     if algo.startswith("pagerank"):
@@ -356,16 +344,16 @@ def test_prepared_equals_fresh_on_each_rung(spark, hub_graph, layouts, calls, al
 @pytest.mark.parametrize("prepared", [False, True])
 @pytest.mark.parametrize("salted", [False, True])
 @pytest.mark.parametrize("algo", ["pagerank-long", "cc", "lp"])
-def test_call_leaves_only_vertex_table_and_state(spark, hub_graph, layouts, algo, salted, prepared):
+def test_call_leaves_only_vertex_table_and_state(spark, hub_graph, layout, algo, salted, prepared):
     # a run's static checkpoints are released once the loop is done; the
     # collected answer reads only the vertex table and the final state. A
     # prepared source's scans stay cached for the next call on the layout:
     # a first call caches them, and the measured call neither adds nor drops them
-    long_ids, run = SOURCES[algo]
+    run = SOURCES[algo]
     kw = {"broadcast_threshold_vertices": 0} if salted else {}
     source = hub_graph
     if prepared:
-        kw["prepared"], source = layouts[long_ids], None
+        kw["prepared"], source = layout, None
         run(None, **kw)
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persisted().keySet())
@@ -373,14 +361,12 @@ def test_call_leaves_only_vertex_table_and_state(spark, hub_graph, layouts, algo
     assert len(set(persisted().keySet()) - before) <= 2
     if prepared and salted:
         cols = ("src", "dst_tag", "w") if algo == "lp" else ("src", "dst_tag")
-        assert layouts[long_ids].edges.select(*cols).storageLevel != StorageLevel.NONE
+        assert layout.edges.select(*cols).storageLevel != StorageLevel.NONE
 
 
-@pytest.mark.parametrize("long_ids", [True, False])
-def test_layout_vertex_table_counts_routing_rows(spark, layouts, long_ids):
-    pg = layouts[long_ids]
-    vt = dist.vertex_table(pg)
-    assert vt.e_rows == pg.edges.count()
+def test_layout_vertex_table_counts_routing_rows(spark, layout):
+    vt = dist.vertex_table(layout)
+    assert vt.e_rows == layout.edges.count()
     assert vt.n == 21
 
 
@@ -389,25 +375,18 @@ def _same_rows(a, b):
     assert b.exceptAll(a).count() == 0
 
 
-@pytest.mark.parametrize("long_ids", [True, False])
-def test_saved_layout_rows_unchanged(spark, hub_graph, layouts, long_ids):
+def test_saved_layout_rows_unchanged(spark, hub_graph, layout):
     """The stored tables equal the layout rebuilt from its stored vertex
     table by the definition: vids the ranks of the tags, each edge routed
     both ways to sub-vertex (vid << b) | pmod(xxhash64(neighbour vid), n),
     n = clamp(ceil(degree / threshold), 1, alpha**level), and one
-    sub-vertex row per salt with its vertex's degree. ``use_long_ids=False``
-    is accepted and writes those same rows."""
-    pg = layouts[long_ids]
-    if not long_ids:
-        for t in ("vertices", "edges", "sub_deg"):
-            _same_rows(getattr(pg, t), getattr(layouts[True], t))
-        return
-    tags = [r["tag"] for r in pg.vertices.orderBy("vid").collect()]
+    sub-vertex row per salt with its vertex's degree."""
+    tags = [r["tag"] for r in layout.vertices.orderBy("vid").collect()]
     assert tags == sorted(tags)
-    assert [r["vid"] for r in pg.vertices.orderBy("vid").collect()] == list(range(len(tags)))
+    assert [r["vid"] for r in layout.vertices.orderBy("vid").collect()] == list(range(len(tags)))
     b, t = salt_bits(SPLIT["alpha"], SPLIT["level"]), SPLIT["threshold"]
     cap = SPLIT["alpha"] ** SPLIT["level"]
-    v = pg.vertices.select(
+    v = layout.vertices.select(
         "tag", "vid", "degree",
         F.least(F.lit(cap), F.greatest(F.lit(1), F.ceil(F.col("degree") / t))).alias("n"),
     )
@@ -426,7 +405,7 @@ def test_saved_layout_rows_unchanged(spark, hub_graph, layouts, long_ids):
         F.explode(F.sequence(F.lit(0).cast("long"), F.col("n") - 1)).alias("k"),
         F.col("vid").alias("tag"), F.col("degree").cast("double").alias("deg"),
     ).select(F.shiftleft("tag", b).bitwiseOR(F.col("k")).alias("src"), "tag", "deg")
-    for stored, built in [(pg.edges, e), (pg.sub_deg, sub_deg)]:
+    for stored, built in [(layout.edges, e), (layout.sub_deg, sub_deg)]:
         _same_rows(stored, built.select(*stored.columns))
 
 

@@ -21,18 +21,11 @@ from gelly_partitioning_spark import (
     triangle_count_long_pairs,
 )
 
+from .conftest import cached, group_jobs
+
 st = importlib.import_module("gelly_partitioning_spark.single_task")
 # the package re-exports the functions under the module names
 tcm = importlib.import_module("gelly_partitioning_spark.algorithms.triangle_count")
-
-
-def _cached(df):
-    """Cached and materialized, like the engine's real inputs: a frame
-    built from a Python list carries no size statistics until then, and
-    the gate's stats pre-check skips it."""
-    df = df.cache()
-    df.count()
-    return df
 
 
 def _long_pairs(g):
@@ -67,28 +60,28 @@ GRAPHS = {
     "cc_graph": lambda spark, request: request.getfixturevalue("cc_graph"),
     "tri_graph": lambda spark, request: request.getfixturevalue("tri_graph"),
     "jaccard_graph": lambda spark, request: request.getfixturevalue("jaccard_graph"),
-    "dups_self_loops": lambda spark, request: _cached(from_pairs(
+    "dups_self_loops": lambda spark, request: cached(from_pairs(
         spark, [(1, 2), (2, 1), (1, 1), (2, 3), (3, 1), (3, 3), (2, 3), (3, 4), (4, 4)]
     )),
     # long ids, negative ones included; two triangles
-    "numeric_ids": lambda spark, request: _cached(spark.createDataFrame(
+    "numeric_ids": lambda spark, request: cached(spark.createDataFrame(
         [(-5, -2), (-2, -7), (-7, -5), (-5, 8), (8, -2), (100, 20)], "src long, dst long"
     )),
-    "null_endpoint": lambda spark, request: _cached(spark.createDataFrame(
+    "null_endpoint": lambda spark, request: cached(spark.createDataFrame(
         [("1", "2"), ("1", "3"), ("1", None), ("2", "3"), (None, "4"), ("3", "4")],
         "src string, dst string",
     )),
     # string order ("10" < "100" < "2" < "9") is not numeric order
-    "string_order_ids": lambda spark, request: _cached(from_pairs(
+    "string_order_ids": lambda spark, request: cached(from_pairs(
         spark, [(10, 9), (9, 100), (100, 10), (2, 10), (2, 9), (9, 7)]
     )),
-    "unicode_ids": lambda spark, request: _cached(from_pairs(
+    "unicode_ids": lambda spark, request: cached(from_pairs(
         spark, [("é", "a"), ("a", "ü"), ("ü", "é"), ("日本", "a"), ("日本", "é"), ("z", "日本")]
     )),
-    "separator_id": lambda spark, request: _cached(from_pairs(
+    "separator_id": lambda spark, request: cached(from_pairs(
         spark, [("x#1", "y"), ("y", "z"), ("z", "x#1"), ("z", "w"), ("w", "y"), ("x#1", "w")]
     )),
-    "dup_reversed": lambda spark, request: _cached(from_pairs(
+    "dup_reversed": lambda spark, request: cached(from_pairs(
         spark, [("a", "b"), ("b", "a"), ("a", "b"), ("b", "c"), ("c", "b"), ("c", "a"),
                 ("a", "c"), ("c", "d"), ("d", "c"), ("b", "d")]
     )),
@@ -141,7 +134,7 @@ def test_tier_matches_disabled_tier(spark, request, tier_runs, algo, graph):
 def test_null_endpoint_dropped_on_every_rung(spark, tier_runs):
     # an edge with a null endpoint names no vertex: every rung answers as
     # if it were absent, so the ranks still sum to 1
-    nul = _cached(spark.createDataFrame(
+    nul = cached(spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("a", None), ("b", "c"), ("c", "d")],
         "src string, dst string",
     ))
@@ -157,7 +150,7 @@ def test_cc_single_task_numeric_ids(spark, tier_runs, numeric):
     # numeric order and lexicographic order disagree on these ids
     # (min(7,10,3) = 3 numerically; min("10","3","7") = "10" as strings),
     # so this pins the tier's order-rank construction for both flavors
-    g = _cached(from_pairs(spark, [(10, 7), (7, 3), (100, 20)]))
+    g = cached(from_pairs(spark, [(10, 7), (7, 3), (100, 20)]))
 
     def run(**kw):
         return {
@@ -191,17 +184,6 @@ def test_gate_is_bounded(spark, monkeypatch, tier_runs, gate_rows, algo):
     _assert_same(algo, got, ALGOS[algo](g, single_task_budget_bytes=0))
 
 
-def _group_jobs(spark, group, fn):
-    """(fn(), the ids of the Spark jobs it ran), read by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _row_count():
     """A kernel that returns its row count (nested, so Spark pickles it
     by value and the worker need not import this module)."""
@@ -215,12 +197,12 @@ def _row_count():
 def test_oversized_hint_runs_no_job(spark, monkeypatch):
     # a stats hint far above the budget declines the rung before any
     # Spark job: no task, no materialization
-    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1)]))
+    g = cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1)]))
     budget = 1 << 20
 
     def gate_jobs(hint, group):
         monkeypatch.setattr(st, "plan_size_hint_bytes", lambda df: hint)
-        return _group_jobs(spark, group, lambda: st.run(g, _row_count(), "n long", budget, 16))
+        return group_jobs(spark, group, lambda: st.run(g, _row_count(), "n long", budget, 16))
 
     outcome, jobs = gate_jobs(8 * budget + 1, "gate-oversized-hint")
     assert outcome.out is None and outcome.rows == 0 and jobs == []
@@ -285,12 +267,12 @@ RUNG_JOBS = {
 def test_rung_call_jobs_and_persisted_rdds(spark, tier_runs, algo):
     # machine-independent: one action runs the task and materializes the
     # result, and the call leaves no persisted RDD but that result
-    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
+    g = cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
     fn, most = RUNG_JOBS[algo]
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persisted().keySet())
-    out, jobs = _group_jobs(spark, f"rung-jobs-{algo}", lambda: fn(g))
-    rows, collect_jobs = _group_jobs(spark, f"rung-collect-{algo}", out.collect)
+    out, jobs = group_jobs(spark, f"rung-jobs-{algo}", lambda: fn(g))
+    rows, collect_jobs = group_jobs(spark, f"rung-collect-{algo}", out.collect)
     assert len(tier_runs) == 1 and rows
     assert len(jobs) + len(collect_jobs) <= most
     assert len(set(persisted().keySet()) - before) == 1  # the result
@@ -311,7 +293,7 @@ def test_kernel_error_surfaces(spark, hub_graph, monkeypatch):
 
     monkeypatch.setattr(prmod, "_pagerank_kernel", factory)
     with pytest.raises(PythonException, match="unrelated failure"):
-        pagerank(_cached(hub_graph), fixed_iterations=5, threshold=2).collect()
+        pagerank(cached(hub_graph), fixed_iterations=5, threshold=2).collect()
 
 
 def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
@@ -320,7 +302,7 @@ def test_long_pairs_fallback_forwards_budget(spark, tier_runs, gate_rows):
     # tier runs on the caller's budget, once, and no function recurses
     from .conftest import TRI_EDGES, TRI_GOLDEN
 
-    raw = _cached(spark.createDataFrame(TRI_EDGES * 4, "s long, d long"))
+    raw = cached(spark.createDataFrame(TRI_EDGES * 4, "s long, d long"))
     budget = 2 * len(TRI_EDGES) * tcm._SINGLE_TASK_ROW_BYTES  # 18 pair rows
     got = triangle_count_long_pairs(raw, single_task_budget_bytes=budget)
     assert got.first()["triangles"] == TRI_GOLDEN
@@ -353,8 +335,8 @@ def test_triangle_core_close_methods_agree():
 def test_jaccard_rung_runs_few_jobs(spark, tier_runs):
     # a machine-independent bound on the rung's cost: the fused task and
     # the collect, with room to spare (the distributed path runs ~23)
-    g = _cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
-    rows, jobs = _group_jobs(spark, "jaccard-single-task", lambda: jaccard_counts(g).collect())
+    g = cached(from_pairs(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (1, 1)]))
+    rows, jobs = group_jobs(spark, "jaccard-single-task", lambda: jaccard_counts(g).collect())
     assert len(tier_runs) == 1 and len(rows) == 5
     assert len(jobs) <= 4
 
@@ -365,8 +347,8 @@ def test_jaccard_gate_charges_id_bytes(spark, tier_runs):
     # task would hold several times over
     jm = importlib.import_module("gelly_partitioning_spark.algorithms.jaccard")
     pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1)]
-    short = _cached(from_pairs(spark, pairs))
-    long = _cached(from_pairs(spark, [(f"{a:0>200}", f"{b:0>200}") for a, b in pairs]))
+    short = cached(from_pairs(spark, pairs))
+    long = cached(from_pairs(spark, [(f"{a:0>200}", f"{b:0>200}") for a, b in pairs]))
     budget = len(pairs) * (jm._SINGLE_TASK_ROW_BYTES + 2 * jm._ID_BYTE_COST)
     want = ALGOS["jaccard_counts"](short, single_task_budget_bytes=0)
     assert ALGOS["jaccard_counts"](short, single_task_budget_bytes=budget) == want
